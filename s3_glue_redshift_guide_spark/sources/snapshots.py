@@ -1670,15 +1670,22 @@ class SnapshotTable:
     #: the churn belongs in OPTIMIZE ... REWRITE PHYSICAL
     DV_ANTI_JOIN_MAX_BYTES = 256 << 20
 
+    #: every sidecar writer emits exactly these two columns (the plain
+    #: path string and ``_metadata.row_index``); reading with the
+    #: explicit schema skips Spark's footer schema-inference job
+    DV_SCHEMA = "__dv_file string, __dv_pos bigint"
+
+    def _read_sidecars(self, *dirs: str) -> DataFrame:
+        return self.spark.read.schema(self.DV_SCHEMA).parquet(*dirs)
+
     def _dv_rows(self, dv: dict[str, list[str]]) -> DataFrame:
         """The (file, position) pairs of every sidecar in ``dv``, deduped
         (re-deleting an already-deleted row must stay idempotent).
         Broadcast-hinted only while the sidecars are point-delete sized
         (one cheap metadata stat of the sidecar dirs decides)."""
         dirs = sorted({d for lst in dv.values() for d in lst})
-        df = (
-            self.spark.read.parquet(*dirs)
-            .dropDuplicates(["__dv_file", "__dv_pos"])
+        df = self._read_sidecars(*dirs).dropDuplicates(
+            ["__dv_file", "__dv_pos"]
         )
         size = 0
         for d in dirs:
@@ -2453,7 +2460,7 @@ class SnapshotTable:
         matched.write.mode("errorifexists").parquet(dvdir)
         affected = [
             r["__dv_file"]
-            for r in self.spark.read.parquet(dvdir)
+            for r in self._read_sidecars(dvdir)
             .select("__dv_file")
             .distinct()
             .collect()
@@ -2521,7 +2528,7 @@ class SnapshotTable:
         ).parquet(dvdir)
         affected = [
             r["__dv_file"]
-            for r in self.spark.read.parquet(dvdir)
+            for r in self._read_sidecars(dvdir)
             .select("__dv_file")
             .distinct()
             .collect()
@@ -2731,15 +2738,28 @@ class SnapshotTable:
         All three branches publish in a SINGLE atomic manifest (sidecar
         + post-image/insert files), so a reader sees the whole merge or
         none of it. Cost is O(matched rows + inserts) — copy-on-write
-        MERGE rewrites every FILE containing a match. When a matched
-        clause is present, a source with duplicate join keys against
-        one target row is rejected (the Delta multiple-matches error):
-        the merge would be ambiguous. Insert-only merges never raise —
-        matched rows are ignored whatever their multiplicity, exactly
-        Delta's semantics (r12; the pre-r12 insert-only guard was a
-        non-Delta extra scan).
-        Post-images/tombstones derive from the WRITTEN sidecar, the same
-        recompute-divergence pinning as ``update_where``."""
+        MERGE rewrites every FILE containing a match.
+
+        Execution is ONE pass over the candidate target files and ONE
+        materialization: the target semi-joins the source keys (a
+        broadcast when the source is small, so the target streams once
+        and nothing shuffles), the source LEFT OUTER JOINs that
+        O(matched) frame, and every row's clause outcomes (``__is_del``
+        / ``__is_upd`` / ``__is_ins``) are pinned as columns before a
+        single ``localCheckpoint``. Tombstones, post-images, inserts,
+        the ambiguity guard and the row counts that decide which
+        branches write all derive from that checkpoint, so a
+        nondeterministic clause condition is evaluated exactly once and
+        identity ids are assigned once. Only WHEN NOT MATCHED BY SOURCE
+        reads the target a second time (its anti-join must see every
+        target row).
+
+        When a matched clause is present, a source with duplicate join
+        keys against one target row is rejected (the Delta
+        multiple-matches error): the merge would be ambiguous.
+        Insert-only merges never raise — matched rows are ignored
+        whatever their multiplicity, and not-matched duplicates all
+        insert, exactly Delta's semantics."""
         import uuid as _uuid
 
         cur = self.current_version()
@@ -2767,44 +2787,48 @@ class SnapshotTable:
         # strict schema enforcement: the insert branch is merge_mor's
         # one schema-extending path — reject source columns the table
         # does not have BEFORE any work (no-op under additive mode)
+        ident_all = m.get("identity") or {}
         if ins_on:
             self._enforce_schema(m, source)
+            for c in ident_all:
+                if f"__src_{c}" in src.columns:
+                    raise ValueError(
+                        f"{c!r} is GENERATED ALWAYS AS IDENTITY — the "
+                        "engine assigns it; omit it from the source"
+                    )
+
+        def with_identity(ins: DataFrame) -> DataFrame:
+            # MERGE inserts draw engine-assigned ids from the head
+            # watermark, the same map-side expression as commit_append
+            # (a racing watermark advance conflicts this merge's single
+            # exclusive publish — the retry re-reads); _publish then
+            # advances the watermark from the written footers
+            for c, meta in ident_all.items():
+                step = int(meta["step"])
+                ins = ins.withColumn(
+                    c,
+                    (
+                        F.lit(int(meta["high"]) + step)
+                        + F.lit(step) * F.monotonically_increasing_id()
+                    ).cast("long"),
+                )
+            return ins
+
         if not m["files"]:
             if ins_on:
-                # identity columns apply on the empty-table fast path
-                # exactly as on the non-empty insert branch: the source
-                # must omit them (GENERATED ALWAYS) and the engine
-                # assigns from the registered watermark — _publish then
-                # advances it from the written footers
-                ident_all = m.get("identity") or {}
-                for c in ident_all:
-                    if f"__src_{c}" in src.columns:
-                        raise ValueError(
-                            f"{c!r} is GENERATED ALWAYS AS IDENTITY — "
-                            "the engine assigns it; omit it from the "
-                            "source"
-                        )
                 ins_src = src
                 if ins_cond is not None:
                     ins_src = ins_src.filter(
                         ins_cond.eqNullSafe(F.lit(True))
                     )
-                ins = ins_src.select(
-                    *[
-                        F.col(f"__src_{c}").alias(c)
-                        for c in source.columns
-                    ]
-                )
-                for c, meta in ident_all.items():
-                    step = int(meta["step"])
-                    ins = ins.withColumn(
-                        c,
-                        (
-                            F.lit(int(meta["high"]) + step)
-                            + F.lit(step)
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
+                ins = with_identity(
+                    ins_src.select(
+                        *[
+                            F.col(f"__src_{c}").alias(c)
+                            for c in source.columns
+                        ]
                     )
+                )
                 new = self._write_files(ins)
                 # empty-table insert branch, rebase-aware: a racing
                 # first append must not be dropped by publishing the
@@ -2826,13 +2850,20 @@ class SnapshotTable:
                 )
             return cur
         track = bool(m.get("row_tracking"))
+        # False = branch disabled, like None (the flag/condition split
+        # mirrors insert_not_matched's ins_on handling — truthiness on a
+        # Column raises, so identity checks gate)
+        nmbs_on = (
+            when_not_matched_by_source_delete is not None
+            and when_not_matched_by_source_delete is not False
+        )
         import time as _mtime
 
         MERGE_METRICS.clear()
         # Delta's MERGE file pruning: a file whose banked key range
         # cannot intersect the SOURCE's key hull provably holds no
-        # matched row, no ambiguous key, and no key the insert
-        # anti-join could collide with — it skips the staged scan
+        # matched row, no ambiguous key, and no key an insert could
+        # collide with — it skips the staged scan
         # entirely and rides the manifest untouched. Disabled when NOT
         # MATCHED BY SOURCE is on (that branch must see every target
         # row); absent stats keep their files (zone_prune is
@@ -2847,10 +2878,7 @@ class SnapshotTable:
         stats_cover_keys = any(
             k in st for st in m["stats"].values() for k in aliased_keys
         )
-        if stats_cover_keys and (
-            when_not_matched_by_source_delete is None
-            or when_not_matched_by_source_delete is False
-        ):
+        if stats_cover_keys and not nmbs_on:
             # computing the source hull costs one extra evaluation of
             # the source — only worth it when at least one file banks
             # stats for a merge key (otherwise nothing can prune)
@@ -2907,18 +2935,12 @@ class SnapshotTable:
             else ()
         )
         mapped = self._apply_schema_map(tagged, m["schema"], keep=keep)
-        for c in m.get("identity") or {}:
+        for c in ident_all:
             if when_matched_update and c in when_matched_update:
                 raise ValueError(
                     f"{c!r} is GENERATED ALWAYS AS IDENTITY — an "
                     "UPDATE clause cannot assign it"
                 )
-        joined = mapped.join(src, key_cond, "inner")
-        del_cond = (
-            when_matched_delete.eqNullSafe(F.lit(True))
-            if when_matched_delete is not None
-            else F.lit(False)
-        )
         if (
             when_matched_update_condition is not None
             and when_matched_update is None
@@ -2927,121 +2949,153 @@ class SnapshotTable:
                 "when_matched_update_condition requires "
                 "when_matched_update assignments"
             )
-        upd_cond = (
-            F.lit(False)
-            if when_matched_update is None
-            else (
-                when_matched_update_condition.eqNullSafe(F.lit(True))
-                if when_matched_update_condition is not None
-                else F.lit(True)
-            )
-        )
         has_matched_clauses = (
             when_matched_delete is not None
             or when_matched_update is not None
         )
         _ph0 = _mtime.perf_counter()
-        if has_matched_clauses:
-            # ONE full-table pass (round-11: it also serves the ambiguity
-            # guard below, which previously paid its own semi-join scan of
-            # the masked table) detects and MATERIALIZES every matched row
-            # with its clause outcomes pinned as boolean columns
-            # (localCheckpoint, O(matched rows) storage): the ambiguity
-            # count, tombstones AND post-images all derive from this one
-            # frame, so the table is never re-scanned for them, and
-            # nondeterministic clause conditions are evaluated exactly
-            # once (the flags cross the barrier as data).
-            matched = joined.withColumns(
-                {"__is_del": del_cond, "__is_upd": upd_cond}
-            ).localCheckpoint(eager=True)
-            touched = matched.filter(
-                F.col("__is_del") | F.col("__is_upd")
-            ).drop("__is_upd")
-        else:
-            # insert-only merge: nothing downstream needs the matched
-            # rows, so no materialization — the ambiguity guard keeps
-            # the pre-r11 standalone semi-join shape (same cost class
-            # as before; this path's behavior is unchanged)
-            matched = None
-            touched = joined.filter(F.lit(False)).withColumn(
-                "__is_del", F.lit(False)
+        # THE single frame: the candidate target semi-joins the source
+        # keys (target streams once against a broadcast of the keys when
+        # the source is small — O(matched) rows survive), then the
+        # source LEFT OUTER JOINs that frame. A row with __dv_file set is
+        # a matched (target, source) pair; a NULL __dv_file is an insert
+        # candidate (NULL source keys never `=`-match, so they insert —
+        # Delta's semantics). The clause outcomes are pinned as columns
+        # and the frame MATERIALIZES once (localCheckpoint, O(matched +
+        # inserts) storage): tombstones, post-images, inserts and the
+        # driver aggregate below all read the checkpoint, so the target
+        # is never re-scanned for them and a nondeterministic clause
+        # condition is evaluated exactly once (the flags cross the
+        # barrier as data). Insert-only merges keep only the unmatched
+        # rows; a merge with neither matched nor insert clauses (NOT
+        # MATCHED BY SOURCE alone) needs no frame at all.
+        ckpt = None
+        touched_files: list[str] = []
+        n_post = n_ins = 0
+        if has_matched_clauses or ins_on:
+            matched = F.col("__dv_file").isNotNull()
+            if ins_on:
+                hits = mapped.join(
+                    src.select(*[f"__src_{k}" for k in on]),
+                    key_cond,
+                    "left_semi",
+                )
+                frame = src.join(hits, key_cond, "left")
+                if not has_matched_clauses:
+                    frame = frame.filter(~matched)
+            else:
+                # no insert branch: only matched pairs matter, and the
+                # plain inner join is already one target pass
+                frame = mapped.join(src, key_cond, "inner")
+            ins_flag = (
+                ins_cond.eqNullSafe(F.lit(True))
+                if ins_cond is not None
+                else F.lit(ins_on)
+            )
+            del_cond = (
+                when_matched_delete.eqNullSafe(F.lit(True))
+                if when_matched_delete is not None
+                else F.lit(False)
+            )
+            upd_cond = (
+                F.lit(False)
+                if when_matched_update is None
+                else (
+                    when_matched_update_condition.eqNullSafe(F.lit(True))
+                    if when_matched_update_condition is not None
+                    else F.lit(True)
+                )
+            )
+            ckpt = (
+                frame.withColumns(
+                    {
+                        "__is_del": F.when(matched, del_cond).otherwise(
+                            False
+                        ),
+                        "__is_upd": F.when(matched, upd_cond).otherwise(
+                            False
+                        ),
+                        "__is_ins": F.when(matched, False).otherwise(
+                            ins_flag
+                        ),
+                    }
+                )
+                .filter(matched | F.col("__is_ins"))
+                .localCheckpoint(eager=True)
             )
         MERGE_METRICS["detect_matched_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
         )
         _ph0 = _mtime.perf_counter()
-        # ambiguity guard (Delta's multiple-matches error): >1 source row
-        # MATCHING one target row. With matched clauses the count comes
-        # from the already-materialized matched frame — a target row is
-        # (__dv_file, __dv_pos) — so the guard costs a KB-scale aggregate
-        # instead of a second masked-table scan. Matching follows the
-        # merge join itself (`=`): NULL join keys never match, so they
-        # cannot be ambiguous — Delta's semantics (the pre-r11 standalone
-        # check used a null-safe probe and could raise for null-key rows
-        # the merge would never touch; the insert-only path retains it).
-        touched_files: list | None = None
-        if matched is not None:
-            # one job serves BOTH driver-side facts the merge needs from
-            # the checkpoint: the per-(file,pos) match multiplicity (the
-            # ambiguity guard) and the distinct files carrying a clause
-            # hit (the affected-file set the rewrite pass scans). Rows
-            # collected = distinct files among matched rows — metadata
-            # scale, bounded by the table's file count.
+        if ckpt is not None:
+            # ONE driver aggregate serves every fact the merge needs from
+            # the checkpoint: the per-(file, pos) match multiplicity (the
+            # ambiguity guard), the distinct files carrying a clause hit
+            # (the affected-file set), and the post-image and insert row
+            # counts (which branches write at all — no emptiness probes).
+            # Rows collected = distinct matched files + one NULL-file
+            # group for the insert candidates: metadata scale. Without
+            # matched clauses every row is an insert candidate, so the
+            # per-row level collapses onto the file level (one shuffle).
             stats = (
-                matched.groupBy("__dv_file", "__dv_pos")
+                ckpt.groupBy(
+                    "__dv_file",
+                    *(["__dv_pos"] if has_matched_clauses else []),
+                )
                 .agg(
                     F.count(F.lit(1)).alias("__c"),
                     F.max(
                         F.col("__is_del") | F.col("__is_upd")
                     ).alias("__t"),
+                    F.sum(
+                        (F.col("__is_upd") & ~F.col("__is_del")).cast(
+                            "long"
+                        )
+                    ).alias("__np"),
+                    F.sum(F.col("__is_ins").cast("long")).alias("__ni"),
                 )
                 .groupBy("__dv_file")
                 .agg(
                     F.max("__c").alias("__maxc"),
                     F.max("__t").alias("__any_t"),
+                    F.sum("__np").alias("__np"),
+                    F.sum("__ni").alias("__ni"),
                 )
                 .collect()
             )
-            ambiguous = any(r["__maxc"] > 1 for r in stats)
-            touched_files = [
-                r["__dv_file"] for r in stats if r["__any_t"]
-            ]
-        else:
-            # insert-only merge: CANNOT be ambiguous under Delta's
-            # semantics — "multiple matches" only matters when a matched
-            # clause would apply two source rows to one target row, and
-            # an insert-only merge ignores matched rows entirely
-            # (duplicate not-matched source rows simply both insert,
-            # exactly like Delta). Dropping the pre-r12 standalone
-            # null-safe probe removes a source aggregation, a masked-
-            # table semi-join scan and a limit(1).count() driver job
-            # from every insert-only merge (r12, ADVICE-r11; guide §5 —
-            # driver round-trips are jobs). It also aligns the two
-            # paths' null-key behavior: null-key source duplicates
-            # never raise on either path now (the merge join's `=`
-            # matching never touches them) — pinned by
-            # tests/test_round12_opt.py.
-            ambiguous = False
-        if ambiguous:
-            raise ValueError(
-                "merge_mor: multiple source rows match a single "
-                "target row on " + str(on) + " — deduplicate the "
-                "source first (the merge would be ambiguous)"
-            )
+            # ambiguity guard (Delta's multiple-matches error): >1 source
+            # row MATCHING one target row, a target row being (__dv_file,
+            # __dv_pos). Matching follows the merge join itself (`=`), so
+            # NULL join keys never match and cannot be ambiguous, and the
+            # NULL-file group (the insert candidates) is not a target
+            # row. An insert-only merge has no matched rows in the frame,
+            # so it never raises: duplicate not-matched source rows
+            # simply all insert, exactly like Delta.
+            if any(
+                r["__dv_file"] is not None and r["__maxc"] > 1
+                for r in stats
+            ):
+                raise ValueError(
+                    "merge_mor: multiple source rows match a single "
+                    "target row on " + str(on) + " — deduplicate the "
+                    "source first (the merge would be ambiguous)"
+                )
+            touched_files = [r["__dv_file"] for r in stats if r["__any_t"]]
+            n_post = sum(r["__np"] for r in stats)
+            n_ins = sum(r["__ni"] for r in stats)
         MERGE_METRICS["ambiguity_check_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
         )
         _ph0 = _mtime.perf_counter()
-        tomb = touched.select("__dv_file", "__dv_pos")
-        if (
-            when_not_matched_by_source_delete is not None
-            and when_not_matched_by_source_delete is not False
-        ):
+        tomb = None
+        if touched_files:
+            tomb = ckpt.filter(
+                F.col("__is_del") | F.col("__is_upd")
+            ).select("__dv_file", "__dv_pos")
+        if nmbs_on:
             # target rows absent from the source: one anti-join on the
-            # merge keys (the same shuffle family as the merge itself).
-            # False = branch disabled, like None (the flag/condition
-            # split mirrors insert_not_matched's ins_on handling —
-            # truthiness on a Column raises, so identity checks gate)
+            # merge keys — the one branch that reads the target again, as
+            # it must see every target row
             nmbs = mapped.join(src, key_cond, "left_anti")
             if when_not_matched_by_source_delete is not True:
                 nmbs = nmbs.filter(
@@ -3049,33 +3103,26 @@ class SnapshotTable:
                         F.lit(True)
                     )
                 )
-            tomb = tomb.unionAll(
-                nmbs.select("__dv_file", "__dv_pos")
-            )
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-        tomb.write.mode(
-            "errorifexists"
-        ).parquet(dvdir)
-        if (
-            when_not_matched_by_source_delete is not None
-            and when_not_matched_by_source_delete is not False
-        ):
-            # the NMBS anti-join is NOT materialized: the written
-            # sidecar is its single evaluation, so the affected-file
-            # set must come from reading it back
-            affected = [
-                r["__dv_file"]
-                for r in self.spark.read.parquet(dvdir)
-                .select("__dv_file")
-                .distinct()
-                .collect()
-            ]
-        else:
-            # every tombstone derives from the materialized touched
-            # frame, whose distinct-file set already rode the ambiguity
-            # aggregate above — zero extra jobs here (insert-only merges
-            # have no matched rows, so no files are affected)
-            affected = touched_files if touched_files is not None else []
+            nmbs = nmbs.select("__dv_file", "__dv_pos")
+            tomb = nmbs if tomb is None else tomb.unionAll(nmbs)
+        affected = touched_files
+        dvdir = None
+        if tomb is not None:
+            # the sidecar writes only when something can be tombstoned: a
+            # merge that matched nothing stages no orphan directory
+            dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
+            tomb.write.mode("errorifexists").parquet(dvdir)
+            if nmbs_on:
+                # the NMBS anti-join is NOT materialized: the written
+                # sidecar is its single evaluation, so the affected-file
+                # set must come from reading it back
+                affected = [
+                    r["__dv_file"]
+                    for r in self._read_sidecars(dvdir)
+                    .select("__dv_file")
+                    .distinct()
+                    .collect()
+                ]
         MERGE_METRICS["sidecar_write_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
         )
@@ -3083,10 +3130,10 @@ class SnapshotTable:
             c for c in mapped.columns
             if c not in ("__dv_file", "__dv_pos", ROW_ID_COL)
         ]
-        # post-images: derived from the MATERIALIZED touched frame (the
-        # same rows the sidecar was written from — one pass, pinned)
+        # post-images: the checkpointed rows whose pinned outcome is
+        # update-not-delete (the same rows the sidecar was written from)
         post = None
-        if when_matched_update is not None:
+        if n_post:
             # GENERATED columns the update clause didn't explicitly
             # assign are dropped so the write path recomputes them from
             # the updated inputs (same recompute rule as update_where);
@@ -3096,10 +3143,7 @@ class SnapshotTable:
                 for g in self._generated()
                 if g in target_cols and g not in when_matched_update
             }
-            # __is_del is the clause outcome pinned AT the checkpoint
-            # (round-11): filtering on it cannot disagree with the
-            # tombstone set even for a nondeterministic delete condition
-            pre = touched.filter(~F.col("__is_del"))
+            pre = ckpt.filter(F.col("__is_upd") & ~F.col("__is_del"))
             out_cols = [c for c in target_cols if c not in regen]
             if track:
                 # row tracking: the post-image keeps the pre-image's
@@ -3124,18 +3168,8 @@ class SnapshotTable:
                 .select(*out_cols)
             )
         inserts = None
-        if ins_on:
-            # one column-pruned anti-join pass; materialized so the
-            # emptiness probe and the file write share the evaluation
-            # (and identity-id assignment happens exactly once)
-            unmatched = src.join(
-                mapped.select(*on), key_cond, "left_anti"
-            )
-            if ins_cond is not None:
-                unmatched = unmatched.filter(
-                    ins_cond.eqNullSafe(F.lit(True))
-                )
-            inserts = unmatched.select(
+        if n_ins:
+            inserts = ckpt.filter(F.col("__is_ins")).select(
                 *[
                     F.col(f"__src_{c}").alias(c)
                     for c in source.columns
@@ -3151,7 +3185,6 @@ class SnapshotTable:
             # default, not a NULL)
             gens_all = self._generated()
             dfl_all = self._defaults()
-            ident_all = m.get("identity") or {}
             for f in mapped.schema.fields:
                 if f.name in ("__dv_file", "__dv_pos", ROW_ID_COL):
                     continue  # inserts draw FRESH ids from their range
@@ -3161,39 +3194,17 @@ class SnapshotTable:
                     inserts = inserts.withColumn(
                         f.name, F.lit(None).cast(f.dataType)
                     )
-            # identity columns: MERGE inserts draw engine-assigned ids
-            # from the head watermark, the same map-side expression as
-            # commit_append (a racing watermark advance conflicts this
-            # merge's single exclusive publish — the retry re-reads)
-            for c, meta in ident_all.items():
-                if f"__src_{c}" in src.columns:
-                    raise ValueError(
-                        f"{c!r} is GENERATED ALWAYS AS IDENTITY — the "
-                        "engine assigns it; omit it from the source"
-                    )
-                step = int(meta["step"])
-                inserts = inserts.withColumn(
-                    c,
-                    (
-                        F.lit(int(meta["high"]) + step)
-                        + F.lit(step) * F.monotonically_increasing_id()
-                    ).cast("long"),
-                )
-            inserts = inserts.localCheckpoint(eager=True)
+            # ids come from the checkpointed rows: the input is pinned,
+            # so the one write assigns them once
+            inserts = with_identity(inserts)
         # The update and insert branches write SEPARATELY: after the
         # generated-column drop their column sets can differ (post
         # recomputes a gen column the source happens to supply, or vice
         # versa), and a unioned write would surface NULLs for the
         # missing side and fail the writer-side validation. Each branch
         # passes through the same `_write_files` choke point, both file
-        # lists land in the one atomic manifest. Both derive from
-        # materialized frames, so the emptiness probes cost no re-scan.
-        _ph0 = _mtime.perf_counter()
-        parts = [
-            p
-            for p in (post, inserts)
-            if p is not None and p.limit(1).count() > 0
-        ]
+        # lists land in the one atomic manifest.
+        parts = [p for p in (post, inserts) if p is not None]
         if not affected and not parts:
             if txn_update:
                 return self._publish(
@@ -3201,18 +3212,12 @@ class SnapshotTable:
                     txn_update=txn_update, op="MERGE",
                 )
             return cur  # nothing matched, nothing to insert
+        _ph0 = _mtime.perf_counter()
         new: list[str] = []
         for p in parts:
             new += self._write_files(p)
         MERGE_METRICS["post_insert_write_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
-        )
-        # only the insert branch can extend the schema (post-images
-        # project a subset of the existing target columns)
-        sm = (
-            self._extend_schema_map(m, inserts)
-            if inserts is not None and any(p is inserts for p in parts)
-            else _UNSET
         )
         _ph0 = _mtime.perf_counter()
         # write-serializable rebase (as in delete/update): the MERGE
@@ -3225,7 +3230,13 @@ class SnapshotTable:
             new,
             dv_sidecar=dvdir if affected else None,
             affected=affected,
-            schema_map=sm,
+            # only the insert branch can extend the schema (post-images
+            # project a subset of the existing target columns)
+            schema_map=(
+                self._extend_schema_map(m, inserts)
+                if inserts is not None
+                else _UNSET
+            ),
             op="MERGE",
             types=self._merged_types(m, *parts),
             txn_update=txn_update,

@@ -1,6 +1,10 @@
 """Measure tf_merge_mor in isolation (bench-identical setup), min-of-N.
 
-Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/measure_merge_fold.py [runs]
+Each timed merge runs under its own Spark job group, and its job count
+is printed next to the wall and the MERGE_METRICS phases, so one run
+reproduces the merge's job graph size before and after a change.
+
+Usage: SPARK_GRAFT_SF_DIR=<sf dir, e.g. .../sf0.1> python tools/measure_merge_fold.py [runs]
 """
 import os
 import shutil
@@ -21,6 +25,7 @@ from s3_glue_redshift_guide_spark.sources.snapshots import (  # noqa: E402
 runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("measure-merge-fold")
+sc = spark.sparkContext
 base = tempfile.mkdtemp(prefix="measure_merge_")
 orders = load_table(spark, sf_dir, "orders").select(
     "o_orderkey", "o_custkey", "o_orderstatus",
@@ -42,7 +47,8 @@ try:
                 F.col("price_cents"),
             )
         )
-        spark.sparkContext.setJobDescription(f"measure tf_merge_mor run {i}")
+        group = f"measure-merge-{i}"
+        sc.setJobGroup(group, f"measure tf_merge_mor run {i}")
         t0 = time.perf_counter()
         t.merge_mor(
             src,
@@ -51,9 +57,11 @@ try:
             when_matched_update={"price_cents": F.col("__src_price_cents")},
         )
         wall = time.perf_counter() - t0
+        sc.setJobGroup("", "")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         print(
             f"run {i}{' (warm-up)' if i == 0 else ''}: {wall:.3f}s  "
-            f"phases={dict(MERGE_METRICS)}"
+            f"jobs={jobs}  phases={dict(MERGE_METRICS)}"
         )
         if i > 0:
             best = wall if best is None else min(best, wall)
