@@ -16,16 +16,21 @@ Four near-dup families, all shuffle-bounded (never O(n^2) over the corpus):
   any pair within Hamming distance 3 shares a block (pigeonhole) — the
   bucket join finds them without a cross join.
 
-Everything is pure DataFrame expressions (xxhash64 / bit ops / aggregate
-folds), so the heavy lifting stays in codegen and the only shuffles are the
-bucket joins and groupBys — the shape that survives 1000 executors.
+Each operator has one implementation. The joins, groupBys and exact
+verification are DataFrame expressions (xxhash64 / bit ops / aggregate
+folds), so the only shuffles are the bucket joins and groupBys — the shape
+that survives 1000 executors. The two per-document featurizations that
+Spark can only interpret, shingling (``_doc_shingle_sets``) and MinHash
+signatures (``_minhash_sigs_arrow``), run as Arrow-batched ``mapInPandas``
+kernels. Their outputs are pinned by golden digests
+(tests/test_llm_kernels.py) and the DuckDB oracle rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.text import shingles, tokens
+from ..functions.text import tokens
 
 
 #: _spread granularity: one partition per this many SOURCE bytes (plan-
@@ -118,41 +123,25 @@ def exact_dedup_groups(df: DataFrame, content_col: str, id_col: str) -> DataFram
 
 
 def _doc_shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, n: int, use_arrow: bool = True
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(doc, sh: array<string>) — distinct shingle set per document.
+    """(doc, sh: array<string>) — distinct shingle set per document, in
+    first-occurrence order (``array_distinct`` semantics).
 
-    Two implementations, proven element-identical (tests/test_llm.py):
-
-    * Arrow (default): ``mapInPandas`` — tokenize + shingle per batch in
-      Python. Higher-order array lambdas are interpreted (not codegen'd) in
-      Spark, so this CPU-bound featurization is ~30% faster Arrow-batched
-      than as expression folds, and the regex mirrors Java's ASCII ``\\s+``
-      exactly so oracle parity is preserved.
-    * expression (``use_arrow=False``): tokens and shingles as SEPARATE
-      selects — composing ``shingles(tokens(text))`` in one expression
-      duplicates the tokens() subtree at every array access inside the
-      shingle lambda (3 accesses x ~50 shingles => tokens recomputed ~150x
-      per document, interpreted). The split survives optimization because
-      CollapseProject keeps non-cheap duplicated aliases un-inlined.
+    Tokenize + shingle per Arrow batch in Python (``mapInPandas``).
+    Higher-order array lambdas are interpreted (not codegen'd) in Spark,
+    so this CPU-bound featurization is ~30% faster Arrow-batched than as
+    expression folds. The whitespace regex mirrors Java's ASCII ``\\s+``
+    exactly, so the shingles equal those of ``functions.text.shingles``
+    over ``tokens`` and the DuckDB oracle.
     """
-    if not use_arrow:
-        toked = _spread(df).select(
-            F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("__toks")
-        )
-        return _materialize(
-            toked.select(
-                "doc", F.array_distinct(shingles(F.col("__toks"), n)).alias("sh")
-            )
-        )
-
     import re
 
     import pandas as pd
 
     # Java regex \s is ASCII-only: [ \t\n\x0b\f\r]. Python \s would also
-    # match unicode whitespace (e.g. \xa0) and silently diverge from the
-    # expression path and the DuckDB oracle.
+    # match unicode whitespace (e.g. \xa0) and silently diverge from
+    # functions.text.tokens and the DuckDB oracle.
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def featurize(batches):
@@ -319,17 +308,6 @@ def jaccard_delta_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def _minhash_sig(sh: Column, n_hashes: int) -> Column:
-    """Array of ``n_hashes`` min-hash values; seed varies per hash via a
-    literal second argument to the (seeded murmur-ish) xxhash64."""
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def _minhash_sigs_arrow(sets: DataFrame, n_hashes: int) -> DataFrame:
     """(doc, sig: array<bigint>) via Arrow batches: ONE stable 64-bit base
     hash per shingle (pandas hash_array — fixed-key siphash, deterministic
@@ -391,16 +369,15 @@ def minhash_lsh_candidates(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_sets: DataFrame | None = None,
-    use_arrow: bool = True,
     max_band_bucket: int | None = None,
 ) -> DataFrame:
     """L2 candidates: (doc_a, doc_b) sharing at least one LSH band.
 
     rows-per-band r = n_hashes/bands; collision probability for Jaccard j
     is 1-(1-j^r)^b (r=4,b=8: j=0.5 -> 0.42, j=0.8 -> 0.98). Deterministic —
-    every hash seed is a literal (expression path) or a fixed-key/seeded
-    numpy derivation (Arrow path, the default — one vectorized pass instead
-    of n_hashes interpreted array folds).
+    signatures come from a fixed-key base hash and seeded numpy
+    derivations (``_minhash_sigs_arrow``: one vectorized pass instead of
+    n_hashes interpreted array folds).
 
     ``max_band_bucket`` (the round-10 scale guard, measured not guessed:
     the sf10 probe put uncapped minhash at scaling exponent 1.77 — a
@@ -419,15 +396,10 @@ def minhash_lsh_candidates(
         if shingle_sets is not None
         else _doc_shingle_sets(df, id_col, text_col, n)
     ).filter(F.size("sh") > 0)
-    # barrier: the banding select reads sig 32x via element_at; without it
-    # CollapseProject inlines (and recomputes) the whole signature
-    # expression at every reference.
-    if use_arrow:
-        sig = _materialize(_minhash_sigs_arrow(docs, n_hashes))
-    else:
-        sig = _materialize(
-            docs.select("doc", _minhash_sig(F.col("sh"), n_hashes).alias("sig"))
-        )
+    # barrier: both sides of the band self-join (and, when capped, the
+    # bucket-size window) read the signatures; the checkpoint runs the
+    # signature kernel once for all of them.
+    sig = _materialize(_minhash_sigs_arrow(docs, n_hashes))
     banded = sig.select(
         "doc",
         F.explode(
@@ -517,7 +489,6 @@ def minhash_near_dup_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     shingle_sets: DataFrame | None = None,
-    use_arrow: bool = True,
     max_band_bucket: int | None = None,
 ) -> DataFrame:
     """L2 (scale path): LSH candidates verified with exact Jaccard — output
@@ -533,8 +504,7 @@ def minhash_near_dup_pairs(
     )
     cands = minhash_lsh_candidates(
         df, id_col, text_col, n, n_hashes, bands,
-        shingle_sets=docs, use_arrow=use_arrow,
-        max_band_bucket=max_band_bucket,
+        shingle_sets=docs, max_band_bucket=max_band_bucket,
     )
     a = docs.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = docs.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))

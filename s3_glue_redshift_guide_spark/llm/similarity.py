@@ -9,9 +9,19 @@
   corpus vectors sharing a signature band with the query, re-ranked
   exactly. Hyperplanes derive deterministically from a seed so results are
   reproducible run-to-run.
+* ``ivf_topk`` / ``semantic_dedup_pairs`` — a k-means coarse quantizer
+  (inverted lists) scopes the compares; ``pq_topk`` / ``ivfpq_topk`` add
+  product-quantized codes for the candidate scan.
 
-Both use the sequential-fold vector primitives (functions/vectors.py) —
-JVM expressions, no UDFs, bit-stable across engines for the oracle.
+Each operator has one implementation. Exact scoring (brute force, LSH
+and ADC re-rank) uses the sequential-fold vector primitives
+(functions/vectors.py). The three hot loops — coarse assignment
+(``_nearest_kernel``), PQ encoding (``_pq_assign_kernel``) and per-list
+pair scoring (``_pairscore_kernel``) — are numpy kernels behind
+``mapInPandas`` that repeat those folds' fp64 operations in the same
+order, so their distances match the JVM folds bit for bit. Outputs are
+pinned by golden digests (tests/test_llm_kernels.py) and the DuckDB
+oracle rows.
 """
 
 from __future__ import annotations
@@ -20,7 +30,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..functions.vectors import cosine, dot, l2_norm
+from ..functions.vectors import dot, l2_norm
 from .dedup import _materialize
 
 
@@ -29,9 +39,9 @@ def _spread(df: DataFrame) -> DataFrame:
     the byte-capped ``dedup._spread`` (r12, measured): these call sites
     feed stages whose per-row work is multiplied by a broadcast factor
     (the ADC scan folds one distance-table lookup chain per QUERY per
-    row; the salted pair join scores O(occupancy²) pairs), so a width
-    derived from input bytes under-provisions them. Measured at sf1
-    with the byte cap (width 21 instead of 32, salts 3 instead of 4):
+    row; pair scoring is O(occupancy²) per list), so a width derived
+    from input bytes under-provisions them. Measured at sf1 with the
+    byte cap (width 21 instead of 32):
     semantic_dedup_pairs 13.2 -> 21.7 s, pq_topk 3.3 -> 4.2 s,
     ivfpq_topk 5.3 -> 6.7 s — reverted to defaultParallelism here while
     the featurization paths (work ∝ bytes) keep the sweep-validated
@@ -197,77 +207,23 @@ def lsh_topk(
     )
 
 
-def _centroid_frame(spark, cents: list[list[float]]):
-    """Centroids as DATA, not plan literals: one row holding one
-    ``array<struct<list_id:int, cent:array<double>>>`` column, meant to be
-    broadcast-attached (1-row nested-loop, the scalar-attach idiom) to the
-    frame being assigned. Keeps the compiled plan O(1) in k*dim — the
-    literal-tree alternative builds ~k*dim expression nodes, which at
-    realistic IVF scale (k=4096, dim=768) is ~3M plan nodes and blows up
-    compile time and driver memory long before the data does. The struct
-    array is sorted by list_id so its layout is deterministic. Each
-    centroid's L2 norm rides the struct (r11): folded once per CENTROID
-    at frame build instead of once per (row, centroid) in every
-    assignment pass — same sequential fold over the same doubles, so
-    the assignment distances stay bit-identical."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    cdf = spark.createDataFrame(rows, "list_id int, cent array<double>")
-    return cdf.select(
-        "list_id", "cent", l2_norm(F.col("cent")).alias("cn")
-    ).agg(
-        F.array_sort(
-            F.collect_list(F.struct("list_id", "cent", "cn"))
-        ).alias("__cents")
-    )
-
-
-def _nearest_slice(vec_col: str, n_keep: int, vn_col: str = "__avn"):
-    """Expression: the ``n_keep`` nearest centroids of ``__cents`` to
-    ``vec_col``, as an array of (d, list_id) structs sorted by (distance,
-    list_id) — identical ordering semantics (and bit-identical distances)
-    to the former literal-tree form, just folded over the broadcast data
-    column instead of k inline expressions.
-
-    ``vn_col`` is the row's L2 norm, computed ONCE per row in a
-    projection BELOW the centroid cross-join (the join node blocks
-    CollapseProject, so the fold can't be re-inlined per centroid); the
-    centroid norms are banked in the ``__cents`` structs. Each distance
-    is therefore ONE fold (the dot) — down from three in the original
-    cosine() form, same arithmetic in the same order
-    (dot / (|v| * |c|)), so assignments are bit-identical."""
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(
-            (
-                -(
-                    dot(F.col(vec_col), c["cent"])
-                    / (F.col(vn_col) * c["cn"])
-                )
-            ).alias("d"),
-            c["list_id"].alias("list_id"),
-        ),
-    )
-    return F.slice(F.array_sort(dists), 1, n_keep)
-
-
 def kmeans_centroids(
     corpus: DataFrame,
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 16,
     iters: int = 2,
-    use_arrow: bool = True,
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means for the IVF coarse quantizer.
 
     Deterministic init (first ``k`` corpus vectors by id); each round
-    assigns every vector to its nearest centroid by cosine (centroids ride
-    a 1-row broadcast as a data column — see ``_centroid_frame`` — so the
-    plan stays O(1) in k*dim) and recomputes per-cluster per-dimension
-    means via posexplode + groupBy. Only k*dim scalars reach the driver
-    per round — the corpus itself never does, which is the shape that
-    holds at 10^9 vectors. Centroid components round to 6 decimals so
-    partial-aggregation order can't leak last-ulp noise into assignments.
+    assigns every vector to its nearest centroid by cosine (the numpy
+    ``_nearest_kernel``; centroids travel in its closure) and recomputes
+    per-cluster per-dimension means via posexplode + groupBy. Only k*dim
+    scalars reach the driver per round — the corpus itself never does,
+    which is the shape that holds at 10^9 vectors. Centroid components
+    round to 6 decimals so partial-aggregation order can't leak last-ulp
+    noise into assignments.
     """
     cents = [
         [float(x) for x in r["cv"]]
@@ -277,39 +233,22 @@ def kmeans_centroids(
         .collect()
     ]
     # spread BEFORE the rounds (r11): on a one-file local corpus the
-    # assignment pass otherwise runs single-threaded interpreted folds
-    # (the same serialization _spread exists for; at cluster scale the
+    # assignment pass otherwise runs on one core (at cluster scale the
     # corpus already has thousands of splits and this is a cheap
     # rebalance). Summation-order changes in the per-cluster means are
     # absorbed by the documented round-6 convention — the same
     # convention that keeps llm_embed_centroids hash-identical to
     # DuckDB's differently-ordered avg.
     corpus = _spread(corpus)
+    vec_type = dict(corpus.dtypes)[vec_col]
     for _ in range(iters):
         TRAIN_METRICS["lloyd_rounds"] += 1
-        if use_arrow:
-            # Arrow assignment kernel (r12, guide §4.2): bit-identical
-            # winners, numpy-vectorized distances — see _nearest_kernel
-            vec_type = dict(corpus.dtypes)[vec_col]
-            assigned = corpus.select(
-                F.col(vec_col).alias("__v")
-            ).mapInPandas(
-                _nearest_kernel(cents, "__v", 1, False),
-                schema=f"__v {vec_type}, list_id int",
-            ).select("list_id", F.posexplode("__v").alias("pos", "v"))
-        else:
-            # two selects: a generator in the same projection as the
-            # struct field access makes Catalyst re-plan the struct with
-            # anonymous fields (col1/col2), losing the list_id name
-            assigned = corpus.withColumn(
-                "__avn", l2_norm(F.col(vec_col))
-            ).crossJoin(
-                F.broadcast(_centroid_frame(corpus.sparkSession, cents))
-            ).select(
-                F.element_at(_nearest_slice(vec_col, 1), 1)["list_id"]
-                .alias("list_id"),
-                F.col(vec_col).alias("__v"),
-            ).select("list_id", F.posexplode("__v").alias("pos", "v"))
+        assigned = corpus.select(
+            F.col(vec_col).alias("__v")
+        ).mapInPandas(
+            _nearest_kernel(cents, "__v", 1, False),
+            schema=f"__v {vec_type}, list_id int",
+        ).select("list_id", F.posexplode("__v").alias("pos", "v"))
         means = (
             assigned.groupBy("list_id", "pos")
             .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("m"))
@@ -345,22 +284,22 @@ def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
       stability == the tiebreak; NaN sorts last in both engines).
 
     Elements cast float32 -> float64 BEFORE arithmetic, exactly like
-    ``as_double``. Assignments are therefore bit-identical to the
-    ``_nearest_slice`` expression path — pinned by
-    tests/test_round12_opt.py on real data at two SFs, plus the oracle
-    rows. (The r11 Arrow experiment that LOST shipped both 256-byte
-    vectors per candidate PAIR — 36M pairs at sf1; this kernel ships
-    each vector ONCE per assignment pass, so the boundary cost is O(n)
-    while the saved interpreted work is O(n*L).)
+    ``as_double``. Assignments are therefore bit-identical to the same
+    distances computed as a JVM fold — pinned by golden digests in
+    tests/test_llm_kernels.py at two SFs, plus the oracle rows. (The r11
+    Arrow experiment that LOST shipped both 256-byte vectors per
+    candidate PAIR — 36M pairs at sf1; this kernel ships each vector
+    ONCE per assignment pass, so the boundary cost is O(n) while the
+    saved interpreted work is O(n*L).)
 
     Centroids travel in the function closure (k*dim doubles — the
-    pickled command Spark already broadcasts per stage), so the Arrow
-    path doesn't need the ``_centroid_frame`` cross-join at all."""
+    pickled command Spark already broadcasts per stage), so the plan
+    stays O(1) in k*dim and no centroid frame is joined in."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.float64)  # k x dim
     k, dim = C.shape
-    # centroid norms: the same sequential fold _centroid_frame banks
+    # centroid norms: the same sequential fold as l2_norm
     cn = np.zeros(k)
     for d in range(dim):
         cn = cn + C[:, d] * C[:, d]
@@ -401,54 +340,31 @@ def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
 
 
 def _nearest_lists(df, cents, vec_col, id_out, vec_out, n_keep,
-                   norm_out=None, use_arrow: bool = True):
+                   norm_out=None):
     """Attach each row's ``n_keep`` nearest centroid ids as an exploded
-    column — the IVF assignment pass. Default path (r12): the Arrow
-    kernel above — one Python boundary crossing per row instead of
-    n_lists interpreted distance folds, bit-identical assignments. The
-    expression path (``use_arrow=False``) is retained as the parity
-    reference: centroids ride a 1-row broadcast as a data column
-    (``_centroid_frame`` — plan size O(1) in k*dim); the frame is
-    materialized so the explode can't re-inline the distance
-    expressions per reference. With ``norm_out`` the row's L2 norm
-    rides along (r11): computed once per vector for the downstream
-    candidate scoring instead of re-folded per candidate pair."""
-    if use_arrow:
-        sel = df.select(F.col(id_out[0]).alias(id_out[1]),
-                        F.col(vec_col).alias(vec_out))
-        vec_type = dict(sel.dtypes)[vec_out]
-        id_type = dict(sel.dtypes)[id_out[1]]
-        schema = f"{id_out[1]} {id_type}, {vec_out} {vec_type}, list_id int"
-        if norm_out:
-            schema += ", __avn double"
-        assigned = _materialize(
-            sel.mapInPandas(
-                _nearest_kernel(cents, vec_out, n_keep, bool(norm_out)),
-                schema=schema,
-            )
+    column — the IVF assignment pass, run by ``_nearest_kernel``: one
+    Python boundary crossing per row instead of n_lists interpreted
+    distance folds. The output is materialized so downstream consumers
+    don't re-run the kernel. With ``norm_out`` the row's L2 norm rides
+    along (r11): computed once per vector for the downstream candidate
+    scoring instead of re-folded per candidate pair."""
+    sel = df.select(F.col(id_out[0]).alias(id_out[1]),
+                    F.col(vec_col).alias(vec_out))
+    vec_type = dict(sel.dtypes)[vec_out]
+    id_type = dict(sel.dtypes)[id_out[1]]
+    schema = f"{id_out[1]} {id_type}, {vec_out} {vec_type}, list_id int"
+    if norm_out:
+        schema += ", __avn double"
+    assigned = _materialize(
+        sel.mapInPandas(
+            _nearest_kernel(cents, vec_out, n_keep, bool(norm_out)),
+            schema=schema,
         )
-        out_cols = [id_out[1], vec_out] + ([norm_out] if norm_out else [])
-        if norm_out:
-            assigned = assigned.withColumnRenamed("__avn", norm_out)
-        return assigned.select(*out_cols, "list_id")
-    withc = df.withColumn("__avn", l2_norm(F.col(vec_col))).crossJoin(
-        F.broadcast(_centroid_frame(df.sparkSession, cents))
-    )
-    extra = [F.col("__avn").alias(norm_out)] if norm_out else []
-    withd = _materialize(
-        withc.select(
-            F.col("*"),
-            _nearest_slice(vec_col, n_keep).alias("__near"),
-            *extra,
-        ).drop("__cents", "__avn")
     )
     out_cols = [id_out[1], vec_out] + ([norm_out] if norm_out else [])
-    return withd.select(
-        F.col(id_out[0]).alias(id_out[1]),
-        F.col(vec_col).alias(vec_out),
-        *([F.col(norm_out)] if norm_out else []),
-        F.explode("__near").alias("__n"),
-    ).select(*out_cols, F.col("__n.list_id").alias("list_id"))
+    if norm_out:
+        assigned = assigned.withColumnRenamed("__avn", norm_out)
+    return assigned.select(*out_cols, "list_id")
 
 
 def ivf_topk(
@@ -522,9 +438,10 @@ def _pairscore_kernel(threshold: float, id_field: str = "id",
     ROUND_HALF_UP) the same rounding. Only near-threshold survivors pay
     the per-value Decimal cost — a raw cosine below threshold - 1e-6
     cannot round up to the threshold (round moves a value by at most
-    5e-7), so the O(pairs) mask stays vectorized. Equality with the
-    fold path is pinned on real data at two SFs by
-    tests/test_round12_opt.py plus the oracle rows."""
+    5e-7), so the O(pairs) mask stays vectorized. The output is pinned
+    on real data at two SFs by tests/test_llm_kernels.py (golden digests
+    and an independent Spark-expression pair scorer) plus the oracle
+    rows."""
     import numpy as np
 
     def score(batches):
@@ -594,7 +511,6 @@ def semantic_dedup_pairs(
     n_lists: int = 8,
     n_probe: int = 3,
     kmeans_iters: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs over the FULL corpus via cluster
     scoping (the SemDeDup shape): a k-means coarse quantizer assigns every
@@ -614,94 +530,21 @@ def semantic_dedup_pairs(
         _spread(corpus), cents, vec_col, (corpus_id, "id"), "v", n_probe,
         norm_out="__vn",
     )
-    if use_arrow:
-        # Per-list kernel scoring (r12, default): one shuffle of the
-        # assigned rows keyed on list_id (explicit width so AQE's
-        # size-based coalescing can't serialize the tiny-bytes/huge-work
-        # stage), then the whole pair grid of each list scores in numpy
-        # — see _pairscore_kernel for the bit-identity argument. The
-        # fold path below remains the parity reference
-        # (use_arrow=False). Local parallelism is bounded by n_lists
-        # (one list is indivisible in this shape) — at production
-        # sizing n_lists >= cores, the same regime where the fold
-        # path's salting retires; measured sf1 (8 lists / 32 cores,
-        # i.e. the kernel's WORST parallelism case): 13.0 -> 3.9 s
-        # min-of-3, pair set + cos_sim bit-identical at every SF.
-        par = corpus.sparkSession.sparkContext.defaultParallelism
-        idt = dict(assigned.dtypes)["id"]
-        return (
-            assigned.repartition(par, "list_id")
-            .mapInPandas(
-                _pairscore_kernel(threshold),
-                schema=f"id_a {idt}, id_b {idt}, cos_sim double",
-            )
-            .distinct()
-        )
-    # Salted self-join (r11, guide's low-cardinality-key treatment): the
-    # join key has only n_lists distinct values, so a plain shuffle join
-    # caps the pair-scoring parallelism at n_lists tasks — at n_lists=8
-    # on 32 cores, 3/4 of the machine idles through the dominant stage.
-    # The left side salts on a hash of its id; the right side replicates
-    # once per salt, so every co-resident (a, b) pair still meets EXACTLY
-    # once and the emitted pair set is identical. Scale-adaptive: salts =
-    # ceil(cores / n_lists), so a production quantizer with n_lists >=
-    # cores gets salts=1 — no replication, the exact unsalted plan.
-    # Salt width stays keyed to defaultParallelism (r12: a byte-capped
-    # width was tried per VERDICT-r11 #7 and REVERTED on measurement —
-    # the scoring stage's work is O(per-list occupancy²), which a
-    # bytes-of-input signal underestimates; capping salts 4 -> 3 at sf1
-    # cost 13.2 -> 21.7 s on this operator).
+    # Per-list kernel scoring (r12): one shuffle of the assigned rows
+    # keyed on list_id (explicit width so AQE's size-based coalescing
+    # can't serialize the tiny-bytes/huge-work stage), then the whole
+    # pair grid of each list scores in numpy — see _pairscore_kernel for
+    # the bit-identity argument. Local parallelism is bounded by n_lists
+    # (one list is indivisible in this shape); at production sizing
+    # n_lists >= cores.
     par = corpus.sparkSession.sparkContext.defaultParallelism
-    salts = max(1, -(-par // max(1, n_lists)))
-    a_salt = (
-        [F.pmod(F.xxhash64("id"), F.lit(salts)).alias("__salt")]
-        if salts > 1
-        else []
-    )
-    b_salt = (
-        [
-            F.explode(
-                F.array(*[F.lit(s).cast("bigint") for s in range(salts)])
-            ).alias("__salt")
-        ]
-        if salts > 1
-        else []
-    )
-    join_keys = ["list_id"] + (["__salt"] if salts > 1 else [])
-    a = assigned.select(
-        "list_id",
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("__vn").alias("__na"),
-        *a_salt,
-    )
-    b = assigned.select(
-        "list_id",
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("__vn").alias("__nb"),
-        *b_salt,
-    )
-    # Scoring stays a JVM fold DELIBERATELY (r11 measured experiment):
-    # an Arrow pandas_udf with strict sequential accumulation (bitwise-
-    # equal to the fold, proven on 90k-pair cross joins) was prototyped
-    # and REJECTED — shipping both 256-byte vectors per pair through
-    # Arrow cost more than the interpreted fold it replaced (sf1, 36M
-    # pairs: 60.2 s udf vs 37.2 s fold; the threshold filter also stops
-    # pushing into the join condition once a udf is in the expression).
+    idt = dict(assigned.dtypes)["id"]
     return (
-        a.join(b, join_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("cos_sim"),
+        assigned.repartition(par, "list_id")
+        .mapInPandas(
+            _pairscore_kernel(threshold),
+            schema=f"id_a {idt}, id_b {idt}, cos_sim double",
         )
-        .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
 
@@ -718,8 +561,8 @@ def _l2sq(a, b):
 
 def _pq_argmin_codes(S, C):
     """Per-row nearest-codeword index within ONE subspace, replicating
-    the expression path bit-for-bit: distances are ``round(_l2sq, 6)``
-    and the winner is the (rounded distance, code) struct-sort minimum.
+    Spark's semantics bit-for-bit: distances are ``round(_l2sq, 6)`` and
+    the winner is the (rounded distance, code) struct-sort minimum.
 
     numpy computes the RAW squared distances with the fold's exact
     per-dimension accumulation order. Rounding can move a value by at
@@ -762,12 +605,11 @@ def _pq_argmin_codes(S, C):
 
 def _pq_assign_kernel(cents, m: int, d: int):
     """mapInPandas kernel assigning every subspace slice of every row to
-    its nearest codeword — replaces the interpreted per-point
-    filter(128 structs) + 16 ``_l2sq`` folds of the expression path
-    (r12, guide §4.2; same bit-identity discipline as
-    ``_nearest_kernel``). Input rows carry the raw vector; all m
-    subspace codes compute in one boundary crossing. Emits the codes
-    array per row."""
+    its nearest codeword (r12, guide §4.2; same bit-identity discipline
+    as ``_nearest_kernel``) — one numpy pass instead of k_codes
+    interpreted ``_l2sq`` folds per slice. Input rows carry the raw
+    vector; all m subspace codes compute in one boundary crossing.
+    Emits the codes array per row."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.float64)  # m x k_codes x d
@@ -792,14 +634,6 @@ def _pq_assign_kernel(cents, m: int, d: int):
     return fn
 
 
-def _pq_slices(vec_col, m: int, d: int):
-    """The m contiguous d-dim subvectors of ``vec_col`` (1-based slice)."""
-    return [
-        F.slice(F.col(vec_col).cast("array<double>"), j * d + 1, d)
-        for j in range(m)
-    ]
-
-
 def pq_codebooks(
     corpus: DataFrame,
     dim: int,
@@ -808,7 +642,6 @@ def pq_codebooks(
     m: int = 8,
     k_codes: int = 16,
     iters: int = 2,
-    use_arrow: bool = True,
 ) -> list[list[list[float]]]:
     """Per-subspace k-means codebooks (Jégou et al., PQ): split ``dim``
     into ``m`` subspaces and learn ``k_codes`` centroids in each — ALL
@@ -836,85 +669,39 @@ def pq_codebooks(
     # fix as kmeans_centroids — the sliced points otherwise train the
     # codebooks on one core on a one-file local corpus
     spread = _spread(corpus)
-    if not use_arrow:
-        pts = spread.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(j).alias("sub"), s.alias("sl"))
-                        for j, s in enumerate(_pq_slices(vec_col, m, d))
-                    ]
-                )
-            ).alias("p")
-        ).select(F.col("p.sub").alias("sub"), F.col("p.sl").alias("sl"))
     vec_type = dict(corpus.dtypes)[vec_col]
     for _ in range(iters):
         TRAIN_METRICS["lloyd_rounds"] += 1
-        if use_arrow:
-            # PQ assignment kernel (r12, guide §4.2): all m subspace
-            # codes per vector in ONE boundary crossing, numpy-
-            # vectorized with fold-order arithmetic and exact rounded
-            # tie handling — see _pq_assign_kernel / _pq_argmin_codes.
-            # The slice values the means need re-derive in codegen'd
-            # JVM slices below (cheap), so the kernel ships only the
-            # vector and the codes.
-            coded = spread.select(
-                F.col(vec_col).alias("__vec")
-            ).mapInPandas(
-                _pq_assign_kernel(cents, m, d),
-                schema=f"__vec {vec_type}, codes array<int>",
-            )
-            assigned = coded.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("sub"),
-                                F.element_at("codes", j + 1).alias(
-                                    "code"
-                                ),
-                                F.slice(
-                                    F.col("__vec").cast(
-                                        "array<double>"
-                                    ),
-                                    j * d + 1,
-                                    d,
-                                ).alias("sl"),
-                            )
-                            for j in range(m)
-                        ]
-                    )
-                ).alias("p")
-            ).select(
-                "p.sub", "p.code", F.posexplode("p.sl").alias("pos", "v")
-            )
-        else:
-            cdf = _pq_cent_frame(corpus.sparkSession, cents)
-            assigned = (
-                pts.crossJoin(F.broadcast(cdf))
-                .select(
-                    "sub",
-                    "sl",
-                    F.element_at(
-                        F.array_sort(
-                            F.transform(
-                                F.filter(
-                                    F.col("__pqc"),
-                                    lambda c: c["sub"] == F.col("sub"),
-                                ),
-                                lambda c: F.struct(
-                                    F.round(
-                                        _l2sq(F.col("sl"), c["cent"]), 6
-                                    ).alias("d"),
-                                    c["code"].alias("code"),
-                                ),
-                            )
-                        ),
-                        1,
-                    )["code"].alias("code"),
+        # PQ assignment kernel (r12, guide §4.2): all m subspace codes
+        # per vector in ONE boundary crossing, numpy-vectorized with
+        # fold-order arithmetic and exact rounded tie handling — see
+        # _pq_assign_kernel / _pq_argmin_codes. The slice values the
+        # means need re-derive in codegen'd JVM slices below (cheap), so
+        # the kernel ships only the vector and the codes.
+        coded = spread.select(
+            F.col(vec_col).alias("__vec")
+        ).mapInPandas(
+            _pq_assign_kernel(cents, m, d),
+            schema=f"__vec {vec_type}, codes array<int>",
+        )
+        assigned = coded.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("sub"),
+                            F.element_at("codes", j + 1).alias("code"),
+                            F.slice(
+                                F.col("__vec").cast("array<double>"),
+                                j * d + 1,
+                                d,
+                            ).alias("sl"),
+                        )
+                        for j in range(m)
+                    ]
                 )
-                .select("sub", "code", F.posexplode("sl").alias("pos", "v"))
-            )
+            ).alias("p")
+        ).select("p.sub", "p.code", F.posexplode("p.sl").alias("pos", "v"))
         means = (
             assigned.groupBy("sub", "code", "pos")
             .agg(F.round(F.avg("v"), 6).alias("mv"))
@@ -938,9 +725,10 @@ def pq_codebooks(
 def _pq_cent_frame(spark, cents):
     """Codebooks as DATA (1-row broadcastable
     ``array<struct<sub:int, code:int, cent:array<double>>>`` sorted by
-    (sub, code) so flat index = sub*k + code) — same O(1)-plan discipline
-    as ``_centroid_frame``; m*k_codes*d literals would bloat the compiled
-    plan at realistic scale (m=96, k=256, d=8)."""
+    (sub, code) so flat index = sub*k + code), broadcast-attached to the
+    query side to build each query's ADC distance table. Keeps the
+    compiled plan O(1) in m*k_codes*d; literals would bloat it at
+    realistic scale (m=96, k=256, d=8)."""
     rows = [
         (j, c, cents[j][c])
         for j in range(len(cents))
@@ -960,47 +748,22 @@ def pq_encode(
     id_col: str,
     vec_col: str = "embedding",
     out_id: str = "neighbor_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Compress each vector to its m nearest-codeword indices — the
     8-byte-per-vector representation the candidate scan reads INSTEAD of
-    the raw embeddings (64x smaller at m=8 codes vs 64 floats). Default
-    path (r12): the PQ assignment kernel — one boundary crossing per
-    vector, bit-identical codes (see _pq_assign_kernel); the expression
-    path is the retained parity reference."""
-    m, k_codes = len(cents), len(cents[0])
-    d = len(cents[0][0])
-    if use_arrow:
-        sel = df.select(
-            F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec")
-        )
-        idt = dict(sel.dtypes)[out_id]
-        vec_type = dict(sel.dtypes)["__vec"]
-        return sel.mapInPandas(
-            _pq_assign_kernel(cents, m, d),
-            schema=f"{out_id} {idt}, __vec {vec_type}, codes array<int>",
-        ).select(out_id, "codes")
-    withc = df.crossJoin(
-        F.broadcast(_pq_cent_frame(df.sparkSession, cents))
+    the raw embeddings (64x smaller at m=8 codes vs 64 floats). Runs the
+    PQ assignment kernel: one boundary crossing per vector (see
+    _pq_assign_kernel)."""
+    m, d = len(cents), len(cents[0][0])
+    sel = df.select(
+        F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec")
     )
-    codes = F.array(
-        *[
-            F.element_at(
-                F.array_sort(
-                    F.transform(
-                        F.slice(F.col("__pqc"), j * k_codes + 1, k_codes),
-                        lambda c: F.struct(
-                            F.round(_l2sq(s, c["cent"]), 6).alias("d"),
-                            c["code"].alias("code"),
-                        ),
-                    )
-                ),
-                1,
-            )["code"]
-            for j, s in enumerate(_pq_slices(vec_col, m, d))
-        ]
-    )
-    return withc.select(F.col(id_col).alias(out_id), codes.alias("codes"))
+    idt = dict(sel.dtypes)[out_id]
+    vec_type = dict(sel.dtypes)["__vec"]
+    return sel.mapInPandas(
+        _pq_assign_kernel(cents, m, d),
+        schema=f"{out_id} {idt}, __vec {vec_type}, codes array<int>",
+    ).select(out_id, "codes")
 
 
 def pq_topk(

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 def with_salt(df: DataFrame, unique_col: str, salt: int) -> DataFrame:
     """Deterministic per-row salt in [0, salt)."""
-    return df.withColumn("__salt", F.pmod(F.hash(F.col(unique_col)), F.lit(salt)))
+    return df.withColumn("__skew_salt", F.pmod(F.hash(F.col(unique_col)), F.lit(salt)))
 
 
 def salted_join(
@@ -46,13 +46,13 @@ def salted_join(
     point)."""
     ucol = probe_unique_col or probe_key
     p = with_salt(probe, ucol, salt)
-    b = build.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+    b = build.withColumn("__skew_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     out = p.join(
         b,
-        (p[probe_key] == b[build_key]) & (p["__salt"] == b["__salt"]),
+        (p[probe_key] == b[build_key]) & (p["__skew_salt"] == b["__skew_salt"]),
         how,
     )
-    return out.drop("__salt")
+    return out.drop("__skew_salt")
 
 
 def two_phase_agg(
@@ -73,7 +73,7 @@ def two_phase_agg(
     ucol = unique_col or key
     partial = (
         with_salt(df, ucol, salt)
-        .groupBy(key, "__salt")
+        .groupBy(key, "__skew_salt")
         .agg(*[c.alias(f"__p_{name}") for name, (_, c) in aggs.items()])
     )
     merge = {

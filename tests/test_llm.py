@@ -25,18 +25,6 @@ def _pairs(df):
     return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
 
 
-def test_shingle_featurizers_identical(spark):
-    from s3_glue_redshift_guide_spark.llm.dedup import _doc_shingle_sets
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    arrow = _doc_shingle_sets(d, "doc_id", "text", 3, use_arrow=True)
-    expr = _doc_shingle_sets(d, "doc_id", "text", 3, use_arrow=False)
-    a = arrow.select("doc", F.explode("sh").alias("s"))
-    b = expr.select("doc", F.explode("sh").alias("s"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert arrow.count() == expr.count()
-
-
 def test_minhash_is_subset_of_exact_with_recall(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     exact = _pairs(jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2))

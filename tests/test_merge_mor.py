@@ -320,3 +320,39 @@ def test_merge_mor_steady_state_job_count(spark, tmp_path):
         sc.setJobGroup("", "")
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs == 12, n_jobs
+
+
+def test_merge_mor_null_key_duplicates_never_raise(spark, tmp_path):
+    """Pin the null-key duplicate-source behavior on BOTH merge paths.
+    NULL join keys never `=`-match a target row (Delta's matching), so
+    they can never be ambiguous — a matched-clause merge
+    must not raise for them; and an insert-only merge must never raise
+    at all (matched rows are ignored whatever their multiplicity)."""
+    tgt = spark.createDataFrame(
+        [(1, 10), (2, 20), (3, 30)], "k long, v long"
+    )
+    # matched-clause path: two NULL-key source rows + one real update
+    t1 = SnapshotTable(spark, str(tmp_path / "nullkey_matched"))
+    t1.commit_append(tgt.coalesce(1))
+    src = spark.createDataFrame(
+        [(None, 91), (None, 92), (2, 200)], "k long, v long"
+    )
+    t1.merge_mor(src, on=["k"], when_matched_update={"v": F.col("__src_v")})
+    rows = {r["k"]: r["v"] for r in t1.read().filter("k is not null").collect()}
+    assert rows == {1: 10, 2: 200, 3: 30}
+    # the null-key rows are not-matched: they insert (Delta `=` join)
+    assert t1.read().filter("k is null").count() == 2
+
+    # insert-only path: duplicate keys MATCHING a target row are
+    # ignored (no raise — Delta), not-matched duplicates both insert
+    t2 = SnapshotTable(spark, str(tmp_path / "nullkey_insert_only"))
+    t2.commit_append(tgt.coalesce(1))
+    src2 = spark.createDataFrame(
+        [(2, 201), (2, 202), (9, 90), (9, 91), (None, 1)],
+        "k long, v long",
+    )
+    t2.merge_mor(src2, on=["k"])  # insert-only: must not raise
+    out = t2.read()
+    assert out.filter("k = 2").collect()[0]["v"] == 20  # untouched
+    assert out.filter("k = 9").count() == 2  # both inserted
+    assert out.filter("k is null").count() == 1

@@ -255,83 +255,3 @@ def _lsh_topk_reference(queries, corpus, dim, k, n_planes, bands):
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
-
-
-def test_semantic_dedup_salted_join_matches_unsalted_reference(spark):
-    """The salted self-join (low-cardinality list_id key) must emit the
-    IDENTICAL pair set as the unsalted reference, and the join must key
-    on (list_id, __salt) so pair scoring parallelism is not capped at
-    n_lists tasks."""
-    from s3_glue_redshift_guide_spark.llm.similarity import (
-        _nearest_lists,
-        kmeans_centroids,
-        semantic_dedup_pairs,
-    )
-    from s3_glue_redshift_guide_spark.llm.dedup import _spread
-    from s3_glue_redshift_guide_spark.functions.vectors import dot
-
-    e = _emb(spark)
-    # n_lists chosen BELOW the session's core count so salts > 1 and the
-    # salted path is actually exercised (at n_lists >= cores the operator
-    # deliberately plans unsalted — see the sibling test)
-    par = spark.sparkContext.defaultParallelism
-    n_lists = max(2, par // 4)
-    # use_arrow=False: these r11 pins target the retained FOLD path
-    # (the r12 default is the per-list Arrow kernel, whose identity to
-    # this path is pinned in tests/test_round12_opt.py)
-    got = semantic_dedup_pairs(
-        e, threshold=0.4, n_lists=n_lists, n_probe=2, kmeans_iters=2,
-        use_arrow=False,
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan, plan
-
-    # unsalted reference: same quantizer, plain list_id join
-    cents = kmeans_centroids(e, "vec_id", "embedding", n_lists, 2)
-    assigned = _nearest_lists(
-        _spread(e), cents, "embedding", ("vec_id", "id"), "v", 2,
-        norm_out="__vn",
-    )
-    a = assigned.select(
-        "list_id", F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("__vn").alias("__na"),
-    )
-    b = assigned.select(
-        "list_id", F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("__vn").alias("__nb"),
-    )
-    ref = (
-        a.join(b, "list_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.4)
-        .distinct()
-    )
-    assert _rows(got) == _rows(ref)
-
-
-def test_semantic_dedup_high_list_count_plans_unsalted(spark):
-    """Scale-adaptivity: with n_lists >= cores, salts == 1 and the plan
-    must be the EXACT unsalted shape (no salt column, no replication) —
-    the salting is a low-cardinality-key treatment, not a constant tuned
-    to the local core count."""
-    from s3_glue_redshift_guide_spark.llm.similarity import (
-        semantic_dedup_pairs,
-    )
-
-    e = _emb(spark)
-    par = spark.sparkContext.defaultParallelism
-    # use_arrow=False: plan-shape pin for the retained fold path
-    df = semantic_dedup_pairs(
-        e, threshold=0.4, n_lists=max(par, 16), n_probe=2, kmeans_iters=0,
-        use_arrow=False,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" not in plan, plan
