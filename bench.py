@@ -10,7 +10,7 @@ Each query is materialized with the noop sink (all columns computed, nothing
 collected to the driver) so timings reflect full plan execution, not
 driver-side transfer. Warm-up absorbs JVM/codegen startup and spins up the
 Arrow Python-worker pool; each query then runs a fixed ``RUNS`` times and
-reports the MIN (BENCH_DETAIL.json adds the median) — single-shot numbers
+reports the MIN (.bench/BENCH_DETAIL.json adds the median) — single-shot numbers
 on a fresh JVM carry 1-5 s of one-time codegen / worker-fork noise that
 says nothing about the plan (steady-state is what a long-running cluster
 job sees).
@@ -52,7 +52,7 @@ HEADLINE = [
 # the largest generated classes in the suite); by the third execution C2 has
 # compiled the hot paths and timings converge to what a long-running cluster
 # job sees. Every query runs exactly RUNS timed passes; the headline is the
-# per-query min, and BENCH_DETAIL.json also records the median so a reader
+# per-query min, and .bench/BENCH_DETAIL.json also records the median so a reader
 # can tell a quiet-window min from a typical pass. Override with
 # SPARK_GRAFT_BENCH_RUNS.
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -458,12 +458,15 @@ def main() -> None:
     # verbose annotation (per-query ratios, merge phases) outgrew
     # that window and truncated the line mid-JSON — the round's sf0.1
     # headline total vanished from the graded record (VERDICT r10 #2).
-    # So: the FULL annotated record goes to the committed sidecar
-    # BENCH_DETAIL.json, and the final stdout line is a compact
-    # headline-only JSON (totals + per-query seconds, compact
-    # separators) that stays well under 1.5 KB by construction —
+    # So: the FULL annotated record goes to the untracked sidecar
+    # .bench/BENCH_DETAIL.json (a run leaves the tree clean), and the
+    # final stdout line is a compact headline-only JSON (totals +
+    # per-query seconds, compact separators) that stays well under
+    # 1.5 KB by construction —
     # 12 headline + ~9 table-format + 12 sf1 keys at ~33 bytes each.
-    with open(os.path.join(REPO, "BENCH_DETAIL.json"), "w") as fh:
+    detail = os.path.join(".bench", "BENCH_DETAIL.json")
+    os.makedirs(os.path.join(REPO, ".bench"), exist_ok=True)
+    with open(os.path.join(REPO, detail), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     compact = {
         "metric": out["metric"],
@@ -472,7 +475,7 @@ def main() -> None:
         "sf": out["sf"],
         "queries": out["queries"],
         "table_format_total_sec": out["table_format"]["value"],
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail,
     }
     if "sf1" in out:
         compact["sf1_total_sec"] = out["sf1"]["value"]

@@ -57,40 +57,8 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-_TWS_CHECKED = False
-
-
-def _warn_if_transform_with_state_unavailable() -> None:
-    """One-time capability probe: transformWithState (streaming/stateful_v2)
-    needs google.protobuf for its state-server wire protocol. Log the
-    degradation at session configure so the fallback to the v1
-    applyInPandasWithState operators is visible, not silent."""
-    global _TWS_CHECKED
-    if _TWS_CHECKED:
-        return
-    _TWS_CHECKED = True
-    from importlib.util import find_spec
-
-    try:
-        # find_spec raises (rather than returning None) when the parent
-        # ``google`` namespace package is absent entirely
-        have_protobuf = find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        have_protobuf = False
-    if not have_protobuf:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "google.protobuf is not installed: transformWithState operators "
-            "(streaming/stateful_v2.py) cannot run; stateful processing "
-            "degrades to the applyInPandasWithState v1 path with identical "
-            "semantics."
-        )
-
-
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-owned session (idempotent)."""
-    _warn_if_transform_with_state_unavailable()
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -115,15 +83,26 @@ def configure(spark: SparkSession) -> SparkSession:
 
 def get_spark(app_name: str = "s3_glue_redshift_guide_spark",
               cpus: int | None = None) -> SparkSession:
-    """Local session sized from $SPARK_GRAFT_CPUS (default: all cores)."""
+    """Local session sized from $SPARK_GRAFT_CPUS (default: all cores).
+
+    Python workers get the package's parent directory on their
+    PYTHONPATH (ahead of any inherited value): a module-level kernel
+    pickles by reference, so a driver that found the package through
+    ``sys.path`` alone, started outside the checkout, would otherwise
+    fail every such task with ``ModuleNotFoundError``."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.sql.warehouse.dir", os.path.join(os.path.dirname(__file__), "..", ".spark-warehouse"))
     )
     for k, v in RUNTIME_CONFS.items():

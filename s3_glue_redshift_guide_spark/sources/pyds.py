@@ -10,10 +10,10 @@ source, executors open only their own file (pyarrow, yielding Arrow
 RecordBatches — zero row-at-a-time Python), and skipped files never get a
 task. This is the pure-Python equivalent of a DSv2 table-format connector
 (what delta-rs / iceberg-python do natively). Manifest resolution, the
-zone-map overlap test, and the atomic publish are the SAME code
-``SnapshotTable`` uses (`snapshots.latest_version/load_manifest/
-zone_prune/publish_version`) — the connector cannot silently diverge from
-the table's own semantics.
+zone-map overlap test, the manifest carry-forward rule, and the atomic
+publish are the SAME code ``SnapshotTable`` uses (`snapshots.
+latest_version/load_manifest/zone_prune/carry_forward/publish_version`)
+— the connector cannot silently diverge from the table's own semantics.
 
 Filter pushdown is PRUNING-ONLY by design: ``pushFilters`` records range
 predicates on stats-tracked columns to shrink the partition list, but
@@ -64,8 +64,8 @@ from .snapshots import (
     _bloom_might_contain,
     resolve_path_key,
     _footer_stats_one,
-    _footer_num_rows,
     _json_scalar_value,
+    carry_forward,
     encode_partition_value,
     extend_schema_map,
     latest_version,
@@ -1597,16 +1597,16 @@ class SnapshotDataWriter(DataSourceArrowWriter):
     # ------------------------------------------------- commit protocol
     def _commit_with_retry(self, messages, txn_update=None) -> None:
         """The one manifest-commit loop every connector write path uses:
-        optimistic-concurrency retry, the FULL manifest metadata carried
-        forward through every commit — txn map, deletion vectors, the
-        field-id schema map (extended with any columns this write
-        introduces), and CHECK constraints — exactly mirroring
-        ``SnapshotTable._publish``; plus tracked-stat-column backfill,
-        append/overwrite base handling, the empty-write no-op, and the
-        constraint veto. Carrying only ``txn`` here was a reproduced
-        silent-wrong-answer bug: an append onto a table with deletion
-        vectors RESURRECTED the deleted rows (manifest dv reset),
-        reverted renames, and erased constraints."""
+        the constraint veto, the empty-write no-op, then an
+        optimistic-concurrency retry that re-reads the head, refuses the
+        commit when a writer contract changed under it (constraints,
+        generated columns, defaults, identity, strict enforcement, the
+        partition spec), skips a replayed streaming epoch, backfills
+        the stat columns the table tracks, and publishes. The manifest
+        metadata is ``carry_forward`` of the head — the same rule
+        ``SnapshotTable._publish`` applies — with this writer's own
+        overrides: the schema map extended with the columns it
+        introduces and the banked reader types widened by its batch."""
         import os
 
         files = sorted(p for m in messages if m for p in m.files())
@@ -1657,57 +1657,24 @@ class SnapshotDataWriter(DataSourceArrowWriter):
         # (appId, batchId) txn entry so replay detection has no holes.
         for _ in range(5):
             base_v = latest_version(self.root)
-            base_files: list = []
-            base_stats: dict = {}
-            txn: dict = {}
-            base_dv: dict = {}
-            base_schema = None
-            base_cons: dict = {}
-            base_gen: dict = {}
-            base_dfl: dict = {}
-            base_ident: dict = {}
-            base_sizes: dict = {}
-            base_bloom_cols: dict = {}
-            base_blooms: dict = {}
-            base_spec: list = []
-            base_tk = None
-            base_track = False
-            base_rids: dict = {}
-            base_wm = 0
-            if base_v > 0:
-                m = load_manifest(self.root, base_v)
-                base_stats, txn = m["stats"], dict(m.get("txn", {}))
-                base_dv = dict(m.get("dv", {}))
-                base_schema = m.get("schema")
-                base_cons = dict(m.get("constraints", {}))
-                base_gen = dict(m.get("generated", {}))
-                base_dfl = dict(m.get("defaults", {}))
-                base_ident = dict(m.get("identity", {}))
-                base_sizes = dict(m.get("sizes") or {})
-                base_bloom_cols = dict(m.get("bloom_cols") or {})
-                base_blooms = dict(m.get("blooms") or {})
-                base_spec = list(m.get("partition_spec") or [])
-                base_tk = m.get("transform_keys")
-                base_track = bool(m.get("row_tracking"))
-                base_rids = dict(m.get("row_ids") or {})
-                base_wm = int(m.get("row_id_watermark", 0))
-                if not self.overwrite:
-                    base_files = m["files"]
-                if txn_update:
-                    app, batch = txn_update
-                    if txn.get(app) is not None and txn[app] >= batch:
-                        # replayed epoch: already durable — reclaim dupes
-                        reclaim()
-                        return
+            m = load_manifest(self.root, base_v) if base_v > 0 else {}
+            base_stats = m.get("stats") or {}
+            if txn_update:
+                app, batch = txn_update
+                done = (m.get("txn") or {}).get(app)
+                if done is not None and done >= batch:
+                    # replayed epoch: already durable — reclaim dupes
+                    reclaim()
+                    return
             # a constraint REGISTERED AFTER this writer snapshotted its
             # set was never checked against the written rows — fail the
             # commit rather than publish unverified data (the metadata
             # analogue of a manifest conflict; the write retries
             # cleanly with the new constraint in force)
             unchecked = (
-                (set(base_cons) - set(self.constraints))
-                | (set(base_gen) - set(self.generated))
-                | (set(base_dfl) - set(self.defaults))
+                (set(m.get("constraints") or ()) - set(self.constraints))
+                | (set(m.get("generated") or ()) - set(self.generated))
+                | (set(m.get("defaults") or ()) - set(self.defaults))
             )
             if unchecked and files:
                 reclaim()
@@ -1719,21 +1686,18 @@ class SnapshotDataWriter(DataSourceArrowWriter):
             # identity registered concurrently: this writer's files
             # carry no ids (construction refused pre-existing identity
             # tables) — publishing would surface NULL identity rows
-            if base_ident and files:
+            if m.get("identity") and files:
                 reclaim()
                 raise CommitConflict(
-                    f"identity column(s) {sorted(base_ident)} were "
+                    f"identity column(s) {sorted(m['identity'])} were "
                     "registered concurrently with this write — retry "
                     "via SnapshotTable.commit_append"
                 )
             # strict enforcement registered after this writer checked
             # its columns: the staged files were never validated under
             # the new mode — fail the commit, the retry re-checks
-            base_evo = (
-                m.get("evolution") if base_v > 0 else None
-            )
             if (
-                base_evo == "strict"
+                m.get("evolution") == "strict"
                 and self.evolution != "strict"
                 and files
             ):
@@ -1747,11 +1711,7 @@ class SnapshotDataWriter(DataSourceArrowWriter):
             # __part_ segments encode the spec snapshotted at
             # construction. A spec DROPPED concurrently is harmless:
             # extra segments are truthful and prune fine.
-            head_spec = (
-                list(m.get("partition_spec") or [])
-                if base_v > 0
-                else []
-            )
+            head_spec = list(m.get("partition_spec") or [])
             if head_spec and head_spec != self.partition_spec and files:
                 reclaim()
                 raise CommitConflict(
@@ -1764,142 +1724,48 @@ class SnapshotDataWriter(DataSourceArrowWriter):
             # uniform stat schema: backfill columns the table already
             # tracks but this write's statsCols omitted (O(new files)
             # footer reads, same cost class as the write itself)
-            tracked = set().union(
-                *(set(s) for s in base_stats.values()), set()
-            ) if base_stats else set()
+            tracked = set().union(*(set(s) for s in base_stats.values()))
             missing = sorted(tracked - set(self.stats_cols))
             if missing:
                 for p in files:
                     extra_stats = _footer_stats_one(p, missing)
                     stats[p] = {**extra_stats, **stats.get(p, {})}
-            if txn_update:
-                txn[txn_update[0]] = txn_update[1]
-            visible = base_files + files
-            # dv entries survive only for files still visible: append
-            # keeps every base file (tombstones stay live), overwrite
-            # replaces the file set (its dv map legitimately clears)
-            dv = {
-                f: v
-                for f, v in base_dv.items()
-                if f in set(visible) and v
-            }
+            # the widened reader schema carries AND extends with this
+            # write's column types (wider batches widen further; new
+            # columns register; a cross-family conflict fails the commit)
+            types = dict(m.get("types") or {})
             try:
                 schema = extend_schema_map(
-                    base_schema, self.field_names
+                    m.get("schema"), self.field_names
                 )
-            except ValueError:
-                reclaim()  # dropped-name reuse: files must not leak
-                raise
-            extra: dict = {}
-            if txn:
-                extra["txn"] = txn
-            if dv:
-                extra["dv"] = dv
-            if schema is not None:
-                extra["schema"] = schema
-            if base_cons:
-                extra["constraints"] = base_cons
-            if base_gen:
-                extra["generated"] = base_gen
-            if base_dfl:
-                extra["defaults"] = base_dfl
-            if base_ident:
-                extra["identity"] = base_ident
-            if base_evo:
-                extra["evolution"] = base_evo
-            # per-file sizes ride the manifest like stats (OPTIMIZE /
-            # join-advisor planning from pure metadata): carried files
-            # keep their banked value, this writer's new shards stat
-            # once here at commit
-            sizes_map = {
-                f: s
-                for f, s in base_sizes.items()
-                if f in set(visible)
-            }
-            for f in files:
-                try:
-                    sizes_map[f] = os.path.getsize(f)
-                except OSError:
-                    pass
-            if sizes_map:
-                extra["sizes"] = sizes_map
-            # the remaining metadata families carry exactly as
-            # SnapshotTable._publish carries them — dropping ANY of
-            # them through a connector commit is the r5 resurrect-bug
-            # shape. Bloom sidecars survive for still-visible files
-            # (this writer's new files simply lack sidecars = read
-            # conservatively until the next table-side extension);
-            if base_bloom_cols:
-                extra["bloom_cols"] = base_bloom_cols
-                blooms = {
-                    f: v
-                    for f, v in base_blooms.items()
-                    if f in set(visible)
-                }
-                if blooms:
-                    extra["blooms"] = blooms
-            # the partition spec carries — this writer's shards were
-            # laid out under exactly this spec (a changed spec
-            # conflicted above; a dropped one stops carrying);
-            if base_spec:
-                extra["partition_spec"] = base_spec
-            # the transform-key record carries verbatim (cumulative —
-            # pruning resolves path keys from it; see resolve_path_key)
-            if base_tk is not None:
-                extra["transform_keys"] = base_tk
-            # ANALYZE sketches carry verbatim (this commit's new files
-            # are simply uncovered until the next analyze run — the
-            # estimate path refuses rather than undercounts);
-            if base_v > 0 and m.get("ndv"):
-                extra["ndv"] = m["ndv"]
-            # widened reader schema: carry AND extend with this write's
-            # column types (wider batches widen further; new columns
-            # register; a cross-family conflict fails the commit)
-            if base_v > 0 and m.get("types"):
-                types = dict(m["types"])
-                try:
+                if types:
                     for name, dt in self.field_types.items():
                         cur = types.get(name)
-                        types[name] = (
-                            widen_merge(cur, dt) if cur else dt
-                        )
-                except ValueError:
-                    reclaim()
-                    raise
-                extra["types"] = types
-            # and row tracking assigns this commit's new files their
-            # [base_row_id, num_rows] ranges (footer row counts, the
-            # same cost class as the stats backfill above)
-            if base_track:
-                extra["row_tracking"] = True
-                rid = {
-                    f: v
-                    for f, v in base_rids.items()
-                    if f in set(visible)
-                }
-                wm = base_wm
-                for b, n in rid.values():
-                    wm = max(wm, int(b) + int(n))
-                for f in sorted(set(visible) - set(rid)):
-                    n = _footer_num_rows(f)
-                    rid[f] = [wm, n]
-                    wm += n
-                extra["row_ids"] = rid
-                extra["row_id_watermark"] = wm
-            extra["op"] = (
-                "STREAMING "
-                if isinstance(self, SnapshotStreamWriter)
-                else ""
-            ) + ("OVERWRITE" if self.overwrite else "WRITE")
+                        types[name] = widen_merge(cur, dt) if cur else dt
+            except ValueError:
+                reclaim()  # dropped-name reuse / type conflict: no leak
+                raise
+            # overwrite replaces the file set (its dv map legitimately
+            # clears); append keeps every base file and its tombstones
+            visible = ([] if self.overwrite else m.get("files", [])) + files
+            extra = carry_forward(
+                m,
+                visible,
+                op=(
+                    "STREAMING "
+                    if isinstance(self, SnapshotStreamWriter)
+                    else ""
+                ) + ("OVERWRITE" if self.overwrite else "WRITE"),
+                txn_update=dict([txn_update]) if txn_update else None,
+                schema=schema,
+                types=types,
+            )
             try:
                 publish_version(
                     self.root,
                     visible,
                     base_v,
-                    {
-                        **(base_stats if not self.overwrite else {}),
-                        **stats,
-                    },
+                    {**({} if self.overwrite else base_stats), **stats},
                     extra=extra or None,
                 )
                 return

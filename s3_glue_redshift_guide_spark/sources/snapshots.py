@@ -846,6 +846,93 @@ def publish_version(
     return v
 
 
+#: distinct "not passed" sentinel for carry_forward's overrides:
+#: ``None`` is a MEANINGFUL value (omit the family — e.g. restore/clone
+#: publishing a version that predates the first rename must drop the
+#: head's schema map, not inherit it)
+_UNSET = object()
+
+#: manifest keys a commit never carries: publish_version writes the
+#: positional ones itself and ``op`` labels one commit only
+_UNCARRIED = ("version", "files", "stats", "ts", "protocol", "op")
+
+#: families whose EMPTY value still means something and is banked: an
+#: empty transform-key record says "every path key is identity", while
+#: no record sends pruning to the legacy name heuristic
+_KEEP_EMPTY = ("schema", "transform_keys")
+
+
+def carry_forward(
+    base: dict,
+    files: list[str],
+    op: str | None = None,
+    txn_update: dict | None = None,
+    copied_update: dict | None = None,
+    row_ids_seed: dict | None = None,
+    **overrides,
+) -> dict:
+    """The ``extra`` dict of a commit publishing ``files`` on top of the
+    ``base`` manifest — the ONE carry-forward rule every log writer
+    (``SnapshotTable._publish`` and the pysnapshot connector) applies:
+
+    * every key ``base`` banks carries, except ``_UNCARRIED``;
+    * an override (keyed by manifest key; ``_UNSET`` = not passed)
+      replaces the carried value; ``None`` or empty omits the family
+      (``_KEEP_EMPTY`` families are omitted only by ``None``);
+    * ``txn_update`` / ``copied_update`` merge into the streaming txn
+      map and the COPY INTO ledger (replay detection must survive
+      every interleaved commit);
+    * the per-file maps (``dv``, ``blooms``, ``sizes``, ``row_ids``)
+      keep only visible files; a new file's byte size is stat'ed once
+      here, and under row tracking it draws a fresh
+      ``[base_row_id, num_rows]`` range past the watermark
+      (``row_ids_seed`` re-publishes a restored/cloned file's range).
+
+    Pure apart from the O(new files) size stats and footer row counts."""
+    extra = {k: v for k, v in base.items() if k not in _UNCARRIED}
+    extra.update((k, v) for k, v in overrides.items() if v is not _UNSET)
+    for k, upd in (("txn", txn_update), ("copied", copied_update)):
+        if upd:
+            extra[k] = {**(extra.get(k) or {}), **upd}
+    visible = set(files)
+    for k in ("dv", "blooms"):
+        extra[k] = {
+            f: v for f, v in (extra.get(k) or {}).items()
+            if f in visible and v
+        }
+    carried_sizes = extra.get("sizes") or {}
+    extra["sizes"] = sizes = {}
+    for f in files:
+        s = carried_sizes.get(f)
+        if s is None:
+            try:
+                s = os.path.getsize(f)
+            except OSError:
+                continue
+        sizes[f] = int(s)
+    extra = {
+        k: v for k, v in extra.items()
+        if v or (k in _KEEP_EMPTY and v is not None)
+    }
+    rid = {**extra.pop("row_ids", {}), **(row_ids_seed or {})}
+    wm = int(extra.pop("row_id_watermark", 0))
+    if extra.get("row_tracking"):
+        rid = {f: r for f, r in rid.items() if f in visible}
+        # the watermark only ever grows: past the base's and past every
+        # kept range (seeded ranges may come from a log the base never
+        # saw)
+        for b, n in rid.values():
+            wm = max(wm, int(b) + int(n))
+        for f in sorted(visible - set(rid)):
+            n = _footer_num_rows(f)
+            rid[f] = [wm, n]
+            wm += n
+        extra.update(row_tracking=True, row_ids=rid, row_id_watermark=wm)
+    if op:
+        extra["op"] = op
+    return extra
+
+
 def extend_schema_map(sm, col_names) -> list[dict] | None:
     """A commit that introduces columns while a field-id map exists
     must register them (fresh ids) so later renames can track them.
@@ -1193,13 +1280,6 @@ def encode_partition_value(val) -> str | None:
 #: every user-facing read; surfaced as ``_row_id`` on request.
 ROW_ID_COL = "__row_id"
 
-#: distinct "not passed" sentinel for _publish's metadata overrides:
-#: ``None`` is a MEANINGFUL value for the schema map (= table uses
-#: physical names) and restore/clone must be able to publish it
-#: explicitly instead of inheriting the base version's map
-_UNSET = object()
-
-
 class SnapshotTable:
     def __init__(
         self, spark: SparkSession, root: str, clock=None
@@ -1437,213 +1517,40 @@ class SnapshotTable:
         identity=_UNSET,
         evolution=_UNSET,
     ) -> int:
-        # carry the txn map (streaming writers' appId -> batchId records),
-        # the deletion-vector map, the field-id schema map, and the CHECK
-        # constraints forward through EVERY commit — replay detection,
-        # merge-on-read deletes, renames, and writer contracts must
-        # survive interleaved table commits (the Delta txn invariant,
-        # extended to the other metadata families). DV entries survive
-        # only for files still visible (a rewritten file's deletes are
-        # materialized in its replacement). Overrides use the _UNSET
-        # sentinel, NOT None: None is a real value for the schema map
-        # ("physical names, no renames") that restore/clone must be able
-        # to publish explicitly instead of inheriting the base's map.
+        """Publish ``files`` as version ``base_version + 1``. The
+        manifest's metadata is ``carry_forward`` of the base manifest
+        with the given overrides (each keyword names one family;
+        ``_UNSET`` carries the base's value, ``None`` or empty omits
+        it). The one table-side step on top: the identity HIGH-WATER
+        MARK advances to the new files' footer max — the highest id any
+        writer actually committed, so it can never understate (O(new
+        files) footer reads, fanned out past the stats threshold)."""
         base = (
-            load_manifest(self.root, base_version)
-            if base_version > 0
-            else {"txn": {}, "dv": {}, "schema": None}
+            load_manifest(self.root, base_version) if base_version > 0
+            else {}
         )
-        txn = base.get("txn", {})
-        if txn_update:
-            # Delta's idempotent-writer txn action, exposed to batch
-            # commits: an application-level (appId -> watermark) record
-            # publishes ATOMICALLY with the data it describes — the MV
-            # refresh cursor, for one, can never run ahead of or behind
-            # its own state commit.
-            txn = {**txn, **txn_update}
-        if dv is _UNSET or dv is None:
-            dv = base.get("dv", {})
-        dv = {f: v for f, v in dv.items() if f in set(files) and v}
-        if schema_map is _UNSET:
-            schema_map = base.get("schema")
-        if constraints is _UNSET:
-            constraints = base.get("constraints")
-        extra: dict = {}
-        if txn:
-            extra["txn"] = txn
-        if dv:
-            extra["dv"] = dv
-        if schema_map is not None:
-            extra["schema"] = schema_map
-        if constraints:
-            extra["constraints"] = constraints
-        if generated is _UNSET:
-            generated = base.get("generated")
-        if generated:
-            extra["generated"] = generated
-        # schema-enforcement mode: a table property like constraints
-        if evolution is _UNSET:
-            evolution = base.get("evolution")
-        if evolution:
-            extra["evolution"] = evolution
-        # column DEFAULTs: a writer contract like constraints — carried
-        # through every commit
-        if defaults is _UNSET:
-            defaults = base.get("defaults")
-        if defaults:
-            extra["defaults"] = defaults
-        # identity columns: the spec carries like constraints, and the
-        # HIGH-WATER MARK advances here, at the single choke point every
-        # write path crosses — the new files' footer max is the highest
-        # id any writer actually committed, so the watermark can never
-        # understate (O(new files) footer reads, fanned out as a job
-        # past the same threshold as the stats merge)
-        if identity is _UNSET:
-            identity = base.get("identity")
-        if identity:
-            identity = {c: dict(v) for c, v in identity.items()}
-            base_fset = set(base.get("files", []))
-            new_files = [f for f in files if f not in base_fset]
-            if new_files:
-                fstats = self._footer_stats(
-                    new_files, list(identity)
-                )
-                for c, meta in identity.items():
-                    hi = int(meta["high"])
-                    for f in new_files:
-                        mm = (fstats.get(f) or {}).get(c)
-                        if mm is not None:
-                            hi = max(hi, int(mm[1]))
-                    meta["high"] = hi
-            extra["identity"] = identity
-        # bloom index: registered columns carry like constraints; the
-        # per-file sidecar pointers carry like dv — immutable files keep
-        # their blooms, vanished files drop theirs (a rewritten file's
-        # replacement reads unconditionally until re-indexed)
-        if bloom_cols is _UNSET:
-            bloom_cols = base.get("bloom_cols")
-        if bloom_cols:
-            extra["bloom_cols"] = bloom_cols
-        if blooms is _UNSET:
-            blooms = base.get("blooms", {})
-        blooms = {
-            f: v for f, v in (blooms or {}).items() if f in set(files)
-        }
-        if blooms:
-            extra["blooms"] = blooms
-        if op:
-            # operation label for DESCRIBE HISTORY — audit metadata
-            # only, never read-path semantics (old manifests without it
-            # report "UNKNOWN")
-            extra["op"] = op
-        # partition spec: a TABLE-LEVEL layout contract like constraints
-        # — carried through every commit; per-file partition tuples are
-        # never banked here because the file PATHS encode them (parsed
-        # on demand), so spec evolution needs no manifest rewrite
-        if partition_spec is _UNSET:
-            partition_spec = base.get("partition_spec")
-        if partition_spec:
-            extra["partition_spec"] = list(partition_spec)
-        # the cumulative transform-key record (path key -> {fn,col,n})
-        # carries like the spec itself — pruning resolves path keys
-        # from it (resolve_path_key) instead of reverse-guessing names
-        if transform_keys is _UNSET:
-            transform_keys = base.get("transform_keys")
-        if transform_keys is not None:
-            extra["transform_keys"] = transform_keys
-        # table properties (SET TBLPROPERTIES): operational metadata,
-        # carried verbatim like constraints
-        if properties is _UNSET:
-            properties = base.get("properties")
-        if properties:
-            extra["properties"] = properties
-        # ANALYZE sketches: registered cols + sidecar pointers carry
-        # like constraints (sidecar rows for vanished files are simply
-        # ignored at estimate time; coverage re-checks per read)
-        if ndv is _UNSET:
-            ndv = base.get("ndv")
-        if ndv:
-            extra["ndv"] = ndv
-        # equi-height histograms (ANALYZE ... WITH HISTOGRAM) carry
-        # forward like NDV — advisory statistics with a banked as_of
-        # version, so consumers can judge staleness themselves
-        if histograms is _UNSET:
-            histograms = base.get("histograms")
-        if histograms:
-            extra["histograms"] = histograms
-        # persisted ANN index (llm/ann_index.py): quantizer + code
-        # sidecars carry like ndv; VACUUM sweeps unreferenced ann_ dirs
-        if ann is _UNSET:
-            ann = base.get("ann")
-        if ann:
-            extra["ann"] = ann
-        # COPY INTO's ingested-source ledger: carries like the txn map
-        # (replay detection must survive interleaved commits)
-        copied = base.get("copied", {})
-        if copied_update:
-            copied = {**copied, **copied_update}
-        if copied:
-            extra["copied"] = copied
-        # per-file byte sizes ride the manifest like stats: a NEW file
-        # stats once at commit time, carried files keep their banked
-        # value (immutable bytes) — so OPTIMIZE planning and the join
-        # advisor read sizes from the log instead of issuing 100k
-        # driver-side stat calls against object storage
-        carried_sizes = base.get("sizes") or {}
-        sizes_map: dict[str, int] = {}
-        for f in files:
-            s = carried_sizes.get(f)
-            if s is None:
-                try:
-                    s = os.path.getsize(f)
-                except OSError:
-                    s = None
-            if s is not None:
-                sizes_map[f] = int(s)
-        if sizes_map:
-            extra["sizes"] = sizes_map
-        # widened column types: the banked reader schema (only present
-        # once widen_column ran; file-adding paths merge their batch's
-        # dtypes in via _merged_types so additive evolution keeps
-        # working under explicit-schema reads)
-        if types is _UNSET:
-            types = base.get("types")
-        if types:
-            extra["types"] = types
-        # row tracking (Delta's row IDs): once enabled, every visible
-        # file owns a [base_row_id, num_rows] range banked here — a
-        # row's PERMANENT id is base + its position, unless the file
-        # physically carries __row_id (a rewrite preserving older ids).
-        # Assignment happens at this single choke point, so every write
-        # path (append, replace, merge, connector catch-up via a later
-        # table commit) gets ids without knowing about them; the footer
-        # row-count reads are O(new files), the same cost class as the
-        # stats merge that already rides each commit.
-        if row_tracking is _UNSET:
-            row_tracking = base.get("row_tracking")
-        if row_tracking:
-            extra["row_tracking"] = True
-            fset = set(files)
-            # ``row_ids_seed`` lets RESTORE/CLONE re-publish a target
-            # manifest's original ranges (a restored file must keep the
-            # ids it had, not draw fresh ones)
-            carried = {
-                **(base.get("row_ids") or {}),
-                **(row_ids_seed or {}),
+        extra = carry_forward(
+            base, files, op=op, txn_update=txn_update,
+            copied_update=copied_update, row_ids_seed=row_ids_seed,
+            dv=dv, schema=schema_map, constraints=constraints,
+            generated=generated, bloom_cols=bloom_cols, blooms=blooms,
+            partition_spec=partition_spec, transform_keys=transform_keys,
+            properties=properties, row_tracking=row_tracking, ndv=ndv,
+            ann=ann, histograms=histograms, types=types,
+            defaults=defaults, identity=identity, evolution=evolution,
+        )
+        if extra.get("identity"):
+            base_files = set(base.get("files", ()))
+            new_files = [f for f in files if f not in base_files]
+            fstats = self._footer_stats(new_files, list(extra["identity"]))
+            extra["identity"] = ident = {
+                c: dict(meta) for c, meta in extra["identity"].items()
             }
-            rid = {f: v for f, v in carried.items() if f in fset}
-            # watermark only ever grows: at least the base's, and past
-            # every carried range (seeded ranges may come from a branch
-            # the base never saw)
-            wm = int(base.get("row_id_watermark", 0))
-            for b, n in rid.values():
-                wm = max(wm, int(b) + int(n))
-            for f in sorted(fset - set(rid)):
-                n = _footer_num_rows(f)
-                rid[f] = [wm, n]
-                wm += n
-            extra["row_ids"] = rid
-            extra["row_id_watermark"] = wm
+            for c, meta in ident.items():
+                for f in new_files:
+                    mm = (fstats.get(f) or {}).get(c)
+                    if mm is not None:
+                        meta["high"] = max(int(meta["high"]), int(mm[1]))
         return publish_version(
             self.root,
             files,
@@ -4745,15 +4652,7 @@ class SnapshotTable:
                 tk[e["name"]] = {
                     "fn": e["fn"], "col": e["col"], "n": e["n"]
                 }
-        if cur == 0:
-            # empty table: bank the spec as the first (file-less) commit
-            return publish_version(
-                self.root, [], 0, {},
-                extra={"partition_spec": list(cols),
-                       "transform_keys": tk,
-                       "op": "SET PARTITION SPEC"},
-                ts=self.clock() if self.clock else None,
-            )
+        # (on an empty table this is the first, file-less commit)
         return self._publish(
             m["files"], cur, m["stats"],
             partition_spec=list(cols), transform_keys=tk,
@@ -4795,23 +4694,19 @@ class SnapshotTable:
             raise ValueError(
                 f"schema.enforcement {ev!r}: use 'additive' or 'strict'"
             )
-        extra: dict = {"types": types, "op": "CREATE TABLE"}
+        tk = None
         if partition_by:
             entries = [parse_spec_entry(e) for e in partition_by]
             self._check_spec_types(entries, types, list(partition_by))
-            extra["partition_spec"] = list(partition_by)
-            extra["transform_keys"] = {
+            tk = {
                 e["name"]: {"fn": e["fn"], "col": e["col"], "n": e["n"]}
                 for e in entries
                 if e["fn"] != "identity"
             }
-        if props:
-            extra["properties"] = props
-        if ev:
-            extra["evolution"] = ev
-        return publish_version(
-            self.root, [], 0, {}, extra=extra,
-            ts=self.clock() if self.clock else None,
+        return self._publish(
+            [], 0, {}, types=types, partition_spec=partition_by,
+            transform_keys=tk, properties=props, evolution=ev,
+            op="CREATE TABLE",
         )
 
     def add_column(self, name: str, dtype: str) -> int:
@@ -5321,18 +5216,10 @@ class SnapshotTable:
         hidden from every normal read; ``read_with_row_ids`` surfaces
         ids as ``_row_id``."""
         cur = self.current_version()
-        if cur == 0:
-            return publish_version(
-                self.root, [], 0, {},
-                extra={
-                    "row_tracking": True,
-                    "row_ids": {},
-                    "row_id_watermark": 0,
-                    "op": "ENABLE ROW TRACKING",
-                },
-                ts=self.clock() if self.clock else None,
-            )
-        m = load_manifest(self.root, cur)
+        m = (
+            load_manifest(self.root, cur) if cur > 0
+            else {"files": [], "stats": {}}
+        )
         return self._publish(
             m["files"], cur, m["stats"],
             row_tracking=True, op="ENABLE ROW TRACKING",
@@ -5838,12 +5725,6 @@ class SnapshotTable:
             )
             out.write.mode("errorifexists").parquet(sidecar)
             ndv["sidecars"] = list(ndv.get("sidecars", [])) + [sidecar]
-        if cur == 0:
-            return publish_version(
-                self.root, [], 0, {},
-                extra={"ndv": ndv, "op": "ANALYZE"},
-                ts=self.clock() if self.clock else None,
-            )
         return self._publish(
             m["files"], cur, m["stats"], ndv=ndv, op="ANALYZE"
         )
@@ -6452,11 +6333,7 @@ class SnapshotTable:
     def _manifest_extra(m: dict) -> dict:
         """Everything a manifest banks beyond the positional publish
         fields — carried verbatim through fork and fast-forward."""
-        return {
-            k: v
-            for k, v in m.items()
-            if k not in ("version", "files", "stats", "ts", "protocol")
-        }
+        return {k: v for k, v in m.items() if k not in _UNCARRIED}
 
     def create_branch(
         self, name: str, version: int | None = None

@@ -5,8 +5,6 @@ sessionizer matches session_window semantics for closed sessions."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from s3_glue_redshift_guide_spark.catalog import load_table
@@ -150,51 +148,6 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     cols = ["user_id", "click_id", "buy_id"]
     assert len(_rows(got, cols)) > 0
     assert _rows(got, cols) == _rows(want, cols)
-
-
-def test_transform_with_state_matches_v1_sessionizer(spark, tmp_path):
-    """The Spark 4 transformWithState sessionizer emits exactly the same
-    closed sessions as the applyInPandasWithState one (same keys, bounds,
-    counts and totals).
-
-    transformWithState's Python worker talks to the JVM state server over
-    protobuf; without the protobuf package the driver worker crashes at
-    init, so this test skips where that dependency is absent (the operator
-    itself is plain PySpark — nothing else in the engine needs protobuf).
-    """
-    from s3_glue_redshift_guide_spark.streaming.stateful_v2 import (
-        sessionize_stream_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip(
-            "google.protobuf absent: the transformWithState Python worker "
-            "cannot reach the JVM state server in this environment; the v1 "
-            "applyInPandasWithState sessionizer covers the semantics "
-            "(test_stateful_sessionizer_matches_session_window)"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-
-    stream = read_events_stream(spark, SF_SMOKE).filter(F.col("user_id") < 8)
-    got = _run_stream(
-        sessionize_stream_v2(stream, gap_seconds=300), "t_tws", tmp_path
-    )
-    want = _run_stream(
-        sessionize_stream(
-            read_events_stream(spark, SF_SMOKE).filter(F.col("user_id") < 8),
-            gap_seconds=300,
-        ),
-        "t_tws_v1",
-        tmp_path,
-    )
-    cols = ["user_id", "session_start", "session_end", "n_events", "value_total"]
-    assert _rows(got, cols) == _rows(want, cols)
-    assert len(_rows(got, cols)) > 0
 
 
 def test_stream_interval_join_left_outer_emits_after_watermark(

@@ -2,7 +2,7 @@
 """Low-core scaling leg for the bench's sf1 scale-out block (r12,
 VERDICT-r11 #5): time the shuffle-bound LLM trio on a SMALL core count
 with the exact bench methodology (noop sink, per-query warm pass,
-min-of-N), so BENCH_DETAIL.json can record native scale-out evidence at
+min-of-N), so .bench/BENCH_DETAIL.json can record native scale-out evidence at
 the SF where parallelism is real. Run by bench.py as a subprocess (a
 SparkSession's master is fixed at startup, so the low-core leg needs its
 own JVM); also runnable standalone.
