@@ -135,10 +135,8 @@ def ann_index_refresh(table: SnapshotTable) -> int:
     if new_files:
         with open(ann["quantizer"]) as f:
             q = json.load(f)
-        fresh = (
-            table.spark.read.option("mergeSchema", "true")
-            .parquet(*new_files)
-            .select(ann["id_col"], ann["vec_col"])
+        fresh = table._scan(new_files, m_head).select(
+            ann["id_col"], ann["vec_col"]
         )
         gen_dir = os.path.join(
             ann["dir"], f"codes_{len(ann['codes'])}"

@@ -277,7 +277,7 @@ def _read_file(
     delete leg); ``extra_consts`` appends constant metadata columns
     ({name: (value, pyarrow_type)} — the CDF ``_change_type`` /
     ``_commit_version``); a declared ``_row_id`` column synthesizes
-    each row's PERMANENT id the way ``SnapshotTable._attach_row_ids``
+    each row's PERMANENT id the way ``SnapshotTable._scan``
     does — a physically-carried ``__row_id`` wins (preserved through a
     rewrite), else ``row_id_base`` + file position (NULL when the
     file's version predates row tracking). Shared by the batch and

@@ -49,6 +49,7 @@ import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def _json_scalar_value(v):
@@ -1516,19 +1517,24 @@ class SnapshotTable:
         defaults=_UNSET,
         identity=_UNSET,
         evolution=_UNSET,
+        base: dict | None = None,
     ) -> int:
         """Publish ``files`` as version ``base_version + 1``. The
         manifest's metadata is ``carry_forward`` of the base manifest
         with the given overrides (each keyword names one family;
         ``_UNSET`` carries the base's value, ``None`` or empty omits
-        it). The one table-side step on top: the identity HIGH-WATER
+        it). ``base`` carries from another table's manifest instead of
+        this log's ``base_version`` (a clone's first commit). The one
+        table-side step on top: the identity HIGH-WATER
         MARK advances to the new files' footer max — the highest id any
         writer actually committed, so it can never understate (O(new
         files) footer reads, fanned out past the stats threshold)."""
-        base = (
-            load_manifest(self.root, base_version) if base_version > 0
-            else {}
-        )
+        if base is None:
+            base = (
+                load_manifest(self.root, base_version)
+                if base_version > 0
+                else {}
+            )
         extra = carry_forward(
             base, files, op=op, txn_update=txn_update,
             copied_update=copied_update, row_ids_seed=row_ids_seed,
@@ -1561,12 +1567,6 @@ class SnapshotTable:
         )
 
     # --------------------------------------------- deletion-vector reads
-    #: expression turning ``_metadata.file_path`` URIs (file:///x or
-    #: file:/x) back into the plain paths the manifest stores
-    @staticmethod
-    def _plain_path(col):
-        return F.regexp_replace(col, "^file:(//)?", "")
-
     #: sidecar bytes above which the DV anti-join stops hinting a
     #: broadcast: point deletes (KBs) broadcast; a wide delete's
     #: millions of positions shuffle-join instead of flooding executors
@@ -1582,17 +1582,16 @@ class SnapshotTable:
     #: explicit schema skips Spark's footer schema-inference job
     DV_SCHEMA = "__dv_file string, __dv_pos bigint"
 
-    def _read_sidecars(self, *dirs: str) -> DataFrame:
-        return self.spark.read.schema(self.DV_SCHEMA).parquet(*dirs)
-
     def _dv_rows(self, dv: dict[str, list[str]]) -> DataFrame:
         """The (file, position) pairs of every sidecar in ``dv``, deduped
         (re-deleting an already-deleted row must stay idempotent).
         Broadcast-hinted only while the sidecars are point-delete sized
         (one cheap metadata stat of the sidecar dirs decides)."""
         dirs = sorted({d for lst in dv.values() for d in lst})
-        df = self._read_sidecars(*dirs).dropDuplicates(
-            ["__dv_file", "__dv_pos"]
+        df = (
+            self.spark.read.schema(self.DV_SCHEMA)
+            .parquet(*dirs)
+            .dropDuplicates(["__dv_file", "__dv_pos"])
         )
         size = 0
         for d in dirs:
@@ -1606,74 +1605,109 @@ class SnapshotTable:
                 break
         return F.broadcast(df) if size <= self.DV_BROADCAST_MAX_BYTES else df
 
-    def _reader_schema(self, m: dict | None) -> str | None:
-        """Explicit reader schema (DDL) once the manifest banks WIDENED
-        column types (``widen_column``): a mergeSchema footer union
-        CRASHES on mixed-width files (an int32-era file next to an
-        int64-era one), while an explicit wider schema upcasts at scan
-        time — that is the whole type-widening mechanism, zero
-        rewrites. Prior physical names of renamed fields read under
-        the field's widened type (both eras), and the row-tracking
-        column rides along when enabled. None = no widening banked,
-        reads keep the ordinary mergeSchema path."""
-        types = (m or {}).get("types")
+    @staticmethod
+    def _reader_types(m: dict) -> dict[str, str] | None:
+        """The banked reader schema as ``{physical name: type}`` once
+        the manifest banks WIDENED column types (``widen_column``):
+        prior physical names of renamed fields read under the field's
+        widened type (both eras), and the row-tracking column rides
+        along when enabled. None = no widening banked."""
+        types = m.get("types")
         if not types:
             return None
         fields = dict(types)
-        for ent in (m or {}).get("schema") or []:
+        for ent in m.get("schema") or []:
             t = fields.get(ent["name"])
             if not t:
                 continue
             for p in ent.get("prior", []):
                 fields.setdefault(p, t)
-        if (m or {}).get("row_tracking"):
+        if m.get("row_tracking"):
             fields.setdefault(ROW_ID_COL, "bigint")
-        return ", ".join(f"`{n}` {t}" for n, t in fields.items())
+        return fields
 
-    def _masked_read(
+    def _scan(
         self,
         files: list[str],
-        dv: dict,
-        keep_provenance: bool = False,
-        manifest: dict | None = None,
+        m: dict,
+        mask: bool = True,
+        provenance: bool = False,
+        row_ids: str | None = None,
+        smap=_UNSET,
     ) -> DataFrame:
-        """mergeSchema read of ``files`` with deletion vectors applied:
-        each row's (file, row_index) provenance — free metadata columns,
-        no widening of the parquet scan — anti-joins the BROADCAST dv
-        rowset. DVs are the POINT-delete path (GDPR rows, late
-        corrections), so the broadcast is KBs; bulk deletes belong to
-        ``commit_replace``, which rewrites instead of tombstoning.
-        ``keep_provenance`` keeps the ``__fp``/``__pos`` columns (and a
-        physically-present ``__row_id``) for callers that need row
-        identity — the default HIDES the row-tracking column from
-        user-facing reads. ``manifest`` switches to an explicit-schema
-        read when the version banks widened types."""
-        relevant = {f: dv[f] for f in files if dv.get(f)}
-        rs = self._reader_schema(manifest)
-        df = (
-            self.spark.read.schema(rs).parquet(*files)
-            if rs
-            else self.spark.read.option("mergeSchema", "true")
-            .parquet(*files)
-        )
-        if keep_provenance or relevant:
+        """THE read of a snapshot's data files: every path that turns
+        manifest files into rows comes through here, so these decisions
+        are made once.
+
+        * Reader: the explicit banked reader schema (``_reader_types``)
+          when the manifest banks widened types — a mergeSchema footer
+          union CRASHES on mixed-width files, an explicit wider schema
+          upcasts them at scan time, which is the whole type-widening
+          mechanism — else a mergeSchema union (additive evolution:
+          older files surface newer columns as NULL). Zero ``files``
+          under a banked schema is a typed empty frame.
+        * Provenance: each row's ``__dv_file`` (plain path) and
+          ``__dv_pos`` (``_metadata.row_index``) — free metadata
+          columns, the same pair every tombstone sidecar stores.
+          ``provenance`` keeps them in front of the output.
+        * Deletion vectors (``mask``): positions the manifest
+          tombstones anti-join away against the sidecar rows
+          (broadcast while point-delete sized, ``_dv_rows``).
+        * Row ids: ``row_ids`` names an output column carrying each
+          row's PERMANENT id — a physically-carried ``__row_id``
+          (preserved through an earlier rewrite) wins, else the file's
+          banked base + row position (a broadcast of O(files) rows).
+          Otherwise the physical ``__row_id`` stays hidden.
+        * Field-id projection through ``smap`` (default: ``m``'s own
+          map; the change feed reads old files through the newer map,
+          preserving rewrites pass None to keep physical names)."""
+        fields = self._reader_types(m)
+        if fields:
+            ddl = ", ".join(f"`{n}` {t}" for n, t in fields.items())
+            df = self.spark.read.schema(ddl).parquet(*files)
+        else:
+            df = self.spark.read.option("mergeSchema", "true").parquet(
+                *files
+            )
+        dv = {f: m["dv"][f] for f in files if mask and m["dv"].get(f)}
+        if provenance or row_ids or dv:
             df = df.withColumns(
                 {
-                    "__fp": self._plain_path(F.col("_metadata.file_path")),
-                    "__pos": F.col("_metadata.row_index"),
+                    # file:///x or file:/x URIs back to the plain paths
+                    # the manifest stores
+                    "__dv_file": F.regexp_replace(
+                        F.col("_metadata.file_path"), "^file:(//)?", ""
+                    ),
+                    "__dv_pos": F.col("_metadata.row_index"),
                 }
             )
-        if relevant:
-            dvr = self._dv_rows(relevant)
+        if dv:
+            dvr = self._dv_rows(dv)
             df = df.join(
                 dvr,
-                (df["__fp"] == dvr["__dv_file"])
-                & (df["__pos"] == dvr["__dv_pos"]),
+                (df["__dv_file"] == dvr["__dv_file"])
+                & (df["__dv_pos"] == dvr["__dv_pos"]),
                 "left_anti",
             )
-        if not keep_provenance:
-            df = df.drop("__fp", "__pos", ROW_ID_COL)
-        return df
+        keep: tuple[str, ...] = ()
+        if row_ids:
+            bases = self.spark.createDataFrame(
+                [(f, int(r[0])) for f, r in (m.get("row_ids") or {}).items()],
+                "__dv_file string, __rid_base long",
+            )
+            df = df.join(F.broadcast(bases), "__dv_file", "left")
+            fresh = (F.col("__rid_base") + F.col("__dv_pos")).cast("long")
+            if ROW_ID_COL in df.columns:
+                fresh = F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
+            df = df.withColumn(row_ids, fresh).drop("__rid_base")
+            keep = (row_ids,)
+        if provenance:
+            keep = ("__dv_file", "__dv_pos") + keep
+        elif "__dv_file" in df.columns:
+            df = df.drop("__dv_file", "__dv_pos")
+        return self._apply_schema_map(
+            df, m["schema"] if smap is _UNSET else smap, keep=keep
+        )
 
     # ------------------------------------------- field-id schema mapping
     @staticmethod
@@ -1775,6 +1809,52 @@ class SnapshotTable:
             for i, c in enumerate(cols)
         ]
         return [z_value_n(normed)]
+
+    def _cluster_layout(
+        self,
+        df: DataFrame,
+        m: dict,
+        cluster_by: tuple[str, ...] | None = None,
+        n_files: int | None = None,
+    ) -> tuple[tuple[str, ...], DataFrame, list | None]:
+        """The liquid-clustering write layout, shared by every writer
+        that honours ``cluster.by``: returns (clustered columns, the
+        frame to write, the ``order_within`` sort). The table declares
+        the layout once and every write lays itself out along the
+        Morton key; ``cluster_by`` overrides the property, and without
+        either the frame passes through unchanged. Unless a partition
+        spec decides file membership, the frame is range-partitioned on
+        the Morton key into ``n_files`` partitions (default: the frame's
+        own parallelism — AQE would otherwise coalesce a small batch to
+        one file and erase the clustering), so each file owns a
+        contiguous curve segment (a bounded range in EVERY clustered
+        column) and the partition-local sort in ``_write_files``
+        tightens zone maps inside it. Under a spec the key rides as the
+        write-time sort only (the OPTIMIZE ZORDER composition rule)."""
+        cols = cluster_by
+        cb = (m.get("properties") or {}).get("cluster.by")
+        if cols is None and cb:
+            cols = tuple(c.strip() for c in str(cb).split(",") if c.strip())
+            if not 2 <= len(cols) <= 4:
+                # SET TBLPROPERTIES can bypass the CLUSTER BY arity
+                # check — failing silently here would drop the declared
+                # layout on every subsequent write. >4 is rejected on
+                # the bit budget: the interleave gives each column
+                # floor(63/N) bits, and below ~12 bits/column (N=5)
+                # zone-map ranges get too coarse to prune — the same
+                # practical cap Delta docs put on ZORDER column counts
+                raise ValueError(
+                    "table property cluster.by must name 2-4 "
+                    f"comma-separated columns, got {cb!r}"
+                )
+        if not cols:
+            return (), df, None
+        order_within = self._z_order_within(df, *cols)
+        if order_within and not self._partition_spec():
+            if n_files is None:
+                n_files = df.rdd.getNumPartitions()
+            df = df.repartitionByRange(max(1, n_files), *order_within)
+        return cols, df, order_within
 
     def commit_append(
         self,
@@ -1906,35 +1986,10 @@ class SnapshotTable:
                         "retry (they will be skipped)"
                     )
             if new is None:
-                order_within = None
-                eff_cluster = cluster_by
-                if eff_cluster is None:
-                    # liquid-clustering posture: the `cluster.by`
-                    # table property makes EVERY append lay itself out
-                    # along the declared Morton key — callers don't
-                    # opt in write-by-write, the table declares it once
-                    cb = (m.get("properties") or {}).get("cluster.by")
-                    if cb:
-                        cb_cols = [
-                            c.strip() for c in cb.split(",") if c.strip()
-                        ]
-                        if not 2 <= len(cb_cols) <= 4:
-                            # SET TBLPROPERTIES can bypass the CLUSTER
-                            # BY arity check — failing silently here
-                            # would drop the declared layout on every
-                            # subsequent append. >4 is rejected on the
-                            # bit budget: the interleave gives each
-                            # column floor(63/N) bits, and below ~12
-                            # bits/column (N=5) zone-map ranges get too
-                            # coarse to prune — the same practical cap
-                            # Delta docs put on ZORDER column counts
-                            raise ValueError(
-                                "table property cluster.by must name "
-                                f"2-4 comma-separated columns, got "
-                                f"{cb!r}"
-                            )
-                        eff_cluster = tuple(cb_cols)
-                if eff_cluster is not None:
+                eff_cluster, laid, order_within = self._cluster_layout(
+                    df, m, cluster_by
+                )
+                if eff_cluster:
                     # clustering exists to FEED zone maps: bank footer
                     # stats for every clustered column automatically
                     # (Delta banks stats on ZORDER columns the same
@@ -1944,26 +1999,7 @@ class SnapshotTable:
                     stats_cols = sorted(
                         set(stats_cols or []) | set(eff_cluster)
                     )
-                    order_within = self._z_order_within(
-                        df, *eff_cluster
-                    )
-                    if order_within and not self._partition_spec():
-                        # each file owns a contiguous curve segment:
-                        # range-partition on the key, then the
-                        # partition-local sort in _write_files tightens
-                        # zone maps inside each file. Under a partition
-                        # spec the spec repartition decides file
-                        # membership and the key rides as the
-                        # write-time sort only (the OPTIMIZE ZORDER
-                        # composition rule). The explicit partition
-                        # count pins the incoming parallelism — AQE
-                        # would otherwise coalesce a small batch to one
-                        # file and erase the clustering
-                        df = df.repartitionByRange(
-                            max(1, df.rdd.getNumPartitions()),
-                            *order_within,
-                        )
-                new = self._write_files(df, order_within=order_within)
+                new = self._write_files(laid, order_within=order_within)
             # registered bloom indexes extend to the new files (built
             # once; re-merged against the fresh head on each retry)
             blooms = (
@@ -2138,11 +2174,11 @@ class SnapshotTable:
         as_of_ts: float | None = None,
         tag: str | None = None,
     ) -> DataFrame:
-        """Read a snapshot. ``mergeSchema`` is on: commits may add
-        columns (additive evolution, the S5 contract — older files
-        surface the new columns as NULL), and same-schema reads pay only
-        a footer union for it. ``as_of_ts`` is TIMESTAMP AS OF time
-        travel: the newest version whose banked commit timestamp is
+        """Read a snapshot through ``_scan``: commits may add columns
+        (additive evolution, the S5 contract — older files surface the
+        new columns as NULL), widen, rename or drop them, and tombstone
+        rows; the read applies all of it. ``as_of_ts`` is TIMESTAMP AS
+        OF time travel: the newest version whose banked commit timestamp is
         <= the given epoch-seconds value (Delta semantics). ``tag``
         reads an immutable named ref (VERSION AS OF a tag). The three
         selectors are mutually exclusive."""
@@ -2154,45 +2190,30 @@ class SnapshotTable:
             version = version_as_of(self.root, as_of_ts)
         v = self.current_version() if version is None else version
         m = load_manifest(self.root, v)
-        files = m["files"]
-        if not files:
-            # an EMPTY snapshot (e.g. a streaming complete-mode epoch
-            # whose recomputed result was empty): zero rows, schema from
-            # the newest prior version that had files — projected
-            # through THIS version's field-id map, so the zero-row frame
-            # surfaces the current logical column names (not the prior
-            # files' physical names: post-rename those differ, and
-            # dropped columns must not resurface).
-            for pv in range(v - 1, 0, -1):
-                try:
-                    prior = self._load_manifest(pv)
-                except LogTruncated:
-                    break
-                if prior:
-                    rdr = (
-                        self.spark.read.schema(self._reader_schema(m))
-                        if self._reader_schema(m)
-                        else self.spark.read.option(
-                            "mergeSchema", "true"
-                        )
-                    )
-                    return self._apply_schema_map(
-                        rdr.parquet(*prior).limit(0), m["schema"]
-                    )
-            rs = self._reader_schema(m)
-            if rs:
-                # a CREATEd-but-never-written table: the declared
-                # (banked) schema IS the read schema — typed empty frame
-                return self._apply_schema_map(
-                    self.spark.createDataFrame([], rs), m["schema"]
-                )
+        if m["files"]:
+            return self._scan(m["files"], m)
+        # an EMPTY snapshot (e.g. a streaming complete-mode epoch whose
+        # recomputed result was empty): zero rows, schema from the
+        # newest prior version that had files — read through THIS
+        # version's reader and field-id map, so the zero-row frame
+        # surfaces the current logical column names (not the prior
+        # files' physical names: post-rename those differ, and dropped
+        # columns must not resurface).
+        for pv in range(v - 1, 0, -1):
+            try:
+                prior = self._load_manifest(pv)
+            except LogTruncated:
+                break
+            if prior:
+                return self._scan(prior, m).limit(0)
+        if self._reader_types(m) is None:
             raise ValueError(
                 f"snapshot version {v} is empty and no prior version "
                 "carries a schema"
             )
-        return self._apply_schema_map(
-            self._masked_read(files, m["dv"], manifest=m), m["schema"]
-        )
+        # a CREATEd-but-never-written table: the declared (banked)
+        # schema IS the read schema — typed empty frame
+        return self._scan([], m)
 
     def file_count(self, version: int | None = None) -> int:
         v = self.current_version() if version is None else version
@@ -2324,6 +2345,31 @@ class SnapshotTable:
             "5 consecutive manifest conflicts — giving up"
         )
 
+    def _stage_tombstones(
+        self, tomb: DataFrame, affected: list[str] | None = None
+    ) -> tuple[str | None, list[str]]:
+        """The one tombstone-staging step of the MOR DML verbs: write
+        ``tomb``'s (``__dv_file``, ``__dv_pos``) rows to a fresh
+        ``deletes/`` sidecar and return (sidecar dir, affected files).
+        ``affected`` (when the caller already knows it) skips the
+        distinct-files collect. Nothing matched = nothing written,
+        ``(None, [])``: a no-op DML stages no orphan directory. ``tomb``
+        is evaluated twice (collect, write), so callers pass a
+        checkpoint or a projection of one. The write keeps the frame's
+        task parallelism: a wide delete streams positions out of every
+        partition, a point delete writes a few KB-sized shards —
+        sidecar readers union the directory either way."""
+        if affected is None:
+            affected = [
+                r["__dv_file"]
+                for r in tomb.select("__dv_file").distinct().collect()
+            ]
+        if not affected:
+            return None, []
+        dvdir = os.path.join(self.root, "deletes", uuid.uuid4().hex)
+        tomb.write.mode("errorifexists").parquet(dvdir)
+        return dvdir, affected
+
     def delete_where(self, predicate) -> int:
         """DELETE as a DELETION-VECTOR commit (merge-on-read): data files
         stay byte-identical; the commit writes one sidecar of (file,
@@ -2339,39 +2385,16 @@ class SnapshotTable:
         commit. History stays intact: version N-1 still reads the rows.
         ``materialize_deletes`` / OPTIMIZE folds DVs into rewrites when
         tombstones accumulate."""
-        import uuid as _uuid
-
         cur = self.current_version()
         m = load_manifest(self.root, cur)
         if not m["files"]:
             return cur
-        visible = self._masked_read(m["files"], m["dv"], manifest=m)
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
+        dvdir, affected = self._stage_tombstones(
+            self._scan(m["files"], m, provenance=True)
+            .filter(predicate)
+            .select("__dv_file", "__dv_pos")
+            .localCheckpoint(eager=True)
         )
-        mapped = self._apply_schema_map(
-            tagged, m["schema"], keep=("__dv_file", "__dv_pos")
-        )
-        matched = mapped.filter(predicate).select("__dv_file", "__dv_pos")
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-        # NATURAL task parallelism for the sidecar write: a wide delete
-        # (50% selectivity) streams positions out of every scan task in
-        # parallel instead of funnelling millions of rows through one
-        # coalesced task; a point delete writes a few KB-sized shards —
-        # sidecar readers union the directory either way.
-        matched.write.mode("errorifexists").parquet(dvdir)
-        affected = [
-            r["__dv_file"]
-            for r in self._read_sidecars(dvdir)
-            .select("__dv_file")
-            .distinct()
-            .collect()
-        ]
         if not affected:
             return cur  # nothing matched: no commit
         # publish with WRITE-SERIALIZABLE rebase: a concurrent pure
@@ -2391,35 +2414,19 @@ class SnapshotTable:
         and never neither. Cost is O(matched rows) for the sidecar plus
         a write of the matched rows only — copy-on-write would rewrite
         every touched FILE in full. History keeps the pre-images
-        (time travel + CDF report the delete/insert pair)."""
-        import uuid as _uuid
-
+        (time travel + CDF report the delete/insert pair). Under row
+        tracking the post-image KEEPS the pre-image's permanent id — an
+        UPDATE changes a row's values, not its identity."""
         cur = self.current_version()
         m = load_manifest(self.root, cur)
         if not m["files"]:
             return cur
-        track = bool(m.get("row_tracking"))
-        visible = self._masked_read(
-            m["files"], m["dv"], keep_provenance=track, manifest=m
+        mapped = self._scan(
+            m["files"],
+            m,
+            provenance=True,
+            row_ids=ROW_ID_COL if m.get("row_tracking") else None,
         )
-        if track:
-            # keep only the physical __row_id; the (file, pos) pair is
-            # re-derived below under the __dv_ names this path uses
-            visible = visible.drop("__fp", "__pos")
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        keep = ("__dv_file", "__dv_pos") + (
-            (ROW_ID_COL,)
-            if track and ROW_ID_COL in tagged.columns
-            else ()
-        )
-        mapped = self._apply_schema_map(tagged, m["schema"], keep=keep)
         # The matched rows MATERIALIZE once (localCheckpoint, O(matched)
         # storage): the tombstone sidecar AND the post-images both
         # derive from this one frame, so the predicate evaluates exactly
@@ -2429,43 +2436,12 @@ class SnapshotTable:
         # against the written sidecar: same guarantee, but the touched
         # files were read twice).
         matched = mapped.filter(predicate).localCheckpoint(eager=True)
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-        matched.select("__dv_file", "__dv_pos").write.mode(
-            "errorifexists"
-        ).parquet(dvdir)
-        affected = [
-            r["__dv_file"]
-            for r in self._read_sidecars(dvdir)
-            .select("__dv_file")
-            .distinct()
-            .collect()
-        ]
+        dvdir, affected = self._stage_tombstones(
+            matched.select("__dv_file", "__dv_pos")
+        )
         if not affected:
             return cur  # nothing matched
-        pinned = matched
-        if track:
-            # row tracking: the post-image KEEPS the pre-image's
-            # permanent id (physical __row_id if an earlier rewrite
-            # materialized one, else the file's banked base + position)
-            # — an UPDATE changes a row's values, not its identity
-            bases = self._row_id_bases(m).withColumnRenamed(
-                "__fp", "__dv_file"
-            )
-            pinned = pinned.join(
-                F.broadcast(bases), "__dv_file", "left"
-            )
-            fresh = (
-                F.col("__rid_base") + F.col("__dv_pos")
-            ).cast("long")
-            idc = (
-                F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
-                if ROW_ID_COL in pinned.columns
-                else fresh
-            )
-            pinned = pinned.withColumn(ROW_ID_COL, idc).drop(
-                "__rid_base"
-            )
-        post = pinned.drop("__dv_file", "__dv_pos").withColumns(
+        post = matched.drop("__dv_file", "__dv_pos").withColumns(
             assignments
         )
         # GENERATED columns an assignment didn't explicitly set are
@@ -2533,9 +2509,8 @@ class SnapshotTable:
         the new rows' write — a partition-window reload (the daily
         re-materialization shape) never rewrites untouched files.
         Publishes through the write-serializable rebase: concurrent
-        pure appends don't invalidate it."""
-        import uuid as _uuid
-
+        pure appends don't invalidate it. A window that matches nothing
+        replaced by an empty frame publishes nothing."""
         cur = self.current_version()
         m = (
             load_manifest(self.root, cur)
@@ -2548,56 +2523,32 @@ class SnapshotTable:
         # must see the SAME rows — a nondeterministic source could
         # otherwise pass the window check yet write rows outside it
         df = df.localCheckpoint(eager=True)
-        outside = df.filter(
-            ~predicate.eqNullSafe(F.lit(True))
-        ).count()
+        n_in, outside = df.agg(
+            F.count(F.lit(1)),
+            F.count_if(~predicate.eqNullSafe(F.lit(True))),
+        ).first()
         if outside:
             raise ValueError(
                 f"REPLACE WHERE: {outside} incoming row(s) do not "
                 "satisfy the predicate — the replacement must stay "
                 "inside the window it clears"
             )
-        affected: list[str] = []
-        dvdir = None
+        dvdir, affected = None, []
         if m["files"]:
-            visible = self._masked_read(m["files"], m["dv"], manifest=m)
-            tagged = visible.withColumns(
-                {
-                    "__dv_file": self._plain_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__dv_pos": F.col("_metadata.row_index"),
-                }
-            )
-            mapped = self._apply_schema_map(
-                tagged, m["schema"], keep=("__dv_file", "__dv_pos")
-            )
-            # pin once (update_where's posture): the tombstone set is
-            # decided exactly here; the sidecar writes only when rows
-            # actually matched — an empty replace window must not
-            # stage an orphan directory per call
-            matched = (
-                mapped.filter(predicate)
+            dvdir, affected = self._stage_tombstones(
+                self._scan(m["files"], m, provenance=True)
+                .filter(predicate)
                 .select("__dv_file", "__dv_pos")
                 .localCheckpoint(eager=True)
             )
-            affected = [
-                r["__dv_file"]
-                for r in matched.select("__dv_file")
-                .distinct()
-                .collect()
-            ]
-            if affected:
-                dvdir = os.path.join(
-                    self.root, "deletes", _uuid.uuid4().hex
-                )
-                matched.write.mode("errorifexists").parquet(dvdir)
+        if cur and not affected and not n_in:
+            return cur
         new = self._write_files(df)
         return self._publish_with_rebase(
             m,
             cur,
             new,
-            dv_sidecar=dvdir if affected else None,
+            dv_sidecar=dvdir,
             affected=affected,
             schema_map=self._extend_schema_map(m, df),
             op="REPLACE WHERE",
@@ -2667,8 +2618,6 @@ class SnapshotTable:
         Insert-only merges never raise — matched rows are ignored
         whatever their multiplicity, and not-matched duplicates all
         insert, exactly Delta's semantics."""
-        import uuid as _uuid
-
         cur = self.current_version()
         m = (
             load_manifest(self.root, cur)
@@ -2823,25 +2772,15 @@ class SnapshotTable:
         MERGE_METRICS["source_hull_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
         )
-        visible = self._masked_read(
-            cand_files, m["dv"], keep_provenance=track, manifest=m
+        # row tracking: a post-image keeps the pre-image's permanent id
+        # (an UPDATE branch changes values, not identity); inserts draw
+        # fresh ids from their new files' ranges
+        mapped = self._scan(
+            cand_files,
+            m,
+            provenance=True,
+            row_ids=ROW_ID_COL if track else None,
         )
-        if track:
-            visible = visible.drop("__fp", "__pos")
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        keep = ("__dv_file", "__dv_pos") + (
-            (ROW_ID_COL,)
-            if track and ROW_ID_COL in tagged.columns
-            else ()
-        )
-        mapped = self._apply_schema_map(tagged, m["schema"], keep=keep)
         for c in ident_all:
             if when_matched_update and c in when_matched_update:
                 raise ValueError(
@@ -2999,6 +2938,7 @@ class SnapshotTable:
             tomb = ckpt.filter(
                 F.col("__is_del") | F.col("__is_upd")
             ).select("__dv_file", "__dv_pos")
+        dvdir, affected = None, []
         if nmbs_on:
             # target rows absent from the source: one anti-join on the
             # merge keys — the one branch that reads the target again, as
@@ -3011,25 +2951,14 @@ class SnapshotTable:
                     )
                 )
             nmbs = nmbs.select("__dv_file", "__dv_pos")
-            tomb = nmbs if tomb is None else tomb.unionAll(nmbs)
-        affected = touched_files
-        dvdir = None
-        if tomb is not None:
-            # the sidecar writes only when something can be tombstoned: a
-            # merge that matched nothing stages no orphan directory
-            dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-            tomb.write.mode("errorifexists").parquet(dvdir)
-            if nmbs_on:
-                # the NMBS anti-join is NOT materialized: the written
-                # sidecar is its single evaluation, so the affected-file
-                # set must come from reading it back
-                affected = [
-                    r["__dv_file"]
-                    for r in self._read_sidecars(dvdir)
-                    .select("__dv_file")
-                    .distinct()
-                    .collect()
-                ]
+            # the anti-join is not part of the checkpoint: pin it so its
+            # condition evaluates once for the files collect and the write
+            dvdir, affected = self._stage_tombstones(
+                (nmbs if tomb is None else tomb.unionAll(nmbs))
+                .localCheckpoint(eager=True)
+            )
+        elif tomb is not None:
+            dvdir, affected = self._stage_tombstones(tomb, touched_files)
         MERGE_METRICS["sidecar_write_sec"] = round(
             _mtime.perf_counter() - _ph0, 3
         )
@@ -3053,23 +2982,7 @@ class SnapshotTable:
             pre = ckpt.filter(F.col("__is_upd") & ~F.col("__is_del"))
             out_cols = [c for c in target_cols if c not in regen]
             if track:
-                # row tracking: the post-image keeps the pre-image's
-                # permanent id (an UPDATE branch changes values, not
-                # identity — same rule as update_where)
-                bases = self._row_id_bases(m).withColumnRenamed(
-                    "__fp", "__dv_file"
-                )
-                pre = pre.join(F.broadcast(bases), "__dv_file", "left")
-                fresh = (
-                    F.col("__rid_base") + F.col("__dv_pos")
-                ).cast("long")
-                idc = (
-                    F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
-                    if ROW_ID_COL in pre.columns
-                    else fresh
-                )
-                pre = pre.withColumn(ROW_ID_COL, idc)
-                out_cols = out_cols + [ROW_ID_COL]
+                out_cols.append(ROW_ID_COL)
             post = (
                 pre.withColumns(when_matched_update)
                 .select(*out_cols)
@@ -3135,7 +3048,7 @@ class SnapshotTable:
             m,
             cur,
             new,
-            dv_sidecar=dvdir if affected else None,
+            dv_sidecar=dvdir,
             affected=affected,
             # only the insert branch can extend the schema (post-images
             # project a subset of the existing target columns)
@@ -3164,22 +3077,24 @@ class SnapshotTable:
         dv_files = sorted(f for f in m["dv"] if m["dv"][f])
         if not dv_files:
             return cur
-        if m.get("row_tracking"):
-            # PRESERVING rewrite: the surviving rows keep their
-            # permanent ids, materialized as the physical __row_id
-            # column in the replacement files
-            packed = self._attach_row_ids(
-                self._masked_read(
-                    dv_files, m["dv"], keep_provenance=True,
-                    manifest=m,
-                ),
-                m,
-                ROW_ID_COL,
-            )
-        else:
-            packed = self._masked_read(dv_files, m["dv"], manifest=m)
         return self.commit_replace(
-            dv_files, packed, op="MATERIALIZE DELETES"
+            dv_files,
+            self._preserving_scan(dv_files, m),
+            op="MATERIALIZE DELETES",
+        )
+
+    def _preserving_scan(self, files: list[str], m: dict) -> DataFrame:
+        """The rows of ``files`` as a PRESERVING rewrite (compaction,
+        ``materialize_deletes``) writes them back: deletion vectors
+        folded, PHYSICAL names kept (a post-rename compaction yields a
+        mixed-era file carrying both names), and under row tracking
+        every surviving row's permanent id materialized as the physical
+        ``__row_id`` column of the replacement files."""
+        return self._scan(
+            files,
+            m,
+            row_ids=ROW_ID_COL if m.get("row_tracking") else None,
+            smap=None,
         )
 
     # --------------------------------- rename/drop schema evolution ----
@@ -3190,12 +3105,7 @@ class SnapshotTable:
             return [dict(e) for e in m["schema"]]
         if not m["files"]:
             return []
-        rdr = (
-            self.spark.read.schema(self._reader_schema(m))
-            if self._reader_schema(m)
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        names = rdr.parquet(*m["files"]).schema.fieldNames()
+        names = self._scan(m["files"], m, mask=False).columns
         return [
             {"id": i, "name": n, "prior": []} for i, n in enumerate(names)
         ]
@@ -3399,10 +3309,7 @@ class SnapshotTable:
         if not files:
             return self.read(version).limit(0)
         v = self.current_version() if version is None else version
-        m = load_manifest(self.root, v)
-        return self._apply_schema_map(
-            self._masked_read(files, m["dv"], manifest=m), m["schema"]
-        )
+        return self._scan(files, load_manifest(self.root, v))
 
     def read_changes(
         self, from_version: int, to_version: int
@@ -3435,81 +3342,20 @@ class SnapshotTable:
         manifests, positions tombstoned in between are read back
         (O(affected files)) and reported as deletes.
         """
-        ma = (
-            load_manifest(self.root, from_version)
-            if from_version > 0
-            else {"files": [], "dv": {}, "schema": None}
-        )
-        mb = load_manifest(self.root, to_version)
+        ma, mb, schema, empty = self._change_span(from_version, to_version)
+        if empty is not None:
+            return empty
         a, b = set(ma["files"]), set(mb["files"])
-        added, removed = sorted(b - a), sorted(a - b)
-        smap = mb["schema"]
-        # DV-growth leg: shared files whose tombstone set grew
-        shared_grown = sorted(
-            f
-            for f in a & b
-            if set(mb["dv"].get(f, [])) - set(ma["dv"].get(f, []))
-        )
-        # the symmetric leg: tombstones REMOVED in between (RESTORE to a
-        # pre-delete version keeps the file but drops its sidecars) —
-        # those positions are visible again and must surface as inserts,
-        # or a CDF consumer (an incremental MV, a downstream sync)
-        # silently loses the resurrected rows
-        shared_shrunk = sorted(
-            f
-            for f in a & b
-            if set(ma["dv"].get(f, [])) - set(mb["dv"].get(f, []))
-        )
-        # Align all legs to the union schema of the TOUCHED files only
-        # (one mergeSchema footer union over O(churn) files) — deriving it
-        # from the full to-version snapshot would cost O(table) footer
-        # reads per poll. Rows come exclusively from touched files, so
-        # their union schema is complete for every returned row; a column
-        # that exists only in untouched files cannot appear in a change.
-        touched = sorted(
-            {*added, *removed, *shared_grown, *shared_shrunk}
-        )
-        if not touched:
-            template = sorted(b) or sorted(a)
-            if not template:  # both versions empty: no rows, no columns
-                return self.spark.createDataFrame(
-                    [], "_change_type string"
-                )
-            empty = self._apply_schema_map(
-                self.spark.read.parquet(template[0]).limit(0), smap
-            )
-            return empty.withColumn("_change_type", F.lit("insert"))
-        rdr_b = (
-            self.spark.read.schema(self._reader_schema(mb))
-            if self._reader_schema(mb)
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        schema = self._apply_schema_map(
-            rdr_b.parquet(*touched).limit(0), smap
-        ).schema
 
-        def align(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[
-                    (
-                        df[f.name] if f.name in df.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-
-        def side(files: list[str], dv: dict, mside: dict) -> DataFrame:
+        def side(files: list[str], mside: dict) -> DataFrame:
             if not files:
                 return self.spark.createDataFrame([], schema)
-            return align(
-                self._apply_schema_map(
-                    self._masked_read(files, dv, manifest=mside), smap
-                )
+            return self._align(
+                self._scan(files, mside, smap=mb["schema"]), schema
             )
 
-        new_rows = side(added, mb["dv"], mb)
-        old_rows = side(removed, ma["dv"], ma)
+        new_rows = side(sorted(b - a), mb)
+        old_rows = side(sorted(a - b), ma)
         changes = (
             new_rows.exceptAll(old_rows)
             .withColumn("_change_type", F.lit("insert"))
@@ -3518,69 +3364,92 @@ class SnapshotTable:
                 .withColumn("_change_type", F.lit("delete"))
             )
         )
-        if shared_grown:
-            raw = rdr_b.parquet(*shared_grown)
-            raw = raw.withColumns(
-                {
-                    "__fp": self._plain_path(F.col("_metadata.file_path")),
-                    "__pos": F.col("_metadata.row_index"),
-                }
+        # the DV legs, one per direction: shared files whose tombstone
+        # set GREW report the newly tombstoned positions as deletes; a
+        # set that SHRANK (RESTORE to a pre-delete version keeps the
+        # file but drops its sidecars) reports the positions visible
+        # again as inserts, or a CDF consumer (an incremental MV, a
+        # downstream sync) silently loses the resurrected rows
+        for dv_from, dv_to, kind in (
+            (ma["dv"], mb["dv"], "delete"),
+            (mb["dv"], ma["dv"], "insert"),
+        ):
+            files = sorted(
+                f
+                for f in a & b
+                if set(dv_to.get(f, [])) - set(dv_from.get(f, []))
             )
-            dvr_b = self._dv_rows(
-                {f: mb["dv"][f] for f in shared_grown}
-            )
-            prior_dv = {
-                f: ma["dv"][f] for f in shared_grown if ma["dv"].get(f)
-            }
-            if prior_dv:
-                dvr_a = self._dv_rows(prior_dv)
-                dvr_b = dvr_b.join(
-                    dvr_a, ["__dv_file", "__dv_pos"], "left_anti"
-                )
-            tombstoned = raw.join(
-                dvr_b,
-                (raw["__fp"] == dvr_b["__dv_file"])
-                & (raw["__pos"] == dvr_b["__dv_pos"]),
-                "left_semi",
-            ).drop("__fp", "__pos")
-            changes = changes.unionAll(
-                align(
-                    self._apply_schema_map(tombstoned, smap)
-                ).withColumn("_change_type", F.lit("delete"))
-            )
-        if shared_shrunk:
-            raw = rdr_b.parquet(*shared_shrunk)
-            raw = raw.withColumns(
-                {
-                    "__fp": self._plain_path(F.col("_metadata.file_path")),
-                    "__pos": F.col("_metadata.row_index"),
-                }
-            )
-            dvr_a = self._dv_rows(
-                {f: ma["dv"][f] for f in shared_shrunk}
-            )
-            later_dv = {
-                f: mb["dv"][f] for f in shared_shrunk if mb["dv"].get(f)
-            }
-            if later_dv:
-                # still tombstoned at the to-version: not resurrected
-                dvr_a = dvr_a.join(
-                    self._dv_rows(later_dv),
-                    ["__dv_file", "__dv_pos"],
+            if not files:
+                continue
+            hit = self._dv_rows({f: dv_to[f] for f in files})
+            still = {f: dv_from[f] for f in files if dv_from.get(f)}
+            if still:
+                hit = hit.join(
+                    self._dv_rows(still), ["__dv_file", "__dv_pos"],
                     "left_anti",
                 )
-            resurrected = raw.join(
-                dvr_a,
-                (raw["__fp"] == dvr_a["__dv_file"])
-                & (raw["__pos"] == dvr_a["__dv_pos"]),
-                "left_semi",
-            ).drop("__fp", "__pos")
+            rows = self._scan(files, mb, mask=False, provenance=True).join(
+                hit, ["__dv_file", "__dv_pos"], "left_semi"
+            )
             changes = changes.unionAll(
-                align(
-                    self._apply_schema_map(resurrected, smap)
-                ).withColumn("_change_type", F.lit("insert"))
+                self._align(rows, schema).withColumn(
+                    "_change_type", F.lit(kind)
+                )
             )
         return changes
+
+    def _change_span(
+        self, from_version: int, to_version: int
+    ) -> tuple[dict, dict, StructType | None, DataFrame | None]:
+        """The prologue both change feeds share: the two manifests, and
+        either the schema every returned row aligns to or — when no file
+        was touched — the empty result. Touched = added, removed, or
+        shared with a changed deletion-vector set. The schema is the
+        to-version's reader and field-id projection over the touched
+        files only (one footer union over O(churn) files; deriving it
+        from the full to-version snapshot would cost O(table) footer
+        reads per poll). Rows come exclusively from touched files, so a
+        column that exists only in untouched files cannot appear in a
+        change."""
+        ma = (
+            load_manifest(self.root, from_version)
+            if from_version > 0
+            else {"files": [], "dv": {}, "schema": None}
+        )
+        mb = load_manifest(self.root, to_version)
+        a, b = set(ma["files"]), set(mb["files"])
+        touched = sorted(
+            (a ^ b)
+            | {
+                f
+                for f in a & b
+                if set(ma["dv"].get(f, [])) != set(mb["dv"].get(f, []))
+            }
+        )
+        if touched:
+            return ma, mb, self._scan(touched, mb, mask=False).schema, None
+        template = sorted(b) or sorted(a)
+        if not template:  # both versions empty: no rows, no columns
+            return ma, mb, None, self.spark.createDataFrame(
+                [], "_change_type string"
+            )
+        empty = self._scan(template[:1], mb, mask=False).limit(0)
+        return ma, mb, None, empty.withColumn("_change_type", F.lit("insert"))
+
+    @staticmethod
+    def _align(df: DataFrame, schema: StructType, *extra: str) -> DataFrame:
+        """``df`` projected onto ``schema`` by name (columns it lacks
+        surface as typed NULLs), ``extra`` columns after them."""
+        return df.select(
+            *[
+                (
+                    df[f.name] if f.name in df.columns
+                    else F.lit(None).cast(f.dataType)
+                ).alias(f.name)
+                for f in schema.fields
+            ],
+            *extra,
+        )
 
     def optimize_small_files(
         self,
@@ -3648,18 +3517,9 @@ class SnapshotTable:
                 "version": cur,
             }
         n_bins = max(1, math.ceil(sum(sizes[f] for f in small) / target_bytes))
-        # DV-masked: compaction MATERIALIZES the compacted files'
-        # deletion vectors (their dv entries drop with the files)
-        if m.get("row_tracking"):
-            # preserving rewrite: compacted rows keep their permanent
-            # ids as the physical __row_id column
-            packed = self._attach_row_ids(
-                self._masked_read(small, m["dv"], keep_provenance=True, manifest=m),
-                m,
-                ROW_ID_COL,
-            )
-        else:
-            packed = self._masked_read(small, m["dv"], manifest=m)
+        # compaction MATERIALIZES the compacted files' deletion vectors
+        # (their dv entries drop with the files)
+        packed = self._preserving_scan(small, m)
         order_within = None
         spec = self._partition_spec()
         if z_cols is not None and spec:
@@ -3814,23 +3674,13 @@ class SnapshotTable:
             # current ones, narrow widths upcast by the explicit
             # reader schema — the replacement rows ARE the logical
             # truth of those files
-            rows = self._apply_schema_map(
-                self._masked_read(targets, m["dv"], manifest=m),
-                m["schema"],
+            # a cluster.by table's replacement files are laid out along
+            # the declared Morton key exactly as an append lays them
+            # out, one replacement per rewritten file, so the rewrite
+            # never degrades the zone-map locality the layout exists for
+            _cols, rows, order_within = self._cluster_layout(
+                self._scan(targets, m), m, n_files=len(targets)
             )
-            # a cluster.by table's replacement files re-sort along the
-            # declared Morton key, so the rewrite never degrades the
-            # zone-map locality the layout exists for (bucket.by and
-            # cluster.by are mutually exclusive, and _write_files
-            # rejects order_within on bucketed tables)
-            order_within = None
-            cb = (m.get("properties") or {}).get("cluster.by")
-            if cb and self._bucket_spec() is None:
-                cb_cols = [
-                    c.strip() for c in str(cb).split(",") if c.strip()
-                ]
-                if 2 <= len(cb_cols) <= 4:
-                    order_within = self._z_order_within(rows, *cb_cols)
             new = self._write_files(rows, order_within=order_within)
         visible = keep + new
         stats = self._merged_stats(cur, new, None)
@@ -3883,12 +3733,7 @@ class SnapshotTable:
         only at ``from``), ``update_preimage``/``update_postimage``
         (id on both sides with different values — one output row
         each, the pre-image carrying the FROM values)."""
-        ma = (
-            load_manifest(self.root, from_version)
-            if from_version > 0
-            else {"files": [], "dv": {}, "schema": None}
-        )
-        mb = load_manifest(self.root, to_version)
+        ma, mb, schema, empty = self._change_span(from_version, to_version)
         if not mb.get("row_tracking") or (
             from_version > 0 and not ma.get("row_tracking")
         ):
@@ -3898,6 +3743,8 @@ class SnapshotTable:
                 "permanent ids the halves of an update cannot be "
                 "paired; use read_changes for the delete/insert form"
             )
+        if empty is not None:
+            return empty
         a, b = set(ma["files"]), set(mb["files"])
         dv_changed = sorted(
             f
@@ -3906,26 +3753,6 @@ class SnapshotTable:
         )
         old_files = sorted(a - b) + dv_changed
         new_files = sorted(b - a) + dv_changed
-        touched = sorted({*old_files, *new_files})
-        smap = mb["schema"]
-        if not touched:
-            template = sorted(b) or sorted(a)
-            if not template:
-                return self.spark.createDataFrame(
-                    [], "_change_type string"
-                )
-            empty = self._apply_schema_map(
-                self.spark.read.parquet(template[0]).limit(0), smap
-            )
-            return empty.withColumn("_change_type", F.lit("insert"))
-        rdr_b = (
-            self.spark.read.schema(self._reader_schema(mb))
-            if self._reader_schema(mb)
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        schema = self._apply_schema_map(
-            rdr_b.parquet(*touched).limit(0), smap
-        ).schema
         data_cols = [f.name for f in schema.fields]
 
         def side(files: list[str], mside: dict) -> DataFrame:
@@ -3933,25 +3760,11 @@ class SnapshotTable:
                 return self.spark.createDataFrame(
                     [], schema
                 ).withColumn("_row_id", F.lit(None).cast("long"))
-            raw = self._masked_read(
-                files,
-                {f: mside["dv"][f] for f in files if mside["dv"].get(f)},
-                keep_provenance=True,
-                manifest=mside,
-            )
-            with_ids = self._attach_row_ids(raw, mside, "_row_id")
-            mapped = self._apply_schema_map(
-                with_ids, smap, keep=("_row_id",)
-            )
-            return mapped.select(
-                *[
-                    (
-                        mapped[f.name]
-                        if f.name in mapped.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in schema.fields
-                ],
+            return self._align(
+                self._scan(
+                    files, mside, row_ids="_row_id", smap=mb["schema"]
+                ),
+                schema,
                 "_row_id",
             )
 
@@ -4397,8 +4210,8 @@ class SnapshotTable:
             ]
             proj = [f"`{f.name}`" for f in schema.fields]
         # deletion vectors ride the view as a deterministic per-file
-        # (basename, row_index) NOT-filter — same mask the connector's
-        # _masked_read applies, and a Filter preserves the bucketed
+        # (basename, row_index) NOT-filter — same mask ``_scan``
+        # applies, and a Filter preserves the bucketed
         # scan's hash distribution, so MoR deletes keep the
         # Exchange-free join. Basenames are UUID-unique, so matching
         # the symlink's basename identifies the original file.
@@ -4900,13 +4713,8 @@ class SnapshotTable:
         # predicating on the raw column — hidden partitioning's
         # contract. Per-(key, literal) transforms evaluate once and
         # cache across the file walk.
-        known = set()
-        rs = self._reader_schema(m)
-        if rs is not None:
-            from pyspark.sql.types import StructType
-
-            known = {f.name for f in StructType.fromDDL(rs).fields}
-        elif m.get("schema"):
+        known = set(self._reader_types(m) or ())
+        if not known and m.get("schema"):
             known = {e["name"] for e in m["schema"]}
         expected_cache: dict[str, str | None] = {}
 
@@ -5028,14 +4836,7 @@ class SnapshotTable:
         BIGINT, so an uncast Python int could silently mis-bucket.
         Cost: one local 1-row projection per pruning call — driver
         milliseconds, no data access."""
-        dt = None
-        rs = self._reader_schema(m)
-        if rs is not None:
-            from pyspark.sql.types import StructType
-
-            for fld in StructType.fromDDL(rs).fields:
-                if fld.name == entry["col"]:
-                    dt = fld.dataType.simpleString()
+        dt = (self._reader_types(m) or {}).get(entry["col"])
         if dt is None and m["files"]:
             dts = dict(
                 self.spark.read.parquet(m["files"][0]).dtypes
@@ -5066,12 +4867,7 @@ class SnapshotTable:
         files = self.partition_pruned_files(eq, cur, ranges=ranges)
         if not files:
             return self.read().limit(0)
-        masked = self._masked_read(
-            files,
-            {f: d for f, d in m["dv"].items() if f in set(files)},
-            manifest=m,
-        )
-        return self._apply_schema_map(masked, m["schema"])
+        return self._scan(files, m)
 
     # ------------------------------------------------ type widening ----
     def _merged_types(self, base_m: dict, *dfs: DataFrame):
@@ -5225,37 +5021,6 @@ class SnapshotTable:
             row_tracking=True, op="ENABLE ROW TRACKING",
         )
 
-    def _row_id_bases(self, m: dict) -> DataFrame:
-        """The manifest's per-file base ids as a (path, base) frame —
-        metadata-scale (O(files) rows), always broadcast."""
-        rid = m.get("row_ids") or {}
-        return self.spark.createDataFrame(
-            [(f, int(v[0])) for f, v in rid.items()],
-            "__fp string, __rid_base long",
-        )
-
-    def _attach_row_ids(
-        self, masked: DataFrame, m: dict, out_name: str
-    ) -> DataFrame:
-        """Resolve each row's permanent id onto ``masked`` (a
-        keep_provenance read): a physically-carried ``__row_id`` wins
-        (preserved through an earlier rewrite), else the file's banked
-        base + row position. The bases join is a broadcast of O(files)
-        metadata rows — never a data-scale shuffle."""
-        joined = masked.join(
-            F.broadcast(self._row_id_bases(m)), "__fp", "left"
-        )
-        fresh = (F.col("__rid_base") + F.col("__pos")).cast("long")
-        idc = (
-            F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
-            if ROW_ID_COL in masked.columns
-            else fresh
-        )
-        drop = ["__fp", "__pos", "__rid_base"]
-        if out_name != ROW_ID_COL:
-            drop.append(ROW_ID_COL)
-        return joined.withColumn(out_name, idc).drop(*drop)
-
     def read_with_row_ids(self, version: int | None = None) -> DataFrame:
         """The snapshot with each row's permanent ``_row_id`` attached
         (DV-masked, schema-mapped, same as ``read``). Rows from files
@@ -5273,13 +5038,7 @@ class SnapshotTable:
             return self.read(v).withColumn(
                 "_row_id", F.lit(None).cast("long")
             )
-        masked = self._masked_read(
-            m["files"], m["dv"], keep_provenance=True, manifest=m
-        )
-        out = self._attach_row_ids(masked, m, "_row_id")
-        return self._apply_schema_map(
-            out, m["schema"], keep=("_row_id",)
-        )
+        return self._scan(m["files"], m, row_ids="_row_id")
 
     # --------------------------------------- generated columns ----
     def add_generated_column(self, name: str, expr_sql: str) -> int:
@@ -5690,27 +5449,17 @@ class SnapshotTable:
         todo = {c: fs for c, fs in work_cols.items() if fs}
         if todo and m["files"]:
             files = sorted({f for fs in todo.values() for f in fs})
-            rdr = (
-                self.spark.read.schema(self._reader_schema(m))
-                if self._reader_schema(m)
-                else self.spark.read.option("mergeSchema", "true")
-            )
-            raw = rdr.parquet(*files).withColumn(
-                "__fp", self._plain_path(F.col("_metadata.file_path"))
-            )
-            mapped = self._apply_schema_map(
-                raw, m["schema"], keep=("__fp",)
-            )
+            mapped = self._scan(files, m, mask=False, provenance=True)
             per_col = []
             for c, fs in todo.items():
                 # file membership via a BROADCAST semi-join, never an
                 # isin() plan literal — fs is O(files) at fleet scale
                 want = self.spark.createDataFrame(
-                    [(f,) for f in fs], "__fp string"
+                    [(f,) for f in fs], "__dv_file string"
                 )
                 per_col.append(
-                    mapped.join(F.broadcast(want), "__fp", "left_semi")
-                    .groupBy(F.col("__fp").alias("file"))
+                    mapped.join(F.broadcast(want), "__dv_file", "left_semi")
+                    .groupBy(F.col("__dv_file").alias("file"))
                     .agg(
                         F.hll_sketch_agg(F.col(c), self.NDV_LGK)
                         .alias("sketch")
@@ -5849,10 +5598,9 @@ class SnapshotTable:
                 F.col(col) == F.lit(value)
             )
         v = self.current_version() if version is None else version
-        m = load_manifest(self.root, v)
-        return self._apply_schema_map(
-            self._masked_read(files, m["dv"], manifest=m), m["schema"]
-        ).filter(F.col(col) == F.lit(value))
+        return self._scan(files, load_manifest(self.root, v)).filter(
+            F.col(col) == F.lit(value)
+        )
 
     def _constraints(self) -> dict[str, str]:
         """The head manifest's registered CHECK constraints."""
@@ -5922,8 +5670,8 @@ class SnapshotTable:
         if m.get("evolution") != "strict":
             return
         smap = m.get("schema")
-        rs = self._reader_schema(m)
-        if not m.get("files") and not smap and not rs:
+        fields = self._reader_types(m)
+        if not m.get("files") and not smap and not fields:
             # empty AND schema-less: nothing to enforce against (a
             # CREATEd table banks its declared schema, so strict mode
             # bites from the very first write there)
@@ -5932,22 +5680,13 @@ class SnapshotTable:
             known = {
                 e["name"] for e in smap if not e.get("dropped")
             }
-        elif rs:
+        elif fields:
             # widened tables bank an explicit reader schema — use it
             # (a mergeSchema footer union would CRASH on mixed-width
             # files, the exact failure the banked schema exists for)
-            from pyspark.sql.types import StructType
-
-            known = {f.name for f in StructType.fromDDL(rs).fields}
+            known = set(fields)
         else:
-            known = set(
-                self._apply_schema_map(
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(*m["files"])
-                    .limit(0),
-                    None,
-                ).columns
-            )
+            known = set(self._scan(m["files"], m, mask=False).columns)
         extra_cols = [c for c in df.columns if c not in known]
         if extra_cols:
             raise ValueError(
@@ -6141,51 +5880,23 @@ class SnapshotTable:
         never affected. Caveat shared with Delta: the clone borrows
         the source's files, so a source VACUUM that collects files the
         clone still references breaks the clone — production setups
-        either retain accordingly or deep-clone hot tables."""
+        either retain accordingly or deep-clone hot tables.
+
+        The clone's first manifest CARRIES the source's (Delta CLONE
+        copies table properties), through the same ``carry_forward``
+        rule as every commit: the writer contract, layout and table
+        properties, statistics, widened reader types, row-id ranges,
+        deletion vectors and bloom sidecars (borrowed like the files),
+        and the streaming txn map and COPY INTO ledger — they describe
+        rows the clone holds, so a replay into the clone is a no-op. A
+        source with no files still clones its declared schema. The ANN
+        index is not carried: a refresh appends code generations to the
+        index's own directory, which the source owns."""
         m = load_manifest(self.root, self.current_version())
         clone = SnapshotTable(self.spark, target_root, clock=self.clock)
-        if m["files"]:
-            # carry the FULL metadata families — dv, schema map, AND
-            # CHECK constraints (Delta CLONE copies table properties;
-            # silently shedding the writer contract would let the clone
-            # accept rows the source rejects)
-            clone._publish(
-                m["files"],
-                0,
-                m["stats"],
-                dv=dict(m["dv"]),
-                schema_map=m["schema"],
-                constraints=m.get("constraints") or None,
-                generated=m.get("generated") or None,
-                # DEFAULTs and identity specs are table properties like
-                # constraints — the clone keeps the writer contract
-                # (its identity watermark continues from the source's,
-                # so clone-side inserts never collide with borrowed
-                # rows' ids)
-                defaults=m.get("defaults") or None,
-                identity=m.get("identity") or None,
-                evolution=m.get("evolution") or None,
-                # the bloom index borrows the source's sidecars exactly
-                # like the data files; a source VACUUM collecting them
-                # degrades the clone's probes to conservative keeps
-                # (same caveat, never a wrong answer)
-                bloom_cols=m.get("bloom_cols") or None,
-                blooms=dict(m.get("blooms") or {}),
-                # the layout contract travels too: without it the
-                # clone's first append would land unpartitioned files
-                # in a table whose reads assume spec'd clustering
-                partition_spec=m.get("partition_spec") or None,
-                # row tracking: the clone's borrowed files keep the
-                # source's id ranges (ids diverge only as the clone
-                # commits its own files past the seeded watermark)
-                row_tracking=m.get("row_tracking") or None,
-                row_ids_seed=m.get("row_ids") or None,
-                # widened reader schema: without it the clone's reads
-                # would mergeSchema-crash on the mixed-width files it
-                # borrows
-                types=m.get("types") or _UNSET,
-                op="CLONE",
-            )
+        clone._publish(
+            m["files"], 0, m["stats"], base=m, ann=None, op="CLONE"
+        )
         return clone
 
     def clone_deep(self, target_root: str) -> "SnapshotTable":
@@ -6197,11 +5908,12 @@ class SnapshotTable:
         ``clone_shallow``, the clone owns its bytes: a source VACUUM
         can never break it — the backup/migration shape. Deletion
         vector sidecars copy too (tombstones must hold); the metadata
-        families carry exactly as shallow clone carries them."""
+        families carry exactly as shallow clone carries them, except the
+        sidecars the source owns: per-file bloom sidecars name the
+        source paths, so the copies read conservatively until
+        re-indexed (never a wrong answer)."""
         m = load_manifest(self.root, self.current_version())
         clone = SnapshotTable(self.spark, target_root, clock=self.clock)
-        if not m["files"]:
-            return clone
         data_dir = os.path.join(target_root, "data", uuid.uuid4().hex)
         os.makedirs(data_dir, exist_ok=True)
 
@@ -6279,20 +5991,10 @@ class SnapshotTable:
             [dst for _src, dst in pairs],
             0,
             stats,
+            base=m,
             dv=dv_map,
-            schema_map=m["schema"],
-            constraints=m.get("constraints") or None,
-            generated=m.get("generated") or None,
-            defaults=m.get("defaults") or None,
-            identity=m.get("identity") or None,
-            evolution=m.get("evolution") or None,
-            # the bloom INDEX REGISTRATION carries (future clone appends
-            # build sidecars); the per-file sidecar map cannot — its
-            # rows name the source paths — so the copied files read
-            # conservatively until re-indexed (never a wrong answer)
-            bloom_cols=m.get("bloom_cols") or None,
-            partition_spec=m.get("partition_spec") or None,
-            row_tracking=m.get("row_tracking") or None,
+            blooms=None,
+            ann=None,
             # copied files keep the source rows' permanent ids: re-key
             # the banked ranges onto the copy paths
             row_ids_seed={
@@ -6301,7 +6003,6 @@ class SnapshotTable:
                 if f in old_to_new
             }
             or None,
-            types=m.get("types") or _UNSET,
             op="CLONE DEEP",
         )
         return clone
