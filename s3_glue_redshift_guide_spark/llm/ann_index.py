@@ -8,7 +8,7 @@ trained index as snapshot-table sidecars, riding the same manifest
 machinery as the ANALYZE NDV sketches (C3):
 
 * ``ann_index_build(table, ...)`` — trains the quantizers (the
-  existing deterministic Lloyd loops in ``llm/similarity.py``),
+  deterministic shared Lloyd rounds in ``llm/similarity.py``),
   encodes the whole corpus to (neighbor_id, list_id, codes), writes
   the quantizer JSON + a codes parquet under ``<root>/_indexes/
   ann_<hex>/``, and publishes a commit banking the ``ann`` metadata —
@@ -43,25 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, functions as F
 
 from ..sources.snapshots import SnapshotTable, load_manifest
-from .dedup import _spread
-from .similarity import (
-    ivfpq_search,
-    kmeans_centroids,
-    pq_codebooks,
-    pq_encode,
-    _nearest_lists,
-)
-
-
-def _encode_frame(df: DataFrame, cents, pq, id_col, vec_col):
-    """(neighbor_id, list_id, codes) for every row of ``df`` through a
-    FIXED quantizer — the zero-training encode pass shared by build
-    and refresh."""
-    c_lists = _nearest_lists(
-        _spread(df), cents, vec_col, (id_col, "neighbor_id"), "cv", 1
-    ).select("neighbor_id", "list_id")
-    codes = pq_encode(_spread(df), pq, id_col, vec_col)
-    return c_lists.join(codes, "neighbor_id")
+from .similarity import _encode_frame, _train_quantizers, ivfpq_search
 
 
 def ann_index_build(
@@ -74,14 +56,17 @@ def ann_index_build(
     k_codes: int = 16,
     kmeans_iters: int = 2,
 ) -> int:
-    """Train + encode + bank. One full-corpus pass for the encode, k*dim
-    (+ m*k_codes*d) scalars to the driver per Lloyd round for the
-    training — the corpus itself never reaches the driver."""
+    """Train + encode + bank. Both quantizers train in the same Lloyd
+    rounds (one Spark job each, per-cluster partials to the driver —
+    the corpus itself never reaches it), then one encode pass writes
+    (neighbor_id, list_id, codes)."""
     cur = table.current_version()
     m_head = load_manifest(table.root, cur)
     corpus = table.read().select(id_col, vec_col)
-    cents = kmeans_centroids(corpus, id_col, vec_col, n_lists, kmeans_iters)
-    pq = pq_codebooks(corpus, dim, id_col, vec_col, m, k_codes, kmeans_iters)
+    cents, pq = _train_quantizers(
+        corpus, id_col, vec_col, kmeans_iters, n_lists=n_lists,
+        dim=dim, m=m, k_codes=k_codes,
+    )
     d = os.path.join(table.root, "_indexes", f"ann_{uuid.uuid4().hex}")
     os.makedirs(d, exist_ok=True)
     qpath = os.path.join(d, "quantizer.json")

@@ -15,16 +15,19 @@
 
 Each operator has one implementation. Exact scoring (brute force, LSH
 and ADC re-rank) uses the sequential-fold vector primitives
-(functions/vectors.py). The three hot loops — coarse assignment
-(``_nearest_kernel``), PQ encoding (``_pq_assign_kernel``) and per-list
-pair scoring (``_pairscore_kernel``) — are numpy kernels behind
-``mapInPandas`` that repeat those folds' fp64 operations in the same
-order, so their distances match the JVM folds bit for bit. Outputs are
-pinned by golden digests (tests/test_llm_kernels.py) and the DuckDB
-oracle rows.
+(functions/vectors.py). The hot loops — coarse assignment
+(``_nearest_kernel``), PQ encoding (``_pq_assign_kernel``), the fused
+IVF-PQ encode (``_encode_kernel``), the Lloyd rounds that train both
+quantizers (``_lloyd_kernel``) and per-list pair scoring
+(``_pairscore_kernel``) — are numpy kernels behind ``mapInPandas``
+that repeat those folds' fp64 operations in the same order, so their
+distances match the JVM folds bit for bit. Outputs are pinned by
+golden digests (tests/test_llm_kernels.py) and the DuckDB oracle rows.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
@@ -50,10 +53,14 @@ def _spread(df: DataFrame) -> DataFrame:
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism)
 
-#: quantizer-training observability: every Lloyd round (coarse k-means
-#: or PQ codebook) increments ``lloyd_rounds``. The persisted-index
-#: probe path (llm/ann_index.py) pins this at ZERO — the fact that
-#: separates "loads the banked quantizer" from "silently retrains".
+
+#: quantizer-training observability: every Lloyd round of
+#: ``_train_quantizers`` increments ``lloyd_rounds`` once — one Spark
+#: job that updates every quantizer being trained, so a round that
+#: trains the coarse centroids and the PQ codebooks together counts
+#: once. The persisted-index probe path (llm/ann_index.py) pins this at
+#: ZERO — the fact that separates "loads the banked quantizer" from
+#: "silently retrains".
 TRAIN_METRICS = {"lloyd_rounds": 0}
 
 
@@ -207,6 +214,143 @@ def lsh_topk(
     )
 
 
+_Q6 = Decimal("0.000001")
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(double, 6)`` on the driver or in a kernel.
+    Catalyst routes a double through ``BigDecimal.valueOf``
+    (``Double.toString``, the shortest round-trip decimal) and then
+    ``setScale(6, HALF_UP)``; Python's ``repr`` is the same decimal and
+    ``Decimal.quantize(..., ROUND_HALF_UP)`` the same rounding. The
+    trailing ``+ 0.0`` folds a rounded ``-0.0`` to ``0.0``, because a
+    BigDecimal has no negative zero."""
+    return float(Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP)) + 0.0
+
+
+def _train_quantizers(corpus, corpus_id, vec_col, iters, n_lists=0,
+                      dim=0, m=0, k_codes=0):
+    """Lloyd's k-means for the IVF coarse quantizer (``n_lists``
+    centroids) and/or the PQ codebooks (``m`` subspaces of ``k_codes``
+    codewords each), trained in the SAME rounds. Returns ``(cents, pq)``;
+    a quantizer that was not asked for comes back ``None``.
+
+    Deterministic init: the first ``n_lists`` (resp. ``k_codes``)
+    corpus vectors by id, from one ordered ``limit`` collect. The
+    corpus is spread across all cores and pinned once
+    (``_materialize``). Each round is ONE Spark job: ``_lloyd_kernel``
+    assigns every row (coarse: cosine via ``_nearest_ids``; PQ: squared
+    L2 per subspace via ``_pq_argmin_codes``) and emits one
+    (count, fp64 sum) row per non-empty cluster of its partition, the
+    sum taken in row order. The driver adds the partials in partition
+    order, divides and rounds each component with ``_round6``: the same
+    operations, in the same order, as Spark's partial and final
+    ``avg`` followed by ``round(_, 6)``, so the centroids equal a
+    groupBy-mean round bit for bit. Rounding to 6 decimals keeps
+    last-ulp summation noise out of the next round's assignments. Only
+    the per-cluster partials reach the driver, never the corpus; an
+    empty cluster keeps its centroid."""
+    n_init = max(n_lists, k_codes if m else 0)
+    init = [
+        [float(x) for x in r[0]]
+        for r in corpus.orderBy(corpus_id).limit(n_init)
+        .select(vec_col).collect()
+    ]
+    cents = init[:n_lists] if n_lists else None
+    d = dim // m if m else 0
+    pq = (
+        [[v[j * d:(j + 1) * d] for v in init[:k_codes]] for j in range(m)]
+        if m else None
+    )
+    if iters <= 0:
+        return cents, pq
+    # spread BEFORE the rounds: on a one-file local corpus the rounds
+    # would otherwise run on one core. Only the vector column is pinned:
+    # the round-robin spread places rows by their bytes, and the
+    # partition partials (so the digest-pinned centroids) depend on
+    # that placement.
+    pinned = _materialize(
+        _spread(corpus).select(F.col(vec_col).alias("__v"))
+    )
+    for _ in range(iters):
+        TRAIN_METRICS["lloyd_rounds"] += 1
+        parts = pinned.mapInPandas(
+            _lloyd_kernel(cents, pq),
+            schema="space int, key int, n long, s array<double>",
+        ).collect()
+        total: dict[tuple[int, int], tuple[int, np.ndarray]] = {}
+        for r in parts:  # partition order, as Spark's final avg merge
+            n, acc = total.get((r["space"], r["key"]), (0, 0.0))
+            total[(r["space"], r["key"])] = (
+                n + r["n"], acc + np.asarray(r["s"], dtype=np.float64)
+            )
+
+        def mean(space, key, old):
+            if (space, key) not in total:
+                return old  # empty cluster keeps its centroid
+            n, acc = total[(space, key)]
+            return [_round6(x) for x in (acc / n).tolist()]
+
+        if cents is not None:
+            cents = [mean(-1, i, c) for i, c in enumerate(cents)]
+        if pq is not None:
+            pq = [
+                [mean(j, c, cb) for c, cb in enumerate(sub)]
+                for j, sub in enumerate(pq)
+            ]
+    return cents, pq
+
+
+def _lloyd_kernel(cents, pq):
+    """mapInPandas kernel for one shared Lloyd round: assigns each row
+    to its nearest coarse centroid (space -1) and to its nearest
+    codeword in every PQ subspace (space j), and accumulates per
+    cluster the count and the fp64 sum of the raw vector (or subspace
+    slice) in row order across the partition's batches. Emits one row
+    per non-empty (space, key) when the partition ends."""
+    C = None if cents is None else np.asarray(cents, dtype=np.float64)
+    cn = None if C is None else _cent_norms(C)
+    P = None if pq is None else np.asarray(pq, dtype=np.float64)
+
+    def fn(batches):
+        import pandas as pd
+
+        acc: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+
+        def add(space, keys, vals, k):
+            n, s = acc.setdefault(
+                space, (np.zeros(k, np.int64), np.zeros((k, vals.shape[1])))
+            )
+            n += np.bincount(keys, minlength=k)
+            np.add.at(s, keys, vals)  # unbuffered: row order per cluster
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            raw = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
+            )
+            x = raw.astype(np.float32).astype(np.float64)
+            if C is not None:
+                lists = _nearest_ids(x, C, cn, 1)[0][:, 0]
+                add(-1, lists, raw, len(C))
+            if P is not None:
+                d = P.shape[2]
+                for j in range(P.shape[0]):
+                    sl = slice(j * d, (j + 1) * d)
+                    add(j, _pq_argmin_codes(x[:, sl], P[j]), raw[:, sl],
+                        P.shape[1])
+        rows = [
+            (space, key, int(n[key]), s[key].tolist())
+            for space, (n, s) in sorted(acc.items())
+            for key in np.nonzero(n)[0].tolist()
+        ]
+        if rows:
+            yield pd.DataFrame(rows, columns=["space", "key", "n", "s"])
+
+    return fn
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     corpus_id: str = "vec_id",
@@ -214,54 +358,47 @@ def kmeans_centroids(
     k: int = 16,
     iters: int = 2,
 ) -> list[list[float]]:
-    """Distributed Lloyd's k-means for the IVF coarse quantizer.
+    """Distributed Lloyd's k-means for the IVF coarse quantizer: ``k``
+    centroids, cosine assignment, ``iters`` rounds of one Spark job each
+    (see ``_train_quantizers``)."""
+    return _train_quantizers(corpus, corpus_id, vec_col, iters, n_lists=k)[0]
 
-    Deterministic init (first ``k`` corpus vectors by id); each round
-    assigns every vector to its nearest centroid by cosine (the numpy
-    ``_nearest_kernel``; centroids travel in its closure) and recomputes
-    per-cluster per-dimension means via posexplode + groupBy. Only k*dim
-    scalars reach the driver per round — the corpus itself never does,
-    which is the shape that holds at 10^9 vectors. Centroid components
-    round to 6 decimals so partial-aggregation order can't leak last-ulp
-    noise into assignments.
-    """
-    cents = [
-        [float(x) for x in r["cv"]]
-        for r in corpus.orderBy(corpus_id)
-        .limit(k)
-        .select(F.col(vec_col).alias("cv"))
-        .collect()
-    ]
-    # spread BEFORE the rounds (r11): on a one-file local corpus the
-    # assignment pass otherwise runs on one core (at cluster scale the
-    # corpus already has thousands of splits and this is a cheap
-    # rebalance). Summation-order changes in the per-cluster means are
-    # absorbed by the documented round-6 convention — the same
-    # convention that keeps llm_embed_centroids hash-identical to
-    # DuckDB's differently-ordered avg.
-    corpus = _spread(corpus)
-    vec_type = dict(corpus.dtypes)[vec_col]
-    for _ in range(iters):
-        TRAIN_METRICS["lloyd_rounds"] += 1
-        assigned = corpus.select(
-            F.col(vec_col).alias("__v")
-        ).mapInPandas(
-            _nearest_kernel(cents, "__v", 1, False),
-            schema=f"__v {vec_type}, list_id int",
-        ).select("list_id", F.posexplode("__v").alias("pos", "v"))
-        means = (
-            assigned.groupBy("list_id", "pos")
-            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("m"))
-            .collect()
-        )
-        by_list: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_list.setdefault(r["list_id"], {})[r["pos"]] = r["m"]
-        cents = [
-            [vals[p] for p in sorted(vals)] if (vals := by_list.get(i)) else c
-            for i, c in enumerate(cents)  # empty cluster keeps its centroid
-        ]
-    return cents
+
+def _cent_norms(C):
+    """Centroid L2 norms with the same sequential fold as ``l2_norm``."""
+    cn = np.zeros(C.shape[0])
+    for d in range(C.shape[1]):
+        cn = cn + C[:, d] * C[:, d]
+    return np.sqrt(cn)
+
+
+def _nearest_ids(vecs, C, cn, n_keep):
+    """The ``n_keep`` nearest centroids of each row of ``vecs`` (fp64,
+    rows x dim) by cosine distance, and the rows' L2 norms; see
+    ``_nearest_kernel`` for why this equals the JVM fold bit for bit."""
+    n, dim = vecs.shape
+    acc = np.zeros(n)
+    for d in range(dim):
+        acc = acc + vecs[:, d] * vecs[:, d]
+    vn = np.sqrt(acc)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        D = np.empty((n, C.shape[0]))
+        for j in range(C.shape[0]):
+            cj = C[j]
+            accd = np.zeros(n)
+            for d in range(dim):
+                accd = accd + vecs[:, d] * cj[d]
+            D[:, j] = -(accd / (vn * cn[j]))
+    return np.argsort(D, axis=1, kind="stable")[:, :n_keep], vn
+
+
+def _f64(col):
+    """A pandas column of float vectors as an fp64 matrix, each element
+    cast float32 -> float64 first, exactly like ``as_double`` on the
+    stored embeddings."""
+    return np.stack(
+        [np.asarray(v, dtype=np.float32) for v in col]
+    ).astype(np.float64)
 
 
 def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
@@ -295,39 +432,15 @@ def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
     Centroids travel in the function closure (k*dim doubles — the
     pickled command Spark already broadcasts per stage), so the plan
     stays O(1) in k*dim and no centroid frame is joined in."""
-    import numpy as np
-
     C = np.asarray(cents, dtype=np.float64)  # k x dim
-    k, dim = C.shape
-    # centroid norms: the same sequential fold as l2_norm
-    cn = np.zeros(k)
-    for d in range(dim):
-        cn = cn + C[:, d] * C[:, d]
-    cn = np.sqrt(cn)
+    cn = _cent_norms(C)
 
     def fn(batches):
-        import pandas as pd
-
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]
-            ).astype(np.float64)
-            acc = np.zeros(n)
-            for d in range(dim):
-                acc = acc + vecs[:, d] * vecs[:, d]
-            vn = np.sqrt(acc)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                D = np.empty((n, k))
-                for j in range(k):
-                    cj = C[j]
-                    accd = np.zeros(n)
-                    for d in range(dim):
-                        accd = accd + vecs[:, d] * cj[d]
-                    D[:, j] = -(accd / (vn * cn[j]))
-            nearest = np.argsort(D, axis=1, kind="stable")[:, :n_keep]
+            nearest, vn = _nearest_ids(_f64(pdf[vec_col]), C, cn, n_keep)
             out = pdf.iloc[
                 np.repeat(np.arange(n), nearest.shape[1])
             ].reset_index(drop=True)
@@ -431,24 +544,17 @@ def _pairscore_kernel(threshold: float, id_field: str = "id",
     Arrow — 36M x 512 B at sf1; this ships n x n_probe rows, three
     orders of magnitude less.)
 
-    Rounding mirrors Spark's round(double, 6) exactly: Catalyst routes
-    doubles through BigDecimal.valueOf (Double.toString, the shortest
-    round-trip decimal) then setScale(6, HALF_UP); Python's repr() is
-    the same shortest-round-trip decimal and Decimal.quantize(...,
-    ROUND_HALF_UP) the same rounding. Only near-threshold survivors pay
-    the per-value Decimal cost — a raw cosine below threshold - 1e-6
-    cannot round up to the threshold (round moves a value by at most
-    5e-7), so the O(pairs) mask stays vectorized. The output is pinned
-    on real data at two SFs by tests/test_llm_kernels.py (golden digests
-    and an independent Spark-expression pair scorer) plus the oracle
-    rows."""
-    import numpy as np
+    Rounding mirrors Spark's round(double, 6) exactly (``_round6``).
+    Only near-threshold survivors pay the per-value Decimal cost — a raw
+    cosine below threshold - 1e-6 cannot round up to the threshold
+    (round moves a value by at most 5e-7), so the O(pairs) mask stays
+    vectorized. The output is pinned on real data at two SFs by
+    tests/test_llm_kernels.py (golden digests and an independent
+    Spark-expression pair scorer) plus the oracle rows."""
 
     def score(batches):
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
 
-        q6 = Decimal("0.000001")
         parts = [p for p in batches if len(p)]
         if not parts:
             return
@@ -465,9 +571,7 @@ def _pairscore_kernel(threshold: float, id_field: str = "id",
             g = g.sort_values(id_field, kind="mergesort")
             ids = g[id_field].to_numpy()
             vn = g[norm_field].to_numpy(dtype=np.float64)
-            V = np.stack(
-                [np.asarray(x, dtype=np.float32) for x in g[vec_field]]
-            ).astype(np.float64)
+            V = _f64(g[vec_field])
             out_a, out_b, out_c = [], [], []
             for i0 in range(0, n - 1, blk):
                 i1 = min(i0 + blk, n)
@@ -486,11 +590,7 @@ def _pairscore_kernel(threshold: float, id_field: str = "id",
                     )
                 )
                 for i, j in zip(ia.tolist(), ja.tolist()):
-                    r = float(
-                        Decimal(repr(cs[i, j])).quantize(
-                            q6, rounding=ROUND_HALF_UP
-                        )
-                    )
+                    r = _round6(cs[i, j])
                     if r >= threshold:
                         out_a.append(ids[i0 + i])
                         out_b.append(ids[i0 + j])
@@ -569,13 +669,8 @@ def _pq_argmin_codes(S, C):
     most 5e-7, so the rounded argmin can differ from the raw argmin
     only when a competitor's raw distance sits within ~1e-6 of the raw
     minimum — those rare rows (ties included, broken by code order)
-    fall back to the exact rounding Spark applies
-    (BigDecimal.valueOf == Double.toString, then HALF_UP — mirrored by
-    ``Decimal(repr(x))``). Everything else stays vectorized."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q6 = Decimal("0.000001")
+    fall back to the exact rounding Spark applies (``_round6``).
+    Everything else stays vectorized."""
     n = S.shape[0]
     k = C.shape[0]
     D = np.zeros((n, k))
@@ -591,45 +686,32 @@ def _pq_argmin_codes(S, C):
     close = (D <= (m0[:, None] + 2.01e-6)).sum(axis=1)
     for i in np.nonzero(close > 1)[0].tolist():
         cand = np.nonzero(D[i] <= m0[i] + 2.01e-6)[0]
-        best[i] = min(
-            (
-                Decimal(repr(D[i, j])).quantize(
-                    q6, rounding=ROUND_HALF_UP
-                ),
-                j,
-            )
-            for j in cand.tolist()
-        )[1]
+        best[i] = min((_round6(D[i, j]), j) for j in cand.tolist())[1]
     return best
 
 
-def _pq_assign_kernel(cents, m: int, d: int):
-    """mapInPandas kernel assigning every subspace slice of every row to
-    its nearest codeword (r12, guide §4.2; same bit-identity discipline
-    as ``_nearest_kernel``) — one numpy pass instead of k_codes
-    interpreted ``_l2sq`` folds per slice. Input rows carry the raw
-    vector; all m subspace codes compute in one boundary crossing.
-    Emits the codes array per row."""
-    import numpy as np
+def _pq_codes(x, P):
+    """The m PQ codes of each row of ``x`` (fp64, rows x dim) against
+    codebooks ``P`` (m x k_codes x d), as an int32 rows x m matrix."""
+    m, _, d = P.shape
+    codes = np.empty((x.shape[0], m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = _pq_argmin_codes(x[:, j * d:(j + 1) * d], P[j])
+    return codes
 
-    C = np.asarray(cents, dtype=np.float64)  # m x k_codes x d
+
+def _pq_assign_kernel(pq):
+    """mapInPandas kernel assigning every subspace slice of every row to
+    its nearest codeword (same bit-identity discipline as
+    ``_nearest_kernel``) — one numpy pass instead of k_codes interpreted
+    ``_l2sq`` folds per slice. Input rows carry the raw vector as
+    ``__vec``; emits the codes array per row."""
+    P = np.asarray(pq, dtype=np.float64)  # m x k_codes x d
 
     def fn(batches):
-        import pandas as pd
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf["__vec"]]
-            ).astype(np.float64)
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                codes[:, j] = _pq_argmin_codes(
-                    V[:, j * d : (j + 1) * d], C[j]
-                )
-            yield pdf.assign(codes=list(codes))
+            if len(pdf):
+                yield pdf.assign(codes=list(_pq_codes(_f64(pdf["__vec"]), P)))
 
     return fn
 
@@ -644,82 +726,14 @@ def pq_codebooks(
     iters: int = 2,
 ) -> list[list[list[float]]]:
     """Per-subspace k-means codebooks (Jégou et al., PQ): split ``dim``
-    into ``m`` subspaces and learn ``k_codes`` centroids in each — ALL
-    subspaces trained in the SAME Lloyd rounds by tagging every slice
-    point with its subspace id, so the round count (and driver traffic:
-    m*k_codes*d scalars per round) does not grow with m.
-
-    Deterministic init (slices of the first ``k_codes`` vectors by id);
-    squared-L2 assignment; means rounded to 6 dp so partial-agg order
-    can't leak into assignments. Returns ``cents[sub][code] -> [d floats]``.
-    """
-    d = dim // m
-    init = [
-        [float(x) for x in r["v"]]
-        for r in corpus.orderBy(corpus_id)
-        .limit(k_codes)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    ]
-    cents = [
-        [init[c][j * d : (j + 1) * d] for c in range(k_codes)]
-        for j in range(m)
-    ]
-    # spread before slicing (r11): same single-partition serialization
-    # fix as kmeans_centroids — the sliced points otherwise train the
-    # codebooks on one core on a one-file local corpus
-    spread = _spread(corpus)
-    vec_type = dict(corpus.dtypes)[vec_col]
-    for _ in range(iters):
-        TRAIN_METRICS["lloyd_rounds"] += 1
-        # PQ assignment kernel (r12, guide §4.2): all m subspace codes
-        # per vector in ONE boundary crossing, numpy-vectorized with
-        # fold-order arithmetic and exact rounded tie handling — see
-        # _pq_assign_kernel / _pq_argmin_codes. The slice values the
-        # means need re-derive in codegen'd JVM slices below (cheap), so
-        # the kernel ships only the vector and the codes.
-        coded = spread.select(
-            F.col(vec_col).alias("__vec")
-        ).mapInPandas(
-            _pq_assign_kernel(cents, m, d),
-            schema=f"__vec {vec_type}, codes array<int>",
-        )
-        assigned = coded.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("sub"),
-                            F.element_at("codes", j + 1).alias("code"),
-                            F.slice(
-                                F.col("__vec").cast("array<double>"),
-                                j * d + 1,
-                                d,
-                            ).alias("sl"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("p")
-        ).select("p.sub", "p.code", F.posexplode("p.sl").alias("pos", "v"))
-        means = (
-            assigned.groupBy("sub", "code", "pos")
-            .agg(F.round(F.avg("v"), 6).alias("mv"))
-            .collect()
-        )
-        got: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            got.setdefault((r["sub"], r["code"]), {})[r["pos"]] = r["mv"]
-        cents = [
-            [
-                [vals[p] for p in sorted(vals)]
-                if (vals := got.get((j, c)))
-                else cents[j][c]  # empty cluster keeps its centroid
-                for c in range(k_codes)
-            ]
-            for j in range(m)
-        ]
-    return cents
+    into ``m`` subspaces and learn ``k_codes`` centroids in each, all
+    subspaces in the SAME Lloyd rounds (one Spark job per round, see
+    ``_train_quantizers``). Squared-L2 assignment; deterministic init
+    from slices of the first ``k_codes`` vectors by id. Returns
+    ``cents[sub][code] -> [d floats]``."""
+    return _train_quantizers(
+        corpus, corpus_id, vec_col, iters, dim=dim, m=m, k_codes=k_codes
+    )[1]
 
 
 def _pq_cent_frame(spark, cents):
@@ -754,16 +768,53 @@ def pq_encode(
     the raw embeddings (64x smaller at m=8 codes vs 64 floats). Runs the
     PQ assignment kernel: one boundary crossing per vector (see
     _pq_assign_kernel)."""
-    m, d = len(cents), len(cents[0][0])
     sel = df.select(
         F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec")
     )
     idt = dict(sel.dtypes)[out_id]
     vec_type = dict(sel.dtypes)["__vec"]
     return sel.mapInPandas(
-        _pq_assign_kernel(cents, m, d),
+        _pq_assign_kernel(cents),
         schema=f"{out_id} {idt}, __vec {vec_type}, codes array<int>",
     ).select(out_id, "codes")
+
+
+def _encode_kernel(cents, pq):
+    """mapInPandas kernel for the fused IVF-PQ encode: each row's
+    nearest coarse list (``_nearest_ids``) and its m PQ codes
+    (``_pq_codes``) from one boundary crossing."""
+    C = np.asarray(cents, dtype=np.float64)
+    cn = _cent_norms(C)
+    P = np.asarray(pq, dtype=np.float64)
+
+    def fn(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            x = _f64(pdf["__vec"])
+            yield pd.DataFrame({
+                "neighbor_id": pdf["neighbor_id"],
+                "list_id": _nearest_ids(x, C, cn, 1)[0][:, 0].astype(np.int32),
+                "codes": list(_pq_codes(x, P)),
+            })
+
+    return fn
+
+
+def _encode_frame(df: DataFrame, cents, pq, id_col, vec_col) -> DataFrame:
+    """(neighbor_id, list_id, codes) for every row of ``df`` through a
+    FIXED quantizer, in one pass over the spread rows — the encode that
+    ``ivfpq_topk`` and the persisted index's build and refresh share."""
+    sel = _spread(df).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vec")
+    )
+    idt = dict(sel.dtypes)["neighbor_id"]
+    return sel.mapInPandas(
+        _encode_kernel(cents, pq),
+        schema=f"neighbor_id {idt}, list_id int, codes array<int>",
+    )
 
 
 def pq_topk(
@@ -914,15 +965,14 @@ def ivfpq_topk(
     raw vector rides the probe join; vectors are touched only by the
     final bounded re-rank join. Classic (non-residual) PQ codebooks: at
     n_probe/n_lists coverage the residual refinement changes recall by
-    little and keeps both quantizers independently testable."""
-    cents = kmeans_centroids(corpus, corpus_id, vec_col, n_lists, kmeans_iters)
-    pq = pq_codebooks(corpus, dim, corpus_id, vec_col, m, k_codes, kmeans_iters)
-
-    c_lists = _nearest_lists(
-        _spread(corpus), cents, vec_col, (corpus_id, "neighbor_id"), "cv", 1
-    ).select("neighbor_id", "list_id")
-    codes = pq_encode(_spread(corpus), pq, corpus_id, vec_col)
-    corpus_scan = c_lists.join(codes, "neighbor_id")
+    little and keeps both quantizers independently testable. Both
+    quantizers train in the same Lloyd rounds, and one kernel pass
+    encodes each corpus row's list and codes (``_encode_frame``)."""
+    cents, pq = _train_quantizers(
+        corpus, corpus_id, vec_col, kmeans_iters, n_lists=n_lists,
+        dim=dim, m=m, k_codes=k_codes,
+    )
+    corpus_scan = _encode_frame(corpus, cents, pq, corpus_id, vec_col)
     corpus_vecs = _spread(corpus).select(
         F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )

@@ -2756,11 +2756,8 @@ def llm_ann_sql_lifecycle(spark, sf_dir):
     import json as _json
     import tempfile as _tf
 
-    from ..llm.ann_index import (
-        _deduped_scan,
-        _encode_frame,
-        ann_refresh_stream,
-    )
+    from ..llm.ann_index import _deduped_scan, ann_refresh_stream
+    from ..llm.similarity import _encode_frame
     from ..sources.snapshots import SnapshotTable, load_manifest
     from ..sql_dml import snapshot_sql
 

@@ -81,6 +81,19 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """The local driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half of the machine's ``MemTotal``, never above 24g (the JVM heap
+    must leave room for the Python workers and the page cache). A
+    machine without ``/proc/meminfo`` gets the 24g ceiling."""
+    try:
+        with open(meminfo) as f:
+            kb = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 << 10, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "s3_glue_redshift_guide_spark",
               cpus: int | None = None) -> SparkSession:
     """Local session sized from $SPARK_GRAFT_CPUS (default: all cores).
@@ -100,7 +113,10 @@ def get_spark(app_name: str = "s3_glue_redshift_guide_spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.sql.warehouse.dir", os.path.join(os.path.dirname(__file__), "..", ".spark-warehouse"))

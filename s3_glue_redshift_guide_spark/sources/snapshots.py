@@ -4900,7 +4900,10 @@ class SnapshotTable:
         width; the banked type only ever grows. Cross-family changes
         are rejected (that is a semantic change, not a widening), and
         the first widen bootstraps the reader schema from the current
-        snapshot (one footer union, once)."""
+        snapshot (one footer union, once). ``col`` is the column's
+        current (logical) name; a renamed field widens under its
+        current and every prior physical name, so files of every era
+        read at the new width."""
         if new_type not in _WIDEN_ORDER:
             raise ValueError(
                 f"{new_type!r} is not a widenable target; one of "
@@ -4916,7 +4919,21 @@ class SnapshotTable:
                 for n, t in self.read(cur).dtypes
                 if not n.startswith("__")
             }
-        if col not in types:
+        names = [col]
+        if m.get("schema"):
+            ent = next(
+                (
+                    e
+                    for e in m["schema"]
+                    if e["name"] == col and not e.get("dropped")
+                ),
+                None,
+            )
+            if ent is None:
+                raise KeyError(f"no column named {col!r}")
+            names += ent.get("prior", [])
+        known = [n for n in names if n in types]
+        if not known:
             raise KeyError(f"no column named {col!r}")
         bb = str(
             (m.get("properties") or {}).get("bucket.by") or ""
@@ -4930,13 +4947,13 @@ class SnapshotTable:
                 f"cannot widen {col!r}: it is the table's bucket.by "
                 "layout column (murmur3 hashes the widths differently)"
             )
-        widened = widen_merge(types[col], new_type)
-        if widened != new_type:
-            raise ValueError(
-                f"cannot widen {col!r} from {types[col]} to "
-                f"{new_type}: only up-moves within a family"
-            )
-        types[col] = new_type
+        for n in known:
+            if widen_merge(types[n], new_type) != new_type:
+                raise ValueError(
+                    f"cannot widen {col!r} from {types[n]} to "
+                    f"{new_type}: only up-moves within a family"
+                )
+        types.update(dict.fromkeys(names, new_type))
         return self._publish(
             m["files"], cur, m["stats"], types=types,
             op="WIDEN COLUMN",

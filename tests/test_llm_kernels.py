@@ -8,7 +8,12 @@ floats with ``repr``, so every double is pinned to the last bit). The
 digests were recorded while the retired Spark-expression folds still
 existed and matched these kernels bit for bit, and they were identical at
 local[1], [2] and [4] on sf0.01 and at local[1] and [4] on sf0.1, so they
-do not depend on the core count. The DuckDB oracle rows
+do not depend on the core count. The ``ivf_topk``, ``pq_topk`` and
+``ivfpq_topk`` digests (the registry's parameters, queries
+``vec_id < 10``) were recorded before the two quantizer trainers were
+folded into one set of shared Lloyd rounds and the IVF-PQ encode into
+one pass, and that change left them, and the ``kmeans_centroids`` and
+``pq_codebooks`` digests, unchanged. The DuckDB oracle rows
 (tests/test_oracle_parity.py) check the same operators from the other
 side.
 
@@ -43,6 +48,9 @@ GOLDEN = {
         "doc_shingle_sets": "670db29c8ae00411c6a1c6595a43cabc43ef6c17e7dad5ba65ffae77308d4033",
         "minhash_sigs": "ef6b40be8ca183848eda63d1a3f3eaa7ac19dd3f26ae543652d176d23d350f5d",
         "minhash_near_dup_pairs": "f01a361b061754e2cecdc509523cb3de835b75b5edb251593bfbd9f463c83bc9",
+        "ivf_topk": "a6de2914cdae91b1c6193bedf9f2e915cf159ca48dcba4549dfae96062fe3bc7",
+        "pq_topk": "3184f025d71d1f6d8f45be2211914578c4d54f857694df575aabde02b693c452",
+        "ivfpq_topk": "a6de2914cdae91b1c6193bedf9f2e915cf159ca48dcba4549dfae96062fe3bc7",
     },
     "sf0.1": {
         "kmeans_centroids": "29327f9f9a118eb6bbc996ef1f6cd007941f19df246fe4570ddab4a83b34fbd2",
@@ -54,6 +62,9 @@ GOLDEN = {
         "doc_shingle_sets": "7457a79ce5b9ba713d6a04ccad5d78f679ba55d1351baeee0c74e67c58ddfcc6",
         "minhash_sigs": "d93f23402480b5f94826eca0059e962e997aab45ab869748f7e3323fb206624c",
         "minhash_near_dup_pairs": "f9bf1a6d090464b8b69e5f594ba88f254d3364b154365b4a6b7e8441b350aa79",
+        "ivf_topk": "001559492f8882bd6d57290e24e9bfed3667aa705fa2ba30f1ee3ebfa81ade63",
+        "pq_topk": "5ab1e0cd6f75f9321095f35444bdff4aff1ec0df0834bc7172b0f7bd84e97c4f",
+        "ivfpq_topk": "948d13b895555c5532bb139c97f744ff29e65b93c66f1d2c4692408bc48f6665",
     },
 }
 
@@ -134,6 +145,29 @@ class _KernelOutputs:
             threshold=0.5,
         ))
 
+    # the three ANN searches with the registry's parameters over the
+    # registry's query set (vec_id < 10)
+    @cached_property
+    def queries(self):
+        return self.emb.filter(F.col("vec_id") < 10)
+
+    def ivf_topk(self):
+        return _json_rows(S.ivf_topk(
+            self.queries, self.emb, k=5, n_lists=16, n_probe=4
+        ))
+
+    def pq_topk(self):
+        return _json_rows(S.pq_topk(
+            self.queries, self.emb, dim=64, k=5, m=8, k_codes=16,
+            n_candidates=60,
+        ))
+
+    def ivfpq_topk(self):
+        return _json_rows(S.ivfpq_topk(
+            self.queries, self.emb, dim=64, k=5, n_lists=16, n_probe=4,
+            m=8, k_codes=16, n_candidates=60,
+        ))
+
 
 @pytest.fixture(scope="module")
 def kernel_outputs(spark):
@@ -159,6 +193,55 @@ def test_kernel_output_matches_golden_digest(kernel_outputs, sf, name):
 
 def _emb(spark):
     return load_table(spark, SF, "embeddings")
+
+
+def _job_count(spark, name, fn) -> int:
+    """Spark jobs one call of ``fn`` launches, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_shared_rounds_equal_separate_trainers(kernel_outputs):
+    """Training the coarse quantizer and the PQ codebooks in the same
+    Lloyd rounds gives exactly the centroids and codebooks that
+    ``kmeans_centroids`` and ``pq_codebooks`` train alone (both pinned
+    by digest above), including when the two need different numbers of
+    init vectors."""
+    ko = kernel_outputs("sf0.01")
+    cents, pq = S._train_quantizers(
+        ko.emb, "vec_id", "embedding", 2, n_lists=8, dim=64, m=8, k_codes=16
+    )
+    assert cents == ko.cents
+    assert pq == ko.codebooks
+
+
+def test_kmeans_round_is_one_job(spark):
+    """Two Lloyd rounds cost four jobs: the ordered init collect, the
+    spread's shuffle behind the pinned corpus, and one job per round.
+    A per-round shuffle or groupBy-mean stage moves this number."""
+    e = _emb(spark)
+    n = _job_count(spark, "kmeans", lambda: S.kmeans_centroids(e, k=16, iters=2))
+    assert n <= 4, n
+
+
+def test_ivfpq_topk_job_count(spark):
+    """The registry's IVF-PQ search at sf0.01: shared training rounds
+    and one fused encode pass run 19 jobs at 4 and 8 cores (17 at one
+    core). Two separate Lloyd loops of three jobs per round and an
+    encode joined from two passes ran 31 at 4 cores."""
+    e = _emb(spark)
+    q = e.filter(F.col("vec_id") < 10)
+    n = _job_count(spark, "ivfpq", lambda: S.ivfpq_topk(
+        q, e, dim=64, k=5, n_lists=16, n_probe=4, m=8, k_codes=16,
+        n_candidates=60,
+    ).collect())
+    assert n <= 19, n
 
 
 def test_semantic_dedup_kernel_matches_expression_reference(spark):

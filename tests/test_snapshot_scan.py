@@ -1,5 +1,6 @@
 """The one snapshot read path (``SnapshotTable._scan``) and what rides on
-it: the index refresh across a widened column, DML verbs that match
+it: the index refresh across a widened column, widening a renamed
+column, DML verbs that match
 nothing, clones that carry the source manifest like every other commit,
 and the cluster.by layout shared by appends and REWRITE PHYSICAL."""
 
@@ -49,6 +50,36 @@ def test_ann_refresh_reads_files_across_a_widened_column(spark, tmp_path):
     assert sorted(r[0] for r in fresh.select("neighbor_id").collect()) == (
         list(range(40, 60))
     )
+
+
+def test_widen_a_renamed_column_under_its_current_name(spark, tmp_path):
+    """A table that already banks reader types, then a rename: the
+    field widens under its new name, its old physical name widens with
+    it, and files of both eras read back at the new width."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit_append(
+        spark.range(10).select(
+            F.col("id").cast("int").alias("k"),
+            (F.col("id") * 2).cast("int").alias("v"),
+        ).coalesce(1)
+    )
+    t.widen_column("k", "bigint")
+    t.rename_column("v", "val")
+    t.widen_column("val", "bigint")
+    types = load_manifest(t.root, t.current_version())["types"]
+    assert types["v"] == types["val"] == "bigint"
+    t.commit_append(
+        spark.range(100, 105).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("val")
+        ).coalesce(1)
+    )
+    got = t.read()
+    assert dict(got.dtypes)["val"] == "bigint"
+    assert sorted(r["val"] for r in got.collect()) == (
+        [2 * i for i in range(10)] + [2 * i for i in range(100, 105)]
+    )
+    with pytest.raises(KeyError):
+        t.widen_column("v", "bigint")  # the old name is not a column
 
 
 def _kv(spark, n=50):
