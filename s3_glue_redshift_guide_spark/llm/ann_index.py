@@ -251,8 +251,11 @@ def ann_probe(
     n_candidates: int = 60,
 ) -> DataFrame:
     """Probe the banked index: NO training, no corpus encode — the
-    query pays quantizer-load (driver KBs) + candidate-list code reads
-    + the bounded exact re-rank against the live table."""
+    query pays quantizer-load (KBs of JSON), one collect of the query
+    batch (its probe lists and ADC tables are built in numpy),
+    one ``ivfpq_search`` scan pass over the banked codes that keeps
+    only each task's per-query top-``n_candidates``, and the bounded
+    exact re-rank against the live table."""
     m_head = load_manifest(table.root, table.current_version())
     ann = m_head.get("ann")
     if not ann:
@@ -273,7 +276,6 @@ def ann_probe(
         corpus_vecs,
         q["cents"],
         q["pq"],
-        int(q["dim"]),
         query_id=query_id,
         vec_col=ann["vec_col"],
         k=k,

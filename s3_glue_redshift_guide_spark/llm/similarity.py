@@ -16,9 +16,10 @@
 Each operator has one implementation. Exact scoring (brute force, LSH
 and ADC re-rank) uses the sequential-fold vector primitives
 (functions/vectors.py). The hot loops — coarse assignment
-(``_nearest_kernel``), PQ encoding (``_pq_assign_kernel``), the fused
-IVF-PQ encode (``_encode_kernel``), the Lloyd rounds that train both
-quantizers (``_lloyd_kernel``) and per-list pair scoring
+(``_nearest_kernel``), the fused IVF-PQ and PQ encode
+(``_encode_kernel``), the Lloyd rounds that train both
+quantizers (``_lloyd_kernel``), the PQ searches' ADC scan
+(``_adc_scan_kernel``) and per-list pair scoring
 (``_pairscore_kernel``) — are numpy kernels behind ``mapInPandas``
 that repeat those folds' fp64 operations in the same order, so their
 distances match the JVM folds bit for bit. Outputs are pinned by
@@ -41,7 +42,7 @@ def _spread(df: DataFrame) -> DataFrame:
     """Full-width fan-out for the VECTOR operators — deliberately NOT
     the byte-capped ``dedup._spread`` (r12, measured): these call sites
     feed stages whose per-row work is multiplied by a broadcast factor
-    (the ADC scan folds one distance-table lookup chain per QUERY per
+    (the ADC scan sums one distance-table lookup chain per QUERY per
     row; pair scoring is O(occupancy²) per list), so a width derived
     from input bytes under-provisions them. Measured at sf1 with the
     byte cap (width 21 instead of 32):
@@ -226,6 +227,28 @@ def _round6(x: float) -> float:
     trailing ``+ 0.0`` folds a rounded ``-0.0`` to ``0.0``, because a
     BigDecimal has no negative zero."""
     return float(Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP)) + 0.0
+
+
+def _round6_vec(x):
+    """``_round6`` over an fp64 array, element for element. Below 1e5
+    the product ``|x| * 1e6`` is within 2e-5 of the scaled repr decimal
+    (half an ulp of x, scaled, plus the product's own rounding), so its
+    fraction decides HALF_UP unless it lies within 1e-4 of one half; ``n / 1e6`` is then the correctly rounded double
+    of the decimal ``n * 10^-6``, as ``float(Decimal)`` is. Near-half
+    fractions and magnitudes from 1e5 up take the exact ``_round6``
+    path; NaN and infinities pass through, as in Spark."""
+    x = np.asarray(x, dtype=np.float64)
+    a = np.abs(x)
+    with np.errstate(invalid="ignore"):
+        s = a * 1e6
+        f = np.floor(s)
+        frac = s - f
+        out = np.copysign((f + (frac >= 0.5)) / 1e6, x) + 0.0
+        slow = np.isfinite(x) & ((a >= 1e5) | (np.abs(frac - 0.5) < 1e-4))
+    out[~np.isfinite(x)] = x[~np.isfinite(x)]
+    for i in zip(*np.nonzero(slow)):
+        out[i] = _round6(x[i])
+    return out
 
 
 def _train_quantizers(corpus, corpus_id, vec_col, iters, n_lists=0,
@@ -650,37 +673,35 @@ def semantic_dedup_pairs(
 
 
 # ------------------------- product quantization (PQ) -------------------
-def _l2sq(a, b):
-    """Squared L2 between two double arrays — sequential fold, bit-stable."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _pq_argmin_codes(S, C):
-    """Per-row nearest-codeword index within ONE subspace, replicating
-    Spark's semantics bit-for-bit: distances are ``round(_l2sq, 6)`` and
-    the winner is the (rounded distance, code) struct-sort minimum.
-
-    numpy computes the RAW squared distances with the fold's exact
-    per-dimension accumulation order. Rounding can move a value by at
-    most 5e-7, so the rounded argmin can differ from the raw argmin
-    only when a competitor's raw distance sits within ~1e-6 of the raw
-    minimum — those rare rows (ties included, broken by code order)
-    fall back to the exact rounding Spark applies (``_round6``).
-    Everything else stays vectorized."""
-    n = S.shape[0]
-    k = C.shape[0]
-    D = np.zeros((n, k))
-    for j in range(k):
+def _sq_dists(S, C):
+    """Raw squared L2 between each row of ``S`` (fp64, rows x d) and
+    each codeword of ``C`` (k x d), rows x k: the JVM fold
+    ``acc + (x_t - c_t)^2`` from 0.0 in dimension order."""
+    D = np.zeros((S.shape[0], C.shape[0]))
+    for j in range(C.shape[0]):
         cj = C[j]
-        acc = np.zeros(n)
+        acc = np.zeros(S.shape[0])
         for d in range(S.shape[1]):
             t = S[:, d] - cj[d]
             acc = acc + t * t
         D[:, j] = acc
+    return D
+
+
+def _pq_argmin_codes(S, C):
+    """Per-row nearest-codeword index within ONE subspace, replicating
+    Spark's semantics bit-for-bit: distances are the squared-L2 fold
+    (``_sq_dists``) rounded like ``round(_, 6)``, and the winner is the
+    (rounded distance, code) struct-sort minimum.
+
+    Rounding can move a value by at most 5e-7, so the rounded argmin
+    can differ from the raw argmin only when a competitor's raw
+    distance sits within ~1e-6 of the raw minimum — those rare rows
+    (ties included, broken by code order) fall back to the exact
+    rounding Spark applies (``_round6``). Everything else stays
+    vectorized."""
+    n = S.shape[0]
+    D = _sq_dists(S, C)
     best = np.argmin(D, axis=1)  # ties: lowest code (argmin is first)
     m0 = D[np.arange(n), best]
     close = (D <= (m0[:, None] + 2.01e-6)).sum(axis=1)
@@ -698,22 +719,6 @@ def _pq_codes(x, P):
     for j in range(m):
         codes[:, j] = _pq_argmin_codes(x[:, j * d:(j + 1) * d], P[j])
     return codes
-
-
-def _pq_assign_kernel(pq):
-    """mapInPandas kernel assigning every subspace slice of every row to
-    its nearest codeword (same bit-identity discipline as
-    ``_nearest_kernel``) — one numpy pass instead of k_codes interpreted
-    ``_l2sq`` folds per slice. Input rows carry the raw vector as
-    ``__vec``; emits the codes array per row."""
-    P = np.asarray(pq, dtype=np.float64)  # m x k_codes x d
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pdf.assign(codes=list(_pq_codes(_f64(pdf["__vec"]), P)))
-
-    return fn
 
 
 def pq_codebooks(
@@ -736,26 +741,6 @@ def pq_codebooks(
     )[1]
 
 
-def _pq_cent_frame(spark, cents):
-    """Codebooks as DATA (1-row broadcastable
-    ``array<struct<sub:int, code:int, cent:array<double>>>`` sorted by
-    (sub, code) so flat index = sub*k + code), broadcast-attached to the
-    query side to build each query's ADC distance table. Keeps the
-    compiled plan O(1) in m*k_codes*d; literals would bloat it at
-    realistic scale (m=96, k=256, d=8)."""
-    rows = [
-        (j, c, cents[j][c])
-        for j in range(len(cents))
-        for c in range(len(cents[j]))
-    ]
-    cdf = spark.createDataFrame(rows, "sub int, code int, cent array<double>")
-    return cdf.agg(
-        F.array_sort(F.collect_list(F.struct("sub", "code", "cent"))).alias(
-            "__pqc"
-        )
-    )
-
-
 def pq_encode(
     df: DataFrame,
     cents,
@@ -766,26 +751,35 @@ def pq_encode(
     """Compress each vector to its m nearest-codeword indices — the
     8-byte-per-vector representation the candidate scan reads INSTEAD of
     the raw embeddings (64x smaller at m=8 codes vs 64 floats). Runs the
-    PQ assignment kernel: one boundary crossing per vector (see
-    _pq_assign_kernel)."""
-    sel = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec")
+    encode kernel without a coarse quantizer: one boundary crossing per
+    vector (see ``_encode_frame``)."""
+    return _encode_frame(df, None, cents, id_col, vec_col).select(
+        F.col("neighbor_id").alias(out_id), "codes"
     )
-    idt = dict(sel.dtypes)[out_id]
-    vec_type = dict(sel.dtypes)["__vec"]
-    return sel.mapInPandas(
-        _pq_assign_kernel(cents),
-        schema=f"{out_id} {idt}, __vec {vec_type}, codes array<int>",
-    ).select(out_id, "codes")
+
+
+def _encoder(cents, pq):
+    """The fused IVF-PQ encode of an fp64 row block: each row's nearest
+    coarse list (``_nearest_ids``; list 0 for every row when ``cents``
+    is None) and its m PQ codes (``_pq_codes``)."""
+    C = None if cents is None else np.asarray(cents, dtype=np.float64)
+    cn = None if C is None else _cent_norms(C)
+    P = np.asarray(pq, dtype=np.float64)
+
+    def encode(x):
+        lists = (
+            np.zeros(len(x), np.int32) if C is None
+            else _nearest_ids(x, C, cn, 1)[0][:, 0].astype(np.int32)
+        )
+        return lists, _pq_codes(x, P)
+
+    return encode
 
 
 def _encode_kernel(cents, pq):
-    """mapInPandas kernel for the fused IVF-PQ encode: each row's
-    nearest coarse list (``_nearest_ids``) and its m PQ codes
-    (``_pq_codes``) from one boundary crossing."""
-    C = np.asarray(cents, dtype=np.float64)
-    cn = _cent_norms(C)
-    P = np.asarray(pq, dtype=np.float64)
+    """mapInPandas kernel for the fused IVF-PQ encode (``_encoder``):
+    a row's list and codes from one boundary crossing."""
+    encode = _encoder(cents, pq)
 
     def fn(batches):
         import pandas as pd
@@ -793,28 +787,180 @@ def _encode_kernel(cents, pq):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = _f64(pdf["__vec"])
+            lists, codes = encode(_f64(pdf["__vec"]))
             yield pd.DataFrame({
                 "neighbor_id": pdf["neighbor_id"],
-                "list_id": _nearest_ids(x, C, cn, 1)[0][:, 0].astype(np.int32),
-                "codes": list(_pq_codes(x, P)),
+                "list_id": lists,
+                "codes": list(codes),
             })
 
     return fn
 
 
+def _vec_scan(df: DataFrame, id_col, vec_col) -> DataFrame:
+    """(neighbor_id, __vec) over the spread rows of ``df``: the input
+    of the encode pass and of the encoding ADC scan."""
+    return _spread(df).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vec")
+    )
+
+
+def _corpus_vecs(corpus: DataFrame, corpus_id, vec_col) -> DataFrame:
+    """(neighbor_id, cv) read straight from the corpus for the re-rank."""
+    return corpus.select(
+        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+
+
 def _encode_frame(df: DataFrame, cents, pq, id_col, vec_col) -> DataFrame:
     """(neighbor_id, list_id, codes) for every row of ``df`` through a
     FIXED quantizer, in one pass over the spread rows — the encode that
-    ``ivfpq_topk`` and the persisted index's build and refresh share."""
-    sel = _spread(df).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vec")
-    )
+    ``pq_encode`` (no coarse quantizer) and the persisted index's build
+    and refresh share."""
+    sel = _vec_scan(df, id_col, vec_col)
     idt = dict(sel.dtypes)["neighbor_id"]
     return sel.mapInPandas(
         _encode_kernel(cents, pq),
         schema=f"neighbor_id {idt}, list_id int, codes array<int>",
     )
+
+
+# ------------------------- ADC scan --------------------------------------
+def _query_tables(ids, vecs, cents, pq, n_probe):
+    """The query side of the ADC scan, in numpy, for a collected batch
+    (``ids``, raw vectors ``vecs``): ``(qids, probes, dtab)``.
+
+    * ``probes`` maps each coarse list to the ascending indices of the
+      queries that probe it — each query's ``n_probe`` nearest lists by
+      ``_nearest_ids`` over the float32-cast vector, as the corpus
+      assignment. With ``cents`` None every query probes list 0.
+    * ``dtab[q, j, c]`` is the ADC table: the squared-L2 fold of query
+      slice j (fp64) against codeword c (``_sq_dists``), rounded like
+      Spark's ``round(_, 6)`` (``_round6_vec``)."""
+    P = np.asarray(pq, dtype=np.float64)  # m x k_codes x d
+    m, k_codes, d = P.shape
+    n = len(ids)
+    X = (
+        np.asarray(vecs, dtype=np.float64).reshape(n, -1) if n
+        else np.zeros((0, m * d))
+    )
+    dtab = np.empty((n, m, k_codes))
+    for j in range(m):
+        dtab[:, j, :] = _round6_vec(_sq_dists(X[:, j * d:(j + 1) * d], P[j]))
+    if cents is None:
+        nearest = np.zeros((n, 1), np.int64)
+    else:
+        C = np.asarray(cents, dtype=np.float64)
+        nearest = _nearest_ids(
+            X.astype(np.float32).astype(np.float64), C, _cent_norms(C),
+            n_probe,
+        )[0]
+    probes: dict[int, np.ndarray] = {}
+    for q, lists in enumerate(nearest.tolist()):
+        for lst in lists:
+            probes.setdefault(lst, []).append(q)
+    probes = {lst: np.asarray(qs) for lst, qs in probes.items()}
+    return np.asarray(ids), probes, dtab
+
+
+def _top_n(q, adc, nid, n):
+    """The first ``n`` rows of each query index ``q`` by
+    ``(adc, nid)``, as three arrays sorted by ``(q, adc, nid)``."""
+    order = np.lexsort((nid, adc, q))
+    q, adc, nid = q[order], adc[order], nid[order]
+    keep = np.arange(len(q)) - np.searchsorted(q, q) < n
+    return q[keep], adc[keep], nid[keep]
+
+
+def _adc_scan_kernel(tables, n_keep, encode=None, block=1 << 17):
+    """mapInPandas kernel of the ADC scan: every (query, row) pair whose
+    list the query probes gets the ADC distance, and only each query's
+    running top-``n_keep`` by ``(adc, neighbor_id)`` leaves the task.
+
+    ``tables`` is a broadcast of ``_query_tables``'s ``(qids, probes,
+    dtab)``. Rows carry ``(neighbor_id, list_id, codes)``, or
+    ``(neighbor_id, __vec)``, which the same pass encodes first with
+    ``encode`` (an ``_encoder``). Per coarse list in the batch, the
+    probing queries score the list's rows in blocks of at most
+    ``block`` pairs: ``acc + dtab[q, j, code_j]`` for j = 0..m-1 from
+    0.0, then ``_round6_vec`` — the JVM's ``aggregate`` over the m
+    table lookups followed by ``round(_, 6)``, bit for bit.
+    Self-matches drop, and each block merges into the running state
+    (``_top_n``), so a task holds at most one block plus |Q|*n_keep
+    rows whatever its partition size. Neighbor ids are unique in the
+    scan (corpus ids; the index's deduplicated code generations)."""
+
+    def fn(batches):
+        import pandas as pd
+
+        qids, probes, dtab = tables.value
+        m = dtab.shape[1]
+        state = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            nid = pdf["neighbor_id"].to_numpy()
+            if encode is not None:
+                lists, codes = encode(_f64(pdf["__vec"]))
+            else:
+                lists = pdf["list_id"].to_numpy()
+                codes = np.stack(pdf["codes"].to_numpy())
+            order = np.argsort(lists, kind="stable")
+            ul, starts = np.unique(lists[order], return_index=True)
+            for lst, rows in zip(ul.tolist(), np.split(order, starts[1:])):
+                qs = probes.get(lst)
+                if qs is None:
+                    continue
+                step = max(1, block // len(qs))
+                for r0 in range(0, len(rows), step):
+                    blk = rows[r0:r0 + step]
+                    acc = np.zeros((len(qs), len(blk)))
+                    for j in range(m):
+                        acc = acc + dtab[qs, j][:, codes[blk, j]]
+                    qq = np.repeat(qs, len(blk))
+                    nn = np.tile(nid[blk], len(qs))
+                    ok = qids[qq] != nn
+                    new = (qq[ok], _round6_vec(acc).ravel()[ok], nn[ok])
+                    if state is not None:
+                        new = [np.concatenate(c) for c in zip(state, new)]
+                    state = _top_n(*new, n_keep)
+        if state is not None and len(state[0]):
+            q, adc, nn = state
+            yield pd.DataFrame(
+                {"query_id": qids[q], "neighbor_id": nn, "adc": adc}
+            )
+
+    return fn
+
+
+def _adc_candidates(qside, scan: DataFrame, cents, pq, n_probe,
+                    n_candidates):
+    """The global ADC candidate window of a search:
+    ``(query_id, neighbor_id, adc)``, each query's first
+    ``n_candidates`` by ``(adc, neighbor_id)``, and the collected query
+    rows. ``qside`` is the query batch as ``(query_id, qv)``; it is
+    collected once, its tables are built in numpy (``_query_tables``)
+    and broadcast, and ONE ``mapInPandas`` pass of
+    ``_adc_scan_kernel`` over ``scan`` emits each task's survivors; a
+    ``row_number`` window merges them."""
+    sc = qside.sparkSession.sparkContext
+    rows = qside.collect()
+    tables = sc.broadcast(_query_tables(
+        [r[0] for r in rows], [r[1] for r in rows], cents, pq, n_probe
+    ))
+    qt, nt = dict(qside.dtypes)["query_id"], dict(scan.dtypes)["neighbor_id"]
+    encode = _encoder(cents, pq) if "__vec" in scan.columns else None
+    survivors = scan.mapInPandas(
+        _adc_scan_kernel(tables, n_candidates, encode),
+        schema=f"query_id {qt}, neighbor_id {nt}, adc double",
+    )
+    wc = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    cand = (
+        survivors.withColumn("__r", F.row_number().over(wc))
+        .filter(F.col("__r") <= n_candidates)
+        .drop("__r")
+    )
+    return cand, rows
 
 
 def pq_topk(
@@ -836,106 +982,19 @@ def pq_topk(
     dim multiplies), takes its ``n_candidates`` best, and re-ranks only
     those exactly by cosine.
 
-    Scale shape: the candidate scan reads the 8-byte code column — at
-    10^9x768-dim corpus that is ~8 GB instead of ~3 TB of floats — and
-    the distance table (m*k_codes doubles per query) is MATERIALIZED on
-    the tiny query side before the scan join so Catalyst cannot re-inline
-    the table build per candidate row (which would silently restore
-    exact-scan cost). Raw vectors are touched only for the n_candidates
-    re-rank join."""
-    d = dim // m
-    cents = pq_codebooks(
+    The search is ``ivfpq_search`` with one list that every query
+    probes: one pass encodes each spread corpus row and scores it
+    against every query's table (``_adc_scan_kernel``), and only
+    |Q|*n_candidates rows per task leave it. Raw vectors are read again
+    only for the bounded re-rank."""
+    pq = pq_codebooks(
         corpus, dim, corpus_id, vec_col, m, k_codes, kmeans_iters
     )
-    codes = pq_encode(_spread(corpus), cents, corpus_id, vec_col)
-    qtab = _materialize(
-        queries.crossJoin(
-            F.broadcast(_pq_cent_frame(queries.sparkSession, cents))
-        ).select(
-            F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            # query norm hoisted into the barrier (r11): the exact
-            # re-rank folds it once per QUERY here instead of once per
-            # candidate pair
-            l2_norm(F.col(vec_col)).alias("__qn"),
-            F.transform(
-                F.col("__pqc"),
-                lambda c: F.round(
-                    _l2sq(
-                        F.slice(
-                            F.col(vec_col).cast("array<double>"),
-                            c["sub"] * d + 1,
-                            d,
-                        ),
-                        c["cent"],
-                    ),
-                    6,
-                ),
-            ).alias("dtab"),
-        )
-    )
-    adc = (
-        F.broadcast(qtab.drop("qv"))
-        .crossJoin(codes)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, j: acc
-                    + F.element_at(
-                        F.col("dtab"),
-                        j * k_codes + F.element_at(F.col("codes"), j + 1) + 1,
-                    ),
-                ),
-                6,
-            ).alias("adc"),
-        )
-    )
-    # the candidate window shuffles 20-byte scalar rows; qv re-attaches
-    # from the broadcast query side only for the bounded re-rank
-    wc = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    # the candidate frame is MATERIALIZED: it now has TWO consumers (the
-    # norm semi-join below + the re-rank join), and without the barrier
-    # each consumer re-derives it — i.e. the whole ADC scan + candidate
-    # window runs twice, the exact cost the PQ design exists to avoid
-    cand = _materialize(
-        adc.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    # candidate-scoped corpus norms (r12, VERDICT-r11 #3): the corpus-side
-    # L2 norm used to fold once per candidate PAIR in the re-rank
-    # projection (a neighbor serving many queries re-folded its norm per
-    # query). The semi-join scopes the norm projection to the surviving
-    # candidates — never the full corpus, so sparse candidate sets don't
-    # regress — and the projection sits below the re-rank join (the join
-    # node blocks CollapseProject), so each surviving neighbor folds its
-    # norm exactly once. Same fold, same order: cos_sim bit-identical.
-    cvn = _spread(corpus).select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).join(
-        cand.select("neighbor_id").distinct(), "neighbor_id", "left_semi"
-    ).select("neighbor_id", "cv", l2_norm(F.col("cv")).alias("__cn"))
-    exact = cand.join(
-        F.broadcast(qtab.select("query_id", "qv", "__qn")), "query_id"
-    ).join(cvn, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("qv"), F.col("cv"))
-            / (F.col("__qn") * F.col("__cn")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return ivfpq_search(
+        queries, _vec_scan(corpus, corpus_id, vec_col),
+        _corpus_vecs(corpus, corpus_id, vec_col), None, pq,
+        query_id=query_id, vec_col=vec_col, k=k, n_probe=1,
+        n_candidates=n_candidates,
     )
 
 
@@ -956,28 +1015,24 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ ANN (the FAISS IVFPQ composition — the actual 10^9-vector
     path): the coarse quantizer bounds WHICH corpus rows each query
-    touches (an equi-join on ``list_id`` — no cross join anywhere in the
-    operator plan), and PQ codes bound WHAT each touched row costs (m
-    lookup-adds over an 8-byte code instead of dim float multiplies).
-    Exact cosine re-rank of the per-query ADC top-``n_candidates``.
+    touches (only rows of its ``n_probe`` lists are scored — no cross
+    join anywhere in the operator plan), and PQ codes bound WHAT each
+    touched row costs (m lookup-adds over an 8-byte code instead of dim
+    float multiplies). Exact cosine re-rank of the per-query ADC
+    top-``n_candidates``.
 
-    The candidate scan frame carries (list_id, neighbor_id, codes) — no
-    raw vector rides the probe join; vectors are touched only by the
-    final bounded re-rank join. Classic (non-residual) PQ codebooks: at
-    n_probe/n_lists coverage the residual refinement changes recall by
-    little and keeps both quantizers independently testable. Both
-    quantizers train in the same Lloyd rounds, and one kernel pass
-    encodes each corpus row's list and codes (``_encode_frame``)."""
+    Classic (non-residual) PQ codebooks: at n_probe/n_lists coverage
+    the residual refinement changes recall by little and keeps both
+    quantizers independently testable. Both quantizers train in the
+    same Lloyd rounds; the scan pass encodes each corpus row's list
+    and codes and scores it in the same task (see ``ivfpq_search``)."""
     cents, pq = _train_quantizers(
         corpus, corpus_id, vec_col, kmeans_iters, n_lists=n_lists,
         dim=dim, m=m, k_codes=k_codes,
     )
-    corpus_scan = _encode_frame(corpus, cents, pq, corpus_id, vec_col)
-    corpus_vecs = _spread(corpus).select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
     return ivfpq_search(
-        queries, corpus_scan, corpus_vecs, cents, pq, dim,
+        queries, _vec_scan(corpus, corpus_id, vec_col),
+        _corpus_vecs(corpus, corpus_id, vec_col), cents, pq,
         query_id=query_id, vec_col=vec_col, k=k,
         n_probe=n_probe, n_candidates=n_candidates,
     )
@@ -987,103 +1042,58 @@ def ivfpq_search(
     queries: DataFrame,
     corpus_scan: DataFrame,
     corpus_vecs: DataFrame,
-    cents: list[list[float]],
+    cents: list[list[float]] | None,
     pq,
-    dim: int,
     query_id: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 4,
     n_candidates: int = 60,
 ) -> DataFrame:
-    """The IVF-PQ SEARCH given a trained quantizer and an encoded
-    corpus — shared verbatim between ``ivfpq_topk`` (trains + encodes
-    in-query) and the persisted-index probe path (``llm/ann_index.py``
-    loads both from snapshot-table sidecars), so the two can never
-    rank differently. ``corpus_scan`` carries (neighbor_id, list_id,
-    codes); ``corpus_vecs`` carries (neighbor_id, cv) and is touched
-    only by the bounded exact re-rank — probing it from the LIVE table
+    """The IVF-PQ SEARCH given a trained quantizer — shared by
+    ``ivfpq_topk`` and ``pq_topk`` (train in-query; ``cents`` None is
+    one list every query probes) and the persisted-index probe path
+    (``llm/ann_index.py`` loads both quantizers and the codes from
+    snapshot-table sidecars), so they can never rank differently.
+
+    ``corpus_scan`` carries (neighbor_id, list_id, codes), or
+    (neighbor_id, __vec) to encode in the scan pass. The query batch is
+    collected once; its probe lists and ADC tables are computed in
+    numpy and broadcast, and one ``mapInPandas`` pass
+    (``_adc_scan_kernel``) leaves at most |Q|*n_candidates rows per
+    task. A ``row_number`` window picks the global candidates, which
+    are materialized and re-ranked exactly by cosine against
+    ``corpus_vecs`` (neighbor_id, cv) — probing it from the LIVE table
     is what drops deleted vectors out of persisted-index results."""
-    m, k_codes = len(pq), len(pq[0])
-    d = dim // m
-    q_lists = _nearest_lists(
-        queries, cents, vec_col, (query_id, "query_id"), "qv", n_probe
-    ).select("query_id", "list_id")
-    qtab = _materialize(
-        queries.crossJoin(
-            F.broadcast(_pq_cent_frame(queries.sparkSession, pq))
-        ).select(
-            F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            # query norm hoisted into the barrier (r11): the exact
-            # re-rank folds it once per QUERY here instead of once per
-            # candidate pair
-            l2_norm(F.col(vec_col)).alias("__qn"),
-            F.transform(
-                F.col("__pqc"),
-                lambda c: F.round(
-                    _l2sq(
-                        F.slice(
-                            F.col(vec_col).cast("array<double>"),
-                            c["sub"] * d + 1,
-                            d,
-                        ),
-                        c["cent"],
-                    ),
-                    6,
-                ),
-            ).alias("dtab"),
-        )
+    qside = queries.select(
+        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    adc = (
-        q_lists.join(corpus_scan, "list_id")
-        .join(F.broadcast(qtab.drop("qv")), "query_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, j: acc
-                    + F.element_at(
-                        F.col("dtab"),
-                        j * k_codes + F.element_at(F.col("codes"), j + 1) + 1,
-                    ),
-                ),
-                6,
-            ).alias("adc"),
-        )
-        # a (query, neighbor) pair may meet in several probed lists; the
-        # dedup + candidate window key on 20-byte scalar rows — no vector
-        # payload rides either exchange (qv re-attaches from the broadcast
-        # query side only for the bounded re-rank)
-        .distinct()
+    cand, rows = _adc_candidates(
+        qside, corpus_scan, cents, pq, n_probe, n_candidates
     )
-    wc = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    # materialized: two consumers (norm semi-join + re-rank join) would
-    # otherwise each re-derive the probe join + ADC scan + window
-    cand = _materialize(
-        adc.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= n_candidates)
-        .select("query_id", "neighbor_id")
+    # materialized: two consumers (the id semi-join and the re-rank
+    # join) would otherwise each re-run the scan
+    cand = _materialize(cand.select("query_id", "neighbor_id"))
+    # the query side re-enters from the collected rows, so the batch is
+    # evaluated once; its norm folds once per QUERY (the join node
+    # blocks CollapseProject)
+    import pandas as pd
+
+    qv = qside.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=qside.columns), qside.schema
+    ).select(
+        "query_id", "qv", l2_norm(F.col("qv")).alias("__qn")
     )
-    # candidate-scoped corpus norms (r12, VERDICT-r11 #3): semi-join
-    # scopes the norm projection to surviving candidates, the projection
-    # below the re-rank join folds each neighbor's norm exactly once
-    # (was: once per candidate PAIR). Same fold, same order —
-    # cos_sim bit-identical; the live-table probe semantics (deleted
-    # vectors drop out via the inner join) are unchanged, the semi-join
-    # only narrows the side that the inner join would filter anyway.
+    # candidate-scoped corpus norms: the broadcast id semi-join scopes
+    # the corpus read to surviving candidates without moving the
+    # corpus, and each surviving neighbor folds its norm exactly once.
+    # Same fold, same order — cos_sim bit-identical; deleted vectors
+    # drop out via the inner join.
     cvn = corpus_vecs.join(
-        cand.select("neighbor_id").distinct(), "neighbor_id", "left_semi"
+        F.broadcast(cand.select("neighbor_id")), "neighbor_id", "left_semi"
     ).select("neighbor_id", "cv", l2_norm(F.col("cv")).alias("__cn"))
-    exact = cand.join(
-        F.broadcast(qtab.select("query_id", "qv", "__qn")), "query_id"
-    ).join(
-        cvn,
-        "neighbor_id",
+    exact = cand.join(F.broadcast(qv), "query_id").join(
+        cvn, "neighbor_id"
     ).select(
         "query_id",
         "neighbor_id",

@@ -872,11 +872,12 @@ def llm_pq_topk(spark, sf_dir):
 @query("llm_ivfpq_topk", oracle=_SQL_ANN_RECALL)
 def llm_ivfpq_topk(spark, sf_dir):
     """IVF-PQ ANN top-5 (L3, the FAISS IVFPQ composition): the coarse
-    quantizer bounds WHICH rows a query touches (list_id equi-join — the
-    operator plan has no cross join), PQ codes bound WHAT each touched
-    row costs (8 lookup-adds vs 64 float multiplies), exact re-rank of
-    the ADC top-60. The gate checks recall >= 2/5 per query vs the exact
-    top-5 (empirically 3-5/5 at sf0.01; deterministic end to end)."""
+    quantizer bounds WHICH rows a query touches (only its probed lists
+    are scored — the operator plan has no cross join), PQ codes bound
+    WHAT each touched row costs (8 lookup-adds vs 64 float multiplies),
+    exact re-rank of the ADC top-60. The gate checks recall >= 2/5 per
+    query vs the exact top-5 (empirically 3-5/5 at sf0.01; deterministic
+    end to end)."""
     return _ann_recall_query(
         spark, sf_dir,
         lambda q, e: ivfpq_topk(q, e, dim=64, k=5, n_lists=16, n_probe=4,

@@ -13,7 +13,12 @@ do not depend on the core count. The ``ivf_topk``, ``pq_topk`` and
 ``vec_id < 10``) were recorded before the two quantizer trainers were
 folded into one set of shared Lloyd rounds and the IVF-PQ encode into
 one pass, and that change left them, and the ``kmeans_centroids`` and
-``pq_codebooks`` digests, unchanged. The DuckDB oracle rows
+``pq_codebooks`` digests, unchanged. The ``pq_topk_candidates`` and
+``ivfpq_topk_candidates`` digests (the global ADC candidate windows of
+those two searches) were recorded at local[1] and [4], identical, while
+the Spark-expression ADC scan (a materialized distance table and one
+``aggregate`` fold per pair) still existed; the numpy scan kernel that
+replaced it reproduces them. The DuckDB oracle rows
 (tests/test_oracle_parity.py) check the same operators from the other
 side.
 
@@ -26,8 +31,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+from decimal import ROUND_HALF_UP, Decimal
 from functools import cached_property
+from types import SimpleNamespace
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,6 +60,8 @@ GOLDEN = {
         "ivf_topk": "a6de2914cdae91b1c6193bedf9f2e915cf159ca48dcba4549dfae96062fe3bc7",
         "pq_topk": "3184f025d71d1f6d8f45be2211914578c4d54f857694df575aabde02b693c452",
         "ivfpq_topk": "a6de2914cdae91b1c6193bedf9f2e915cf159ca48dcba4549dfae96062fe3bc7",
+        "pq_topk_candidates": "613a777ee56340621f03104cf0a5140e39b9139676d58db9a289bb925f4ff306",
+        "ivfpq_topk_candidates": "4254ffbe083bc220cacb6b789133f0cea992c3faf4df26b8e34b4c1500bd5406",
     },
     "sf0.1": {
         "kmeans_centroids": "29327f9f9a118eb6bbc996ef1f6cd007941f19df246fe4570ddab4a83b34fbd2",
@@ -65,6 +76,8 @@ GOLDEN = {
         "ivf_topk": "001559492f8882bd6d57290e24e9bfed3667aa705fa2ba30f1ee3ebfa81ade63",
         "pq_topk": "5ab1e0cd6f75f9321095f35444bdff4aff1ec0df0834bc7172b0f7bd84e97c4f",
         "ivfpq_topk": "948d13b895555c5532bb139c97f744ff29e65b93c66f1d2c4692408bc48f6665",
+        "pq_topk_candidates": "706083663c5a3c63fb693896449e7b70986bf5d6f53008723e3872bb61920273",
+        "ivfpq_topk_candidates": "f808693e36adc50e493c5a08ba4e9f9bf086daa937d206e9fbb5f542af0e3eae",
     },
 }
 
@@ -168,6 +181,28 @@ class _KernelOutputs:
             m=8, k_codes=16, n_candidates=60,
         ))
 
+    # the global ADC candidate windows (query_id, neighbor_id, adc) of
+    # the two PQ searches above, before the exact re-rank: a last-ulp
+    # ADC change can leave the final top-5 alone but moves these
+    def _candidates(self, cents, pq, n_probe):
+        qside = self.queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        )
+        scan = S._vec_scan(self.emb, "vec_id", "embedding")
+        return _json_rows(
+            S._adc_candidates(qside, scan, cents, pq, n_probe, 60)[0]
+        )
+
+    def pq_topk_candidates(self):
+        return self._candidates(None, self.codebooks, 1)
+
+    def ivfpq_topk_candidates(self):
+        cents, pq = S._train_quantizers(
+            self.emb, "vec_id", "embedding", 2, n_lists=16, dim=64, m=8,
+            k_codes=16,
+        )
+        return self._candidates(cents, pq, 4)
+
 
 @pytest.fixture(scope="module")
 def kernel_outputs(spark):
@@ -231,17 +266,129 @@ def test_kmeans_round_is_one_job(spark):
 
 
 def test_ivfpq_topk_job_count(spark):
-    """The registry's IVF-PQ search at sf0.01: shared training rounds
-    and one fused encode pass run 19 jobs at 4 and 8 cores (17 at one
-    core). Two separate Lloyd loops of three jobs per round and an
-    encode joined from two passes ran 31 at 4 cores."""
+    """The registry's IVF-PQ search at sf0.01: shared training rounds,
+    one query collect, one pass that encodes and scores each corpus row
+    and the bounded re-rank run 12 jobs at 4 and 8 cores (11 at one
+    core). A query-side assignment job, a materialized ADC table, the
+    list_id join with its distinct and a corpus-wide re-rank spread
+    ran 19; two separate Lloyd loops before that ran 31."""
     e = _emb(spark)
     q = e.filter(F.col("vec_id") < 10)
     n = _job_count(spark, "ivfpq", lambda: S.ivfpq_topk(
         q, e, dim=64, k=5, n_lists=16, n_probe=4, m=8, k_codes=16,
         n_candidates=60,
     ).collect())
-    assert n <= 19, n
+    assert n <= 12, n
+
+
+def test_pq_topk_job_count(spark):
+    """The registry's PQ search at sf0.01: the codebook rounds, one
+    query collect, one encode-and-score pass and the bounded re-rank
+    run 12 jobs at 4 and 8 cores (11 at one core). A materialized
+    query table, a cross-join ADC fold and a corpus-wide re-rank spread
+    ran 17."""
+    e = _emb(spark)
+    q = e.filter(F.col("vec_id") < 10)
+    n = _job_count(spark, "pq", lambda: S.pq_topk(
+        q, e, dim=64, k=5, m=8, k_codes=16, n_candidates=60,
+    ).collect())
+    assert n <= 12, n
+
+
+def _round6_all(xs):
+    return np.array([S._round6(x) for x in xs.tolist()])
+
+
+def _same_doubles(a, b):
+    """Element for element, NaN equal to NaN and -0.0 apart from 0.0."""
+    return bool(np.all(
+        ((a == b) & (np.signbit(a) == np.signbit(b)))
+        | (np.isnan(a) & np.isnan(b))
+    ))
+
+
+def test_round6_vec_mirrors_round6():
+    """The vectorized rounding mirror equals the scalar one (Spark's
+    ``round(x, 6)``) element for element, including where only the
+    exact ``Decimal`` path can decide."""
+    rng = np.random.default_rng(7)
+    mags = 10.0 ** rng.uniform(-3, 3, 100_000)
+    xs = mags * rng.choice([-1.0, 1.0], mags.size)
+    assert _same_doubles(S._round6_vec(xs), _round6_all(xs))
+    # half-way decimals k + 0.0000005 (k on the 1e-6 grid), both signs
+    ks = rng.integers(0, 10**9, 20_000)
+    half = np.array([
+        float(Decimal(int(k)) / 10**6 + Decimal("0.0000005")) for k in ks
+    ]) * rng.choice([-1.0, 1.0], ks.size)
+    assert _same_doubles(S._round6_vec(half), _round6_all(half))
+    # those whose binary expansion rounds differently from the repr
+    # decimal Spark rounds: the near-half exact path must catch them
+    split = np.array([
+        x for x in half.tolist()
+        if Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        != Decimal(x).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+    ])
+    assert split.size > 100
+    assert _same_doubles(S._round6_vec(split), _round6_all(split))
+    edge = np.array([-0.0, 0.0, np.nan, -4e-7, 5e-7, -5e-7, 123456.5e-6,
+                     100000.0000005, -2.5e10 - 0.5e-6, 1e20])
+    got = S._round6_vec(edge)
+    assert _same_doubles(got, _round6_all(edge))
+    assert not np.signbit(got[0]) and np.isnan(got[2])
+
+
+def _scan(tables, n_keep, batches, block):
+    fn = S._adc_scan_kernel(SimpleNamespace(value=tables), n_keep,
+                            block=block)
+    return pd.concat(list(fn(iter(batches))), ignore_index=True)
+
+
+def test_adc_scan_kernel_keeps_exact_per_query_top_n():
+    """The scan kernel alone, without Spark: many small batches (one
+    empty), ties in adc, self-ids, and a query whose only probed list
+    never appears. Its output holds at most |Q|*n rows and, per query,
+    exactly the brute-force first n by (adc, neighbor_id), whether a
+    list's rows score in one block or in blocks of a few pairs."""
+    rng = np.random.default_rng(11)
+    m, k_codes, n_rows, n_keep = 4, 8, 300, 7
+    qids = np.array([3, 17, 42, 99, 1000, 5])
+    # coarse values so that many ADC sums tie
+    dtab = rng.integers(0, 4, (len(qids), m, k_codes)) / 10.0
+    probes = {0: np.array([0, 1, 2]), 1: np.array([0, 3]),
+              2: np.array([1, 2, 4]), 3: np.array([4]), 9: np.array([5])}
+    nid = rng.permutation(np.arange(n_rows) * 3 + 2)  # holds 17 and 5
+    lists = rng.integers(0, 4, n_rows).astype(np.int32)
+    codes = rng.integers(0, k_codes, (n_rows, m)).astype(np.int32)
+    # the row of id 17 would be query 17's nearest: only the self-match
+    # rule keeps it out
+    dtab[1, :, 0] = 0.0
+    lists[nid == 17], codes[nid == 17] = 0, 0
+    cuts = np.sort(rng.choice(np.arange(1, n_rows), 60, replace=False))
+    batches = [
+        pd.DataFrame({"neighbor_id": nid[i:j], "list_id": lists[i:j],
+                      "codes": list(codes[i:j])})
+        for i, j in zip([0, *cuts], [*cuts, n_rows])
+    ]
+    batches.insert(5, batches[0].iloc[:0])
+    want = {}
+    for q, qid in enumerate(qids.tolist()):
+        want[qid] = []
+        for r in range(n_rows):
+            if q not in probes.get(int(lists[r]), ()) or nid[r] == qid:
+                continue
+            acc = 0.0
+            for j in range(m):
+                acc = acc + dtab[q, j, codes[r, j]]
+            want[qid].append((S._round6(acc), int(nid[r])))
+        want[qid] = sorted(want[qid])[:n_keep]
+    for block in (1 << 17, 5):
+        got = _scan((qids, probes, dtab), n_keep, batches, block)
+        assert len(got) <= len(qids) * n_keep
+        for qid, rows in want.items():
+            mine = got[got.query_id == qid]
+            assert sorted(zip(mine.adc, mine.neighbor_id)) == rows
+        assert 5 not in set(got.query_id)  # its only list is absent
+        assert len(got) == 5 * n_keep
 
 
 def test_semantic_dedup_kernel_matches_expression_reference(spark):

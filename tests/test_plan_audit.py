@@ -64,18 +64,14 @@ def test_flags_mid_pipeline_global_sort(spark):
 #   llm_semantic_dedup            — same: the exact-pair count in the facts
 #                                   harness is a deliberate brute force the
 #                                   operator itself avoids
-#   llm_pq_topk                   — two sources: the recall harness's exact
-#                                   side (as above), AND the PQ operator's
-#                                   own ADC pass — a deliberate
-#                                   compressed-domain linear scan (each
-#                                   query x 8-byte code rows, m adds per
-#                                   pair), the FAISS IndexPQ design point;
-#                                   the row pairing is |Q|x|C| but the
-#                                   payload is 64x smaller than floats and
-#                                   |Q| is a bounded search batch. The
-#                                   10^9-corpus composition is IVF lists
-#                                   over PQ codes (candidates via the
-#                                   list_id equi-join as in llm_ivf_topk)
+#   llm_pq_topk                   — the recall harness's exact side (as
+#                                   above). The PQ operator's own ADC pass
+#                                   is no longer a cross join: one kernel
+#                                   pass scores each code row against the
+#                                   broadcast query tables in-task (a
+#                                   compressed-domain linear scan, the
+#                                   FAISS IndexPQ design point), so the
+#                                   operator plan holds no cartesian node
 ALLOWED_HIGH = {
     "join_theta",
     "join_cross",

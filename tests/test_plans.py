@@ -183,19 +183,27 @@ def test_ann_candidate_dedup_carries_no_vectors(spark):
 
 
 def test_ivfpq_operator_plan_is_cartesian_free_and_payload_clean(spark):
-    # the IVFPQ operator itself (not the recall harness) must pair
-    # candidates via the list_id equi-join — no cross join — and its
-    # exchanges must carry code/scalar rows, never query/corpus vectors
+    # the IVFPQ operator itself (not the recall harness) must have no
+    # cross join, its exchanges must carry code/scalar rows, never
+    # query/corpus vectors, and the re-rank must read the corpus where
+    # it lies: no round-robin spread of the whole corpus, neither in the
+    # initial plan nor in the plan AQE finally ran
     from s3_glue_redshift_guide_spark.catalog import load_table
     from s3_glue_redshift_guide_spark.llm.similarity import ivfpq_topk
 
     e = load_table(spark, SF_SMOKE, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    plan = ivfpq_topk(q, e, dim=64)._jdf.queryExecution().executedPlan().toString()
+    df = ivfpq_topk(q, e, dim=64)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     for line in plan.splitlines():
         if "hashpartitioning" in line:
             assert "qv#" not in line and "cv#" not in line, line
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    for p in (plan, final):
+        assert "RoundRobinPartitioning" not in p, p
 
 
 def test_vocab_topk_and_broadcast_joinback(spark):
