@@ -43,7 +43,9 @@ import uuid
 from pyspark.sql import DataFrame, functions as F
 
 from ..sources.snapshots import SnapshotTable, load_manifest
-from .similarity import _encode_frame, _train_quantizers, ivfpq_search
+from .similarity import (
+    _corpus_vecs, _encode_frame, _train_quantizers, ivfpq_search,
+)
 
 
 def ann_index_build(
@@ -266,14 +268,10 @@ def ann_probe(
     # newest generation shadows re-encoded ids; at one generation (or
     # after ann_index_optimize compacts) this is a shuffle-free scan
     scan = _deduped_scan(spark, ann)
-    corpus_vecs = table.read().select(
-        F.col(ann["id_col"]).alias("neighbor_id"),
-        F.col(ann["vec_col"]).alias("cv"),
-    )
     return ivfpq_search(
         queries,
         scan,
-        corpus_vecs,
+        _corpus_vecs(table.read(), ann["id_col"], ann["vec_col"]),
         q["cents"],
         q["pq"],
         query_id=query_id,

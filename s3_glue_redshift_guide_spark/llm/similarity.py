@@ -225,30 +225,21 @@ def _round6(x: float) -> float:
     ``setScale(6, HALF_UP)``; Python's ``repr`` is the same decimal and
     ``Decimal.quantize(..., ROUND_HALF_UP)`` the same rounding. The
     trailing ``+ 0.0`` folds a rounded ``-0.0`` to ``0.0``, because a
-    BigDecimal has no negative zero."""
-    return float(Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP)) + 0.0
+    BigDecimal has no negative zero. From 2^52 up a double is an
+    integer, so it rounds to itself; that guard also passes NaN and
+    infinities through, as Spark does, and keeps huge magnitudes out
+    of the 28-digit ``Decimal`` context."""
+    x = float(x)
+    if not abs(x) < 2.0**52:
+        return x + 0.0
+    return float(Decimal(repr(x)).quantize(_Q6, ROUND_HALF_UP)) + 0.0
 
 
-def _round6_vec(x):
-    """``_round6`` over an fp64 array, element for element. Below 1e5
-    the product ``|x| * 1e6`` is within 2e-5 of the scaled repr decimal
-    (half an ulp of x, scaled, plus the product's own rounding), so its
-    fraction decides HALF_UP unless it lies within 1e-4 of one half; ``n / 1e6`` is then the correctly rounded double
-    of the decimal ``n * 10^-6``, as ``float(Decimal)`` is. Near-half
-    fractions and magnitudes from 1e5 up take the exact ``_round6``
-    path; NaN and infinities pass through, as in Spark."""
-    x = np.asarray(x, dtype=np.float64)
-    a = np.abs(x)
-    with np.errstate(invalid="ignore"):
-        s = a * 1e6
-        f = np.floor(s)
-        frac = s - f
-        out = np.copysign((f + (frac >= 0.5)) / 1e6, x) + 0.0
-        slow = np.isfinite(x) & ((a >= 1e5) | (np.abs(frac - 0.5) < 1e-4))
-    out[~np.isfinite(x)] = x[~np.isfinite(x)]
-    for i in zip(*np.nonzero(slow)):
-        out[i] = _round6(x[i])
-    return out
+def _round6_all(a):
+    """``_round6`` over every element of an fp64 array."""
+    a = np.asarray(a, dtype=np.float64)
+    return np.fromiter(map(_round6, a.ravel().tolist()), np.float64,
+                       a.size).reshape(a.shape)
 
 
 def _train_quantizers(corpus, corpus_id, vec_col, iters, n_lists=0,
@@ -836,7 +827,7 @@ def _query_tables(ids, vecs, cents, pq, n_probe):
       assignment. With ``cents`` None every query probes list 0.
     * ``dtab[q, j, c]`` is the ADC table: the squared-L2 fold of query
       slice j (fp64) against codeword c (``_sq_dists``), rounded like
-      Spark's ``round(_, 6)`` (``_round6_vec``)."""
+      Spark's ``round(_, 6)`` (``_round6_all``)."""
     P = np.asarray(pq, dtype=np.float64)  # m x k_codes x d
     m, k_codes, d = P.shape
     n = len(ids)
@@ -846,7 +837,7 @@ def _query_tables(ids, vecs, cents, pq, n_probe):
     )
     dtab = np.empty((n, m, k_codes))
     for j in range(m):
-        dtab[:, j, :] = _round6_vec(_sq_dists(X[:, j * d:(j + 1) * d], P[j]))
+        dtab[:, j, :] = _round6_all(_sq_dists(X[:, j * d:(j + 1) * d], P[j]))
     if cents is None:
         nearest = np.zeros((n, 1), np.int64)
     else:
@@ -883,19 +874,27 @@ def _adc_scan_kernel(tables, n_keep, encode=None, block=1 << 17):
     ``encode`` (an ``_encoder``). Per coarse list in the batch, the
     probing queries score the list's rows in blocks of at most
     ``block`` pairs: ``acc + dtab[q, j, code_j]`` for j = 0..m-1 from
-    0.0, then ``_round6_vec`` — the JVM's ``aggregate`` over the m
+    0.0, then ``_round6_all`` — the JVM's ``aggregate`` over the m
     table lookups followed by ``round(_, 6)``, bit for bit.
-    Self-matches drop, and each block merges into the running state
-    (``_top_n``), so a task holds at most one block plus |Q|*n_keep
-    rows whatever its partition size. Neighbor ids are unique in the
-    scan (corpus ids; the index's deduplicated code generations)."""
+    Self-matches drop. Scored blocks pend until they outgrow
+    max(``block``, |Q|*n_keep) rows and then merge into the running
+    state (``_top_n``), so a task holds O(``block`` + |Q|*n_keep) rows
+    whatever its partition size. Neighbor ids are unique in the scan
+    (corpus ids; the index's deduplicated code generations)."""
 
     def fn(batches):
         import pandas as pd
 
         qids, probes, dtab = tables.value
         m = dtab.shape[1]
-        state = None
+        cap = max(block, len(qids) * n_keep)
+        pending, n_pending = [], 0
+
+        def merged():
+            return _top_n(
+                *(np.concatenate(c) for c in zip(*pending)), n_keep
+            )
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -920,12 +919,15 @@ def _adc_scan_kernel(tables, n_keep, encode=None, block=1 << 17):
                     qq = np.repeat(qs, len(blk))
                     nn = np.tile(nid[blk], len(qs))
                     ok = qids[qq] != nn
-                    new = (qq[ok], _round6_vec(acc).ravel()[ok], nn[ok])
-                    if state is not None:
-                        new = [np.concatenate(c) for c in zip(state, new)]
-                    state = _top_n(*new, n_keep)
-        if state is not None and len(state[0]):
-            q, adc, nn = state
+                    pending.append(
+                        (qq[ok], _round6_all(acc.ravel()[ok]), nn[ok])
+                    )
+                    n_pending += int(ok.sum())
+                    if n_pending > cap:
+                        pending = [merged()]
+                        n_pending = len(pending[0][0])
+        if n_pending:
+            q, adc, nn = merged()
             yield pd.DataFrame(
                 {"query_id": qids[q], "neighbor_id": nn, "adc": adc}
             )

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from decimal import ROUND_HALF_UP, Decimal
+import math
 from functools import cached_property
 from types import SimpleNamespace
 
@@ -295,46 +295,23 @@ def test_pq_topk_job_count(spark):
     assert n <= 12, n
 
 
-def _round6_all(xs):
-    return np.array([S._round6(x) for x in xs.tolist()])
-
-
-def _same_doubles(a, b):
-    """Element for element, NaN equal to NaN and -0.0 apart from 0.0."""
-    return bool(np.all(
-        ((a == b) & (np.signbit(a) == np.signbit(b)))
-        | (np.isnan(a) & np.isnan(b))
-    ))
-
-
-def test_round6_vec_mirrors_round6():
-    """The vectorized rounding mirror equals the scalar one (Spark's
-    ``round(x, 6)``) element for element, including where only the
-    exact ``Decimal`` path can decide."""
-    rng = np.random.default_rng(7)
-    mags = 10.0 ** rng.uniform(-3, 3, 100_000)
-    xs = mags * rng.choice([-1.0, 1.0], mags.size)
-    assert _same_doubles(S._round6_vec(xs), _round6_all(xs))
-    # half-way decimals k + 0.0000005 (k on the 1e-6 grid), both signs
-    ks = rng.integers(0, 10**9, 20_000)
-    half = np.array([
-        float(Decimal(int(k)) / 10**6 + Decimal("0.0000005")) for k in ks
-    ]) * rng.choice([-1.0, 1.0], ks.size)
-    assert _same_doubles(S._round6_vec(half), _round6_all(half))
-    # those whose binary expansion rounds differently from the repr
-    # decimal Spark rounds: the near-half exact path must catch them
-    split = np.array([
-        x for x in half.tolist()
-        if Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-        != Decimal(x).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-    ])
-    assert split.size > 100
-    assert _same_doubles(S._round6_vec(split), _round6_all(split))
-    edge = np.array([-0.0, 0.0, np.nan, -4e-7, 5e-7, -5e-7, 123456.5e-6,
-                     100000.0000005, -2.5e10 - 0.5e-6, 1e20])
-    got = S._round6_vec(edge)
-    assert _same_doubles(got, _round6_all(edge))
-    assert not np.signbit(got[0]) and np.isnan(got[2])
+def test_round6_rounds_like_spark():
+    """``_round6`` is Spark's ``round(x, 6)``: HALF_UP on the shortest
+    repr decimal (not on the binary expansion), no negative zero, and
+    integers from 2^52 up, NaN and infinities returned as they are."""
+    r = S._round6
+    assert r(5e-07) == 1e-06 and r(-5e-07) == -1e-06
+    assert r(0.1234565) == 0.123457 and r(0.5000005) == 0.500001
+    assert r(12.3456785) == 12.345679
+    assert str(r(-4e-07)) == "0.0" and str(r(-0.0)) == "0.0"
+    assert r(2.0**52 - 0.5) == 2.0**52 - 0.5
+    for x in (1e22, -1e22, 1e300, 2.0**52, float("inf"), float("-inf")):
+        assert r(x) == x
+    assert math.isnan(r(float("nan")))
+    got = S._round6_all(np.array([[0.1234565, -0.0], [1e22, -4e-07]]))
+    assert got.shape == (2, 2)
+    assert got.tolist() == [[0.123457, 0.0], [1e22, 0.0]]
+    assert not np.signbit(got).any()
 
 
 def _scan(tables, n_keep, batches, block):
