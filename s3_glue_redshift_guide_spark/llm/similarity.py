@@ -341,18 +341,15 @@ def _lloyd_kernel(cents, pq):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            raw = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-            )
-            x = raw.astype(np.float32).astype(np.float64)
+            raw = _f64(pdf["__v"])
             if C is not None:
-                lists = _nearest_ids(x, C, cn, 1)[0][:, 0]
+                lists = _nearest_ids(raw, C, cn, 1)[0][:, 0]
                 add(-1, lists, raw, len(C))
             if P is not None:
                 d = P.shape[2]
                 for j in range(P.shape[0]):
                     sl = slice(j * d, (j + 1) * d)
-                    add(j, _pq_argmin_codes(x[:, sl], P[j]), raw[:, sl],
+                    add(j, _pq_argmin_codes(raw[:, sl], P[j]), raw[:, sl],
                         P.shape[1])
         rows = [
             (space, key, int(n[key]), s[key].tolist())
@@ -408,11 +405,10 @@ def _nearest_ids(vecs, C, cn, n_keep):
 
 def _f64(col):
     """A pandas column of float vectors as an fp64 matrix, each element
-    cast float32 -> float64 first, exactly like ``as_double`` on the
-    stored embeddings."""
-    return np.stack(
-        [np.asarray(v, dtype=np.float32) for v in col]
-    ).astype(np.float64)
+    read as float64 exactly like ``as_double`` on the stored embeddings:
+    ``array<float>`` values widen exactly, ``array<double>`` values keep
+    every bit."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
 
 
 def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
@@ -434,8 +430,8 @@ def _nearest_kernel(cents, vec_col: str, n_keep: int, norm: bool):
       ties  ->  stable argsort on d (list_id IS the column order, so
       stability == the tiebreak; NaN sorts last in both engines).
 
-    Elements cast float32 -> float64 BEFORE arithmetic, exactly like
-    ``as_double``. Assignments are therefore bit-identical to the same
+    Elements are read as float64 BEFORE arithmetic (``_f64``), exactly
+    like ``as_double``. Assignments are therefore bit-identical to the same
     distances computed as a JVM fold — pinned by golden digests in
     tests/test_llm_kernels.py at two SFs, plus the oracle rows. (The r11
     Arrow experiment that LOST shipped both 256-byte vectors per
@@ -823,7 +819,7 @@ def _query_tables(ids, vecs, cents, pq, n_probe):
 
     * ``probes`` maps each coarse list to the ascending indices of the
       queries that probe it — each query's ``n_probe`` nearest lists by
-      ``_nearest_ids`` over the float32-cast vector, as the corpus
+      ``_nearest_ids`` over the fp64 vector, as the corpus
       assignment. With ``cents`` None every query probes list 0.
     * ``dtab[q, j, c]`` is the ADC table: the squared-L2 fold of query
       slice j (fp64) against codeword c (``_sq_dists``), rounded like
@@ -842,10 +838,7 @@ def _query_tables(ids, vecs, cents, pq, n_probe):
         nearest = np.zeros((n, 1), np.int64)
     else:
         C = np.asarray(cents, dtype=np.float64)
-        nearest = _nearest_ids(
-            X.astype(np.float32).astype(np.float64), C, _cent_norms(C),
-            n_probe,
-        )[0]
+        nearest = _nearest_ids(X, C, _cent_norms(C), n_probe)[0]
     probes: dict[int, np.ndarray] = {}
     for q, lists in enumerate(nearest.tolist()):
         for lst in lists:

@@ -47,6 +47,7 @@ import json
 import os
 import re
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -1626,6 +1627,13 @@ class SnapshotTable:
             fields.setdefault(ROW_ID_COL, "bigint")
         return fields
 
+    @classmethod
+    def _reader_ddl(cls, m: dict) -> str | None:
+        """``_reader_types`` as a DDL reader schema; None = no widening
+        banked (readers take the mergeSchema footer union)."""
+        fields = cls._reader_types(m)
+        return fields and ", ".join(f"`{n}` {t}" for n, t in fields.items())
+
     def _scan(
         self,
         files: list[str],
@@ -1634,18 +1642,21 @@ class SnapshotTable:
         provenance: bool = False,
         row_ids: str | None = None,
         smap=_UNSET,
+        reader: StructType | str | None = None,
     ) -> DataFrame:
         """THE read of a snapshot's data files: every path that turns
         manifest files into rows comes through here, so these decisions
         are made once.
 
-        * Reader: the explicit banked reader schema (``_reader_types``)
-          when the manifest banks widened types — a mergeSchema footer
-          union CRASHES on mixed-width files, an explicit wider schema
+        * Reader: ``reader`` when given (the change feed fixes one per
+          call, so its legs read without further footer jobs), else the
+          explicit banked reader schema (``_reader_ddl``) when the
+          manifest banks widened types — a mergeSchema footer union
+          CRASHES on mixed-width files, an explicit wider schema
           upcasts them at scan time, which is the whole type-widening
           mechanism — else a mergeSchema union (additive evolution:
           older files surface newer columns as NULL). Zero ``files``
-          under a banked schema is a typed empty frame.
+          under an explicit schema is a typed empty frame.
         * Provenance: each row's ``__dv_file`` (plain path) and
           ``__dv_pos`` (``_metadata.row_index``) — free metadata
           columns, the same pair every tombstone sidecar stores.
@@ -1661,10 +1672,9 @@ class SnapshotTable:
         * Field-id projection through ``smap`` (default: ``m``'s own
           map; the change feed reads old files through the newer map,
           preserving rewrites pass None to keep physical names)."""
-        fields = self._reader_types(m)
-        if fields:
-            ddl = ", ".join(f"`{n}` {t}" for n, t in fields.items())
-            df = self.spark.read.schema(ddl).parquet(*files)
+        reader = reader or self._reader_ddl(m)
+        if reader:
+            df = self.spark.read.schema(reader).parquet(*files)
         else:
             df = self.spark.read.option("mergeSchema", "true").parquet(
                 *files
@@ -3334,36 +3344,60 @@ class SnapshotTable:
           post-image), exactly as Delta CDF reports rewrites without a
           change log.
 
+        Mechanism: one signed count computes both EXCEPT ALLs (the plan
+        Spark's own EXCEPT ALL rewrite builds, once instead of twice).
+        Added-file rows count +1 (masked by the to-version's deletion
+        vectors), removed-file rows -1 (masked by the from-version's);
+        one aggregate groups the union by every column, and a group
+        whose net count n is non-zero surfaces |n| times, as an
+        ``insert`` when n > 0 and a ``delete`` when n < 0. Each churned
+        file is scanned once, and one shuffle does the netting.
+
         Columns are aligned to the ``to_version`` schema (additive
         evolution: pre-evolution rows surface new columns as NULL; a
         rename maps both eras onto the current name via the field-id
-        map). Deletion-vector commits are file-identity-preserving, so
-        they surface through a THIRD leg: for files shared by both
-        manifests, positions tombstoned in between are read back
-        (O(affected files)) and reported as deletes.
+        map): every scan of the call reads under the one reader schema
+        ``_change_span`` fixes. Deletion-vector commits are
+        file-identity-preserving, so they surface through the DV legs,
+        outside the netting: for files shared by both manifests,
+        positions tombstoned in between are read back (O(affected
+        files)) and reported as deletes, and positions visible again
+        as inserts.
         """
-        ma, mb, schema, empty = self._change_span(from_version, to_version)
+        ma, mb, reader, empty = self._change_span(from_version, to_version)
         if empty is not None:
             return empty
         a, b = set(ma["files"]), set(mb["files"])
 
-        def side(files: list[str], mside: dict) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self._align(
-                self._scan(files, mside, smap=mb["schema"]), schema
+        def scan(files: list[str], m: dict, **kw) -> DataFrame:
+            return self._scan(
+                files, m, smap=mb["schema"], reader=reader, **kw
             )
 
-        new_rows = side(sorted(b - a), mb)
-        old_rows = side(sorted(a - b), ma)
-        changes = (
-            new_rows.exceptAll(old_rows)
-            .withColumn("_change_type", F.lit("insert"))
-            .unionAll(
-                old_rows.exceptAll(new_rows)
-                .withColumn("_change_type", F.lit("delete"))
+        legs = [
+            scan(sorted(files), m).withColumn("__cdf_n", F.lit(sign))
+            for files, m, sign in ((b - a, mb, 1), (a - b, ma, -1))
+            if files
+        ]
+        changes: list[DataFrame] = []
+        if legs:
+            signed = reduce(DataFrame.unionAll, legs)
+            cols = signed.columns[:-1]
+            n = F.col("__cdf_n")
+            changes.append(
+                signed.groupBy(*cols)
+                .agg(F.sum(n).alias("__cdf_n"))
+                .filter(n != 0)
+                .withColumn(  # |n| copies of the group's row
+                    "__cdf_n",
+                    F.explode(F.array_repeat(n, F.abs(n).cast("int"))),
+                )
+                .select(
+                    *cols,
+                    F.when(n > 0, "insert").otherwise("delete")
+                    .alias("_change_type"),
+                )
             )
-        )
         # the DV legs, one per direction: shared files whose tombstone
         # set GREW report the newly tombstoned positions as deletes; a
         # set that SHRANK (RESTORE to a pre-delete version keeps the
@@ -3388,29 +3422,31 @@ class SnapshotTable:
                     self._dv_rows(still), ["__dv_file", "__dv_pos"],
                     "left_anti",
                 )
-            rows = self._scan(files, mb, mask=False, provenance=True).join(
+            rows = scan(files, mb, mask=False, provenance=True).join(
                 hit, ["__dv_file", "__dv_pos"], "left_semi"
             )
-            changes = changes.unionAll(
-                self._align(rows, schema).withColumn(
+            changes.append(
+                rows.drop("__dv_file", "__dv_pos").withColumn(
                     "_change_type", F.lit(kind)
                 )
             )
-        return changes
+        return reduce(DataFrame.unionAll, changes)
 
     def _change_span(
         self, from_version: int, to_version: int
-    ) -> tuple[dict, dict, StructType | None, DataFrame | None]:
+    ) -> tuple[dict, dict, StructType | str | None, DataFrame | None]:
         """The prologue both change feeds share: the two manifests, and
-        either the schema every returned row aligns to or — when no file
-        was touched — the empty result. Touched = added, removed, or
-        shared with a changed deletion-vector set. The schema is the
-        to-version's reader and field-id projection over the touched
-        files only (one footer union over O(churn) files; deriving it
+        either the reader schema every scan of the call uses or — when
+        no file was touched — the empty result. Touched = added,
+        removed, or shared with a changed deletion-vector set. The
+        reader is the to-version's banked reader schema when it banks
+        types, else the mergeSchema footer union over the touched files
+        only: the call's one footer job, O(churn) files (deriving it
         from the full to-version snapshot would cost O(table) footer
         reads per poll). Rows come exclusively from touched files, so a
         column that exists only in untouched files cannot appear in a
-        change."""
+        change, and every leg read under this reader projects through
+        the to-version's field-id map onto the same columns."""
         ma = (
             load_manifest(self.root, from_version)
             if from_version > 0
@@ -3427,7 +3463,11 @@ class SnapshotTable:
             }
         )
         if touched:
-            return ma, mb, self._scan(touched, mb, mask=False).schema, None
+            reader = self._reader_ddl(mb) or (
+                self.spark.read.option("mergeSchema", "true")
+                .parquet(*touched).schema
+            )
+            return ma, mb, reader, None
         template = sorted(b) or sorted(a)
         if not template:  # both versions empty: no rows, no columns
             return ma, mb, None, self.spark.createDataFrame(
@@ -3435,21 +3475,6 @@ class SnapshotTable:
             )
         empty = self._scan(template[:1], mb, mask=False).limit(0)
         return ma, mb, None, empty.withColumn("_change_type", F.lit("insert"))
-
-    @staticmethod
-    def _align(df: DataFrame, schema: StructType, *extra: str) -> DataFrame:
-        """``df`` projected onto ``schema`` by name (columns it lacks
-        surface as typed NULLs), ``extra`` columns after them."""
-        return df.select(
-            *[
-                (
-                    df[f.name] if f.name in df.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in schema.fields
-            ],
-            *extra,
-        )
 
     def optimize_small_files(
         self,
@@ -3725,15 +3750,17 @@ class SnapshotTable:
 
         Cost model identical to ``read_changes``: only churned files
         scan (added/removed between the versions, plus shared files
-        whose deletion-vector set changed), so the pairing join is
-        O(churn) keyed by a scalar id — rows a compaction carried
-        forward match themselves with equal values and cancel.
+        whose deletion-vector set changed), both sides under the call's
+        one reader schema, and ONE aggregate keyed by the scalar id
+        pairs each id's from-image with its to-image, O(churn) — rows a
+        compaction carried forward match themselves with equal values
+        and cancel.
 
         Change types: ``insert`` (id only at ``to``), ``delete`` (id
         only at ``from``), ``update_preimage``/``update_postimage``
         (id on both sides with different values — one output row
         each, the pre-image carrying the FROM values)."""
-        ma, mb, schema, empty = self._change_span(from_version, to_version)
+        ma, mb, reader, empty = self._change_span(from_version, to_version)
         if not mb.get("row_tracking") or (
             from_version > 0 and not ma.get("row_tracking")
         ):
@@ -3751,57 +3778,42 @@ class SnapshotTable:
             for f in a & b
             if set(ma["dv"].get(f, [])) != set(mb["dv"].get(f, []))
         )
-        old_files = sorted(a - b) + dv_changed
-        new_files = sorted(b - a) + dv_changed
-        data_cols = [f.name for f in schema.fields]
-
-        def side(files: list[str], mside: dict) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame(
-                    [], schema
-                ).withColumn("_row_id", F.lit(None).cast("long"))
-            return self._align(
-                self._scan(
-                    files, mside, row_ids="_row_id", smap=mb["schema"]
-                ),
-                schema,
-                "_row_id",
-            )
-
-        old = side(old_files, ma)
-        new = side(new_files, mb)
-        o = old.select(
-            F.col("_row_id").alias("__id"),
-            F.struct(*data_cols).alias("__old"),
-        )
-        n = new.select(
-            F.col("_row_id").alias("__id"),
-            F.struct(*data_cols).alias("__new"),
-        )
-        j = o.join(n, "__id", "full_outer")
-        pick = lambda s: [  # noqa: E731
-            F.col(f"{s}.{c}").alias(c) for c in data_cols
+        # both sides read under the call's one reader (a side with no
+        # files is a typed empty scan)
+        both = reduce(DataFrame.unionAll, [
+            self._scan(
+                sorted(files) + dv_changed, m, row_ids="_row_id",
+                smap=mb["schema"], reader=reader,
+            ).withColumn("__side", F.lit(side))
+            for files, m, side in ((a - b, ma, "old"), (b - a, mb, "new"))
+        ])
+        data_cols = [c for c in both.columns if c not in ("_row_id", "__side")]
+        # one aggregate on the permanent id pairs the from-image with the
+        # to-image (an id has at most one row per side)
+        images = [
+            F.first(
+                F.when(F.col("__side") == side, F.struct(*data_cols)),
+                ignorenulls=True,
+            ).alias(side)
+            for side in ("old", "new")
         ]
-        inserts = j.filter(F.col("__old").isNull()).select(
-            *pick("__new"), F.lit("insert").alias("_change_type")
+        o, n = F.col("old"), F.col("new")
+        upd = o.isNotNull() & n.isNotNull() & ~o.eqNullSafe(n)
+        emit = F.explode(F.array(
+            F.struct(n.alias("v"), F.when(o.isNull(), "insert")
+                     .when(upd, "update_postimage").alias("t")),
+            F.struct(o.alias("v"), F.when(n.isNull(), "delete")
+                     .when(upd, "update_preimage").alias("t")),
+        ))
+        return (
+            both.groupBy("_row_id").agg(*images)
+            .select(emit.alias("c"))
+            .filter(F.col("c.t").isNotNull())
+            .select(
+                *[F.col(f"c.v.{c}").alias(c) for c in data_cols],
+                F.col("c.t").alias("_change_type"),
+            )
         )
-        deletes = j.filter(F.col("__new").isNull()).select(
-            *pick("__old"), F.lit("delete").alias("_change_type")
-        )
-        updated = j.filter(
-            F.col("__old").isNotNull()
-            & F.col("__new").isNotNull()
-            & ~F.col("__old").eqNullSafe(F.col("__new"))
-        )
-        pre = updated.select(
-            *pick("__old"),
-            F.lit("update_preimage").alias("_change_type"),
-        )
-        post = updated.select(
-            *pick("__new"),
-            F.lit("update_postimage").alias("_change_type"),
-        )
-        return inserts.unionAll(deletes).unionAll(pre).unionAll(post)
 
     def read_change_feed(
         self, from_version: int, to_version: int | None = None
@@ -3818,10 +3830,14 @@ class SnapshotTable:
         NULL in earlier commits' rows)."""
         if to_version is None:
             to_version = self.current_version()
-        out: DataFrame | None = None
+        if to_version <= from_version:
+            raise ValueError(
+                f"empty version range ({from_version}, {to_version}]"
+            )
+        legs = []
         for v in range(from_version + 1, to_version + 1):
             ts = load_manifest(self.root, v).get("ts")
-            ch = self.read_changes(v - 1, v).withColumns(
+            legs.append(self.read_changes(v - 1, v).withColumns(
                 {
                     "_commit_version": F.lit(v).cast("long"),
                     "_commit_timestamp": (
@@ -3830,17 +3846,10 @@ class SnapshotTable:
                         else F.lit(None).cast("timestamp")
                     ),
                 }
-            )
-            out = (
-                ch
-                if out is None
-                else out.unionByName(ch, allowMissingColumns=True)
-            )
-        if out is None:
-            raise ValueError(
-                f"empty version range ({from_version}, {to_version}]"
-            )
-        return out
+            ))
+        return reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=True), legs
+        )
 
     def changes_since(
         self, cursor: int

@@ -10,6 +10,8 @@ sees it.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+import json
 import math
 
 import pandas as pd
@@ -34,6 +36,15 @@ def canon_cell(v):
     if hasattr(v, "tolist"):  # numpy scalars / arrays
         return canon_cell(v.tolist())
     return ("s", str(v))
+
+
+def digest(rows) -> str:
+    """sha256 of the canonical JSON of the sorted rows (``json.dumps``
+    writes floats with ``repr``, so every double is pinned to the last
+    bit). The golden pins of the LLM kernels and the change feed share
+    it."""
+    canon = json.dumps(sorted(rows), separators=(",", ":"))
+    return hashlib.sha256(canon.encode()).hexdigest()
 
 
 def canon_rows(df: pd.DataFrame) -> list[tuple]:

@@ -29,8 +29,6 @@ pair scorer below is one), then update ``GOLDEN``.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
 from functools import cached_property
 from types import SimpleNamespace
@@ -43,6 +41,8 @@ from pyspark.sql import functions as F
 from s3_glue_redshift_guide_spark.catalog import load_table
 from s3_glue_redshift_guide_spark.llm import dedup as D
 from s3_glue_redshift_guide_spark.llm import similarity as S
+
+from .parity import digest
 
 SF = "/root/testdata/sf0.01"
 
@@ -84,11 +84,6 @@ GOLDEN = {
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _digest(rows) -> str:
-    canon = json.dumps(sorted(rows), separators=(",", ":"))
-    return hashlib.sha256(canon.encode()).hexdigest()
 
 
 def _json_rows(df) -> list[list]:
@@ -223,7 +218,7 @@ def kernel_outputs(spark):
 )
 def test_kernel_output_matches_golden_digest(kernel_outputs, sf, name):
     rows = getattr(kernel_outputs(sf), name)()
-    assert _digest(rows) == GOLDEN[sf][name]
+    assert digest(rows) == GOLDEN[sf][name]
 
 
 def _emb(spark):
@@ -366,6 +361,34 @@ def test_adc_scan_kernel_keeps_exact_per_query_top_n():
             assert sorted(zip(mine.adc, mine.neighbor_id)) == rows
         assert 5 not in set(got.query_id)  # its only list is absent
         assert len(got) == 5 * n_keep
+
+
+def test_f64_keeps_double_vectors():
+    """``_f64`` reads vector elements as fp64: doubles keep every bit and
+    float32 values widen exactly (so ``array<float>`` outputs, and every
+    ``GOLDEN`` digest, are unchanged)."""
+    got = S._f64(pd.Series([[0.1, 1 / 3], [-0.0, 2.5]]))
+    assert got.dtype == np.float64
+    assert got.tolist() == [[0.1, 1 / 3], [-0.0, 2.5]]
+    f32 = np.array([0.1, 1 / 3], dtype=np.float32)
+    assert S._f64(pd.Series([f32])).tolist() == [
+        f32.astype(np.float64).tolist()
+    ]
+
+
+def test_double_corpus_assigns_at_full_precision(spark):
+    """On an ``array<double>`` corpus the coarse assignment scores the
+    doubles, as the JVM fold's ``as_double`` does: [1, 1 + 1e-12] is
+    nearer centroid [0, 1] than [1, 0]. Truncated to float32 the two tie
+    and the tie goes to list 0."""
+    vecs = [(0, [1.0, 1.0 + 1e-12]), (1, [1.0 + 1e-12, 1.0])]
+    df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
+    got = S._nearest_lists(
+        df, [[1.0, 0.0], [0.0, 1.0]], "embedding", ("vec_id", "id"), "v", 1
+    )
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, vecs[0][1], 1), (1, vecs[1][1], 0)
+    ]
 
 
 def test_semantic_dedup_kernel_matches_expression_reference(spark):

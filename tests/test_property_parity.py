@@ -84,16 +84,25 @@ def test_random_filters_match_duckdb(spark, duck, pred, group):
 # --------------------------- snapshot change-feed algebra ----------------
 @st.composite
 def commit_scripts(draw):
-    """A random commit history: each step appends a key slice, deletes by
-    predicate (surgical replace of every file), or compacts."""
-    steps = [("append", 0, draw(st.integers(20, 80)))]
+    """A random commit history: an append and a deletion-vector delete,
+    then steps that append a key slice, delete by predicate (surgical
+    replace of every file, or a deletion vector), compact, or restore an
+    earlier version (a restore past a DV delete shrinks the DV set)."""
+    steps = [
+        ("append", 0, draw(st.integers(20, 80))),
+        ("dv_delete", draw(st.integers(2, 7)), 0),
+    ]
     for _ in range(draw(st.integers(1, 3))):
-        kind = draw(st.sampled_from(["append", "delete", "rewrite"]))
+        kind = draw(st.sampled_from(
+            ["append", "delete", "rewrite", "dv_delete", "restore"]
+        ))
         if kind == "append":
             lo = draw(st.integers(0, 200))
             steps.append(("append", lo, lo + draw(st.integers(10, 60))))
-        elif kind == "delete":
-            steps.append(("delete", draw(st.integers(2, 7)), 0))
+        elif kind in ("delete", "dv_delete"):
+            steps.append((kind, draw(st.integers(2, 7)), 0))
+        elif kind == "restore":
+            steps.append(("restore", draw(st.integers(1, 3)), 0))
         else:
             steps.append(("rewrite", 0, 0))
     return steps
@@ -108,7 +117,9 @@ def commit_scripts(draw):
 def test_change_feed_reconstructs_any_version_pair(spark, script, data):
     """CDF algebra: for ANY two versions a < b of ANY commit history,
     read(a) + inserts(a,b) - deletes(a,b) == read(b) as multisets — the
-    invariant that makes a downstream incremental consumer exact."""
+    invariant that makes a downstream incremental consumer exact. The
+    histories hold deletion-vector deletes and restores, so the DV legs
+    run under the call's shared reader too."""
     import collections
     import tempfile
 
@@ -127,6 +138,10 @@ def test_change_feed_reconstructs_any_version_pair(spark, script, data):
                 files,
                 t.read().filter(F.col("o_orderkey") % x != 0).coalesce(1),
             )
+        elif kind == "dv_delete":
+            t.delete_where(F.col("o_orderkey") % x == 1)
+        elif kind == "restore":  # x versions back, never before v1
+            t.restore(max(1, t.current_version() - x))
         else:
             t.commit_rewrite(t.read().coalesce(1))
     head = t.current_version()

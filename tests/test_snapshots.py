@@ -3,14 +3,17 @@ O(new files), and a rewrite never disturbs historical readers."""
 
 from __future__ import annotations
 
+import itertools
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from s3_glue_redshift_guide_spark.catalog import load_table
 from s3_glue_redshift_guide_spark.sources.snapshots import SnapshotTable
 
 from .conftest import SF_SMOKE
+from .parity import canon_cell, digest
 
 
 def test_time_travel_and_isolation_across_rewrite(spark):
@@ -204,7 +207,8 @@ def test_change_feed_reads_only_churned_files(spark):
         chg.filter(F.col("_change_type") == "insert").count()
         == o.filter(F.col("o_orderkey").between(100, 199)).count()
     )
-    # compaction rewrite: zero changes (rows cancel via EXCEPT ALL)
+    # compaction rewrite: zero changes (each row's signed counts net
+    # to zero)
     t.commit_rewrite(t.read(2).coalesce(1))
     assert t.read_changes(2, 3).count() == 0
     # update = delete/insert pair, and the untouched file is not scanned:
@@ -721,3 +725,338 @@ def test_vacuum_orphan_grace_protects_inflight_writes(spark):
     deleted = t.vacuum(retain_versions=1, orphan_grace_seconds=0.0)
     assert staged in deleted
     assert not os.path.exists(staged)
+
+
+# ------------------------------------------- frozen change-feed outputs ----
+# One history that holds every commit kind the change feed reads: appends,
+# a DV update, a DV delete, a restore that shrinks the DV set (resurrected
+# rows come back as inserts), a copy-on-write replace that removes a file,
+# a compaction, and additive, renaming and widening schema changes. Rows
+# repeat exactly and carry NULL, NaN and -0.0. The digests below were
+# recorded before the change feed moved from two EXCEPT ALLs and a footer
+# union per side onto one footer union and one signed aggregate per call:
+# ``read_changes`` for every version pair, and on a row-tracked copy (whose
+# version 1 enables tracking) the per-commit ``read_changes``,
+# ``read_changes_images`` per commit and from version 0, and
+# ``read_change_feed`` per commit plus one range across the rename.
+CDF_DIGESTS = {
+    "read_changes": {
+        "0-1": "0605d3f35960b207b643aa22a6eed3c2c28d3d3dc934c1ba511233f6921812d9",
+        "0-2": "5406e39bf3e53c1c5b639e822b81225b475fcd1e69815daea53cecc46cb02321",
+        "0-3": "3eb725dd057fda4babd8206208c694586b272b645db62abe58860be7ea5684d5",
+        "0-4": "3dcb028ec038099790a2ed8d76e96cbe40a835dcb0aaf0ef24882033d21ac164",
+        "0-5": "3eb725dd057fda4babd8206208c694586b272b645db62abe58860be7ea5684d5",
+        "0-6": "637b54f4644af01d88118583472c4516bfdd19016d1eb920f3242d11ffc7b46a",
+        "0-7": "637b54f4644af01d88118583472c4516bfdd19016d1eb920f3242d11ffc7b46a",
+        "0-8": "e94854d9b54781ceea324f0112c954cf52c12bfa566a228c086925a1762fdd25",
+        "0-9": "8c59fe9ec715829a225b78e3d225bba80a4f93266a03aae6a2fb5830295fd5e0",
+        "0-10": "b7bec193c328722e8a5bebf81b2a9d89506fdec30ccd6d4eeff6ce096fa00992",
+        "0-11": "2e98e5f4260df21b54f90c03c2613632ac8cb18610d3a3372b7654fbd84fc237",
+        "0-12": "ee732d9946f498d4d69fb4d8256454ed12e8fea86f031e12a5f5723354b67fbe",
+        "1-1": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "1-2": "e832500768450fd72feac81b169e4453be6b488f6042a597554f115bf383f14f",
+        "1-3": "4b7c69acb6f155e844063999a0e2719d0e989deaee21fc2c46955f2a7e464ae4",
+        "1-4": "2d0b1e5a7b8ba250fa00d8d00e32f99f9b1d120da0a82ad6d04b06ac91fb5703",
+        "1-5": "4b7c69acb6f155e844063999a0e2719d0e989deaee21fc2c46955f2a7e464ae4",
+        "1-6": "8c6c63593133fba78a5bf908a03ced51dec1ab4d4cc9f386c8067594b8c49e2f",
+        "1-7": "8c6c63593133fba78a5bf908a03ced51dec1ab4d4cc9f386c8067594b8c49e2f",
+        "1-8": "9b2b015fd6d4e2892e07e741cb1b31b0d113678f32432b3677bc913aded59da4",
+        "1-9": "455209fda7809b08481575918618a5e78ef6b9b04f566b54eadf8044076a86f3",
+        "1-10": "b684e0f29075d3c28f675bcbcac808d51ba287a7d660ab94a61f06e2606d0706",
+        "1-11": "e1edf27c6892b0a07e8b51329a042673c6295f7f2c32cf21e4e146d3362edaac",
+        "1-12": "14cbaa0cba67863cbced074295f1f8a709fdb1d7c77ab1ee614a94a559ddd188",
+        "2-2": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "2-3": "fa5738fa1b9c86b254b2b77b6b481e5bcc4ce110e9e83c7f1582c070449bde91",
+        "2-4": "74942b55f56f6e754af5286409f06e8478229a20a23a0126ecf9e891cb3400aa",
+        "2-5": "fa5738fa1b9c86b254b2b77b6b481e5bcc4ce110e9e83c7f1582c070449bde91",
+        "2-6": "b5f49a31b83e11f4c2c5ad05392c964fd29e13d4d63730acacf05f04075389e7",
+        "2-7": "b5f49a31b83e11f4c2c5ad05392c964fd29e13d4d63730acacf05f04075389e7",
+        "2-8": "e9d0a7a2e2ee4f6039e2abbae183f69c920ea7746640401dc4a7bcd7bde50f93",
+        "2-9": "fcbb1cee6fa460c0045f63b55b5a901e59c0b54a006333085560d0fa4866bcbb",
+        "2-10": "7c6d0328aedc2b2f415dfe7291cbf639c5d8e2b9e092c4ce10c1a6d829998355",
+        "2-11": "1a0e11c4999e1ec7dbc1e6b30a0bca55ea9a060fc54c598487f322907f42e9d0",
+        "2-12": "f1c33f2778b923d63626de1a446c5bc362ddc0e34335bb23b5534dbde91ee279",
+        "3-3": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "3-4": "3ab394c68c3fbd930b72d3bd603cb78ecb13a196459c7c6b986dc24394b82ace",
+        "3-5": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "3-6": "89fe74a229842081ebff1ee48853b29618c3272a3130b105561545cfcac0bd6d",
+        "3-7": "89fe74a229842081ebff1ee48853b29618c3272a3130b105561545cfcac0bd6d",
+        "3-8": "ddc33901fb9c5fa85d4c894f87f7c56254378115f5f5c119ab41bd015e730182",
+        "3-9": "0c7917b86f8393606b62beb32e9ce458813a7d03ab6e230eb45e1f06d0bc954c",
+        "3-10": "6a62740c9065dd23f5437a3d0365127541115f7c0ec760f9e54ff68dfedd2343",
+        "3-11": "63ae0ab05193f97ccd4ae826eb5582c2270a320a239d08340df50762fe8f6a8b",
+        "3-12": "65343d7f470dc60a3b78734bcff12ce3c06216da9488c194223bc30f556a093a",
+        "4-4": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "4-5": "e42e45f7b634791a9b52bf9c879b8ee3ec7fd80fba7ab505623319d167d82cb7",
+        "4-6": "06f6b409b630f036695631c7534657dd69c11f4490701ccaa44a02b2e5afdaeb",
+        "4-7": "06f6b409b630f036695631c7534657dd69c11f4490701ccaa44a02b2e5afdaeb",
+        "4-8": "308e781c1f46b74d6ae6bf14d36bdfa32a33b4d6461ce416e91ad9caab35d27d",
+        "4-9": "cf09e58c890b6bdc64c21b9f7c8d70e70a7e3e7823d2e83e64b4c36f35eb2f31",
+        "4-10": "70c0a2b7f25f85b80c9605c3ccdb99039e61af4c9cf98f5126e8b57a14f7019d",
+        "4-11": "a49eeb56eed083b964513745fc2f7ed335ebad74e6486926292d8f576fc96646",
+        "4-12": "8d1fe15509a0220be87a5473e8149af76b55c083a38ea0fa538edcca8b6b4224",
+        "5-5": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "5-6": "89fe74a229842081ebff1ee48853b29618c3272a3130b105561545cfcac0bd6d",
+        "5-7": "89fe74a229842081ebff1ee48853b29618c3272a3130b105561545cfcac0bd6d",
+        "5-8": "ddc33901fb9c5fa85d4c894f87f7c56254378115f5f5c119ab41bd015e730182",
+        "5-9": "0c7917b86f8393606b62beb32e9ce458813a7d03ab6e230eb45e1f06d0bc954c",
+        "5-10": "6a62740c9065dd23f5437a3d0365127541115f7c0ec760f9e54ff68dfedd2343",
+        "5-11": "63ae0ab05193f97ccd4ae826eb5582c2270a320a239d08340df50762fe8f6a8b",
+        "5-12": "65343d7f470dc60a3b78734bcff12ce3c06216da9488c194223bc30f556a093a",
+        "6-6": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "6-7": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "6-8": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "6-9": "58c328c77a5d17af1f7751dd3affc6cb7e6a0e01f9177fe06cbdbc905c82a54a",
+        "6-10": "03cec28397987138d672e2638447a176a91ffaff316270e9302425cf068539b9",
+        "6-11": "b5987cb8135446f5ad0614b9943755c1839bc1c7825e2903fb15a245aabe4c83",
+        "6-12": "87d22c4d30732c0bf7fef04dd9b154a618e1d48601d665b310ac7d234129f543",
+        "7-7": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "7-8": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "7-9": "58c328c77a5d17af1f7751dd3affc6cb7e6a0e01f9177fe06cbdbc905c82a54a",
+        "7-10": "03cec28397987138d672e2638447a176a91ffaff316270e9302425cf068539b9",
+        "7-11": "b5987cb8135446f5ad0614b9943755c1839bc1c7825e2903fb15a245aabe4c83",
+        "7-12": "87d22c4d30732c0bf7fef04dd9b154a618e1d48601d665b310ac7d234129f543",
+        "8-8": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "8-9": "58c328c77a5d17af1f7751dd3affc6cb7e6a0e01f9177fe06cbdbc905c82a54a",
+        "8-10": "03cec28397987138d672e2638447a176a91ffaff316270e9302425cf068539b9",
+        "8-11": "b5987cb8135446f5ad0614b9943755c1839bc1c7825e2903fb15a245aabe4c83",
+        "8-12": "87d22c4d30732c0bf7fef04dd9b154a618e1d48601d665b310ac7d234129f543",
+        "9-9": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "9-10": "b306c15c44bb34f26d315e1dec21f7ff6ed5fb3e03f86655d851f456e6a907d7",
+        "9-11": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+        "9-12": "ac1dcdce814f826ed5b6f16ff0945a4d15bb73554822aa286b4bdc3b3b18f603",
+        "10-10": "b306c15c44bb34f26d315e1dec21f7ff6ed5fb3e03f86655d851f456e6a907d7",
+        "10-11": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+        "10-12": "ac1dcdce814f826ed5b6f16ff0945a4d15bb73554822aa286b4bdc3b3b18f603",
+        "11-11": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+        "11-12": "ac1dcdce814f826ed5b6f16ff0945a4d15bb73554822aa286b4bdc3b3b18f603",
+        "12-12": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+    },
+    "tracked_read_changes": {
+        "0-1": "401bc4d3ce7a6d330bc8d179b03e1e3bfc0939dfe38533f1c959716ff877bfdb",
+        "1-2": "0605d3f35960b207b643aa22a6eed3c2c28d3d3dc934c1ba511233f6921812d9",
+        "2-3": "e832500768450fd72feac81b169e4453be6b488f6042a597554f115bf383f14f",
+        "3-4": "fa5738fa1b9c86b254b2b77b6b481e5bcc4ce110e9e83c7f1582c070449bde91",
+        "4-5": "3ab394c68c3fbd930b72d3bd603cb78ecb13a196459c7c6b986dc24394b82ace",
+        "5-6": "e42e45f7b634791a9b52bf9c879b8ee3ec7fd80fba7ab505623319d167d82cb7",
+        "6-7": "89fe74a229842081ebff1ee48853b29618c3272a3130b105561545cfcac0bd6d",
+        "7-8": "e9ef3bfbab02ffd9aee9e9c6c428f3d54519beff5d6b431602c9c83c0ed75055",
+        "8-9": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "9-10": "58c328c77a5d17af1f7751dd3affc6cb7e6a0e01f9177fe06cbdbc905c82a54a",
+        "10-11": "b306c15c44bb34f26d315e1dec21f7ff6ed5fb3e03f86655d851f456e6a907d7",
+        "11-12": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+        "12-13": "ac1dcdce814f826ed5b6f16ff0945a4d15bb73554822aa286b4bdc3b3b18f603",
+    },
+    "read_changes_images": {
+        "0-1": "401bc4d3ce7a6d330bc8d179b03e1e3bfc0939dfe38533f1c959716ff877bfdb",
+        "0-2": "7c52d7ac70c0fadce28a21ff490660807e0aadcf6a4bcbcd5e6467abc64e796d",
+        "0-3": "a797eaa33cec45eb452aacd543ed6d26714d0a805f89add4131634f9a03e4653",
+        "0-4": "b87d84fd7283f06c4bbee03d31b986a3d4e8dd18dbc142e61fec572c2dbd00a0",
+        "0-5": "542ef36792ec7b6d2d88ddbd979e9a18485e1ae6ac5eba8d96616ea010c1440a",
+        "0-6": "b87d84fd7283f06c4bbee03d31b986a3d4e8dd18dbc142e61fec572c2dbd00a0",
+        "0-7": "3604c94228337506ca0b767c2c57453f38c7a65ae65b9a5f352eaa66600309b6",
+        "0-8": "3604c94228337506ca0b767c2c57453f38c7a65ae65b9a5f352eaa66600309b6",
+        "0-9": "1666a016ebe66f25953852bcb532eeed3136993860e48ab7bd10438a1ea6d55f",
+        "0-10": "7fb367a7515d3c413121ecd2f3c1d609fd2f00234375750188198262e4679f53",
+        "0-11": "027e0570eee42956dc05316098bfbaef84633bfbc4391bc14bd24b01004cfa87",
+        "0-12": "aa6d966b0bcb8475299a8c15c838425483903b12044ebbbbc5589d34004e90ed",
+        "0-13": "de797539299c18c6ceaee20e2dd3e9ce02cc43e123407e931277afd0f7cde8b1",
+        "1-2": "7c52d7ac70c0fadce28a21ff490660807e0aadcf6a4bcbcd5e6467abc64e796d",
+        "2-3": "79b7e94bab628ea6e2176ca38298e76c9452b8836b0807447b96bed788593e7c",
+        "3-4": "33f2579d10d7916f29c3c06937b4b5e7e475dae7384d714fc5450d540e5d7b3b",
+        "4-5": "3ab394c68c3fbd930b72d3bd603cb78ecb13a196459c7c6b986dc24394b82ace",
+        "5-6": "e42e45f7b634791a9b52bf9c879b8ee3ec7fd80fba7ab505623319d167d82cb7",
+        "6-7": "86422e57c2f1ab4a507a40a8c31e8f08ac65b0e473cd05c61d5d41bbcf17f79c",
+        "7-8": "62695cf625bdbeda3c6839f5ece42e147987e1209d7db6847dc9d20149722c8e",
+        "8-9": "448c51a25452f0ab28f876e01a53a6f9deed609d81d36bcac6c55800397d6fb2",
+        "9-10": "58c328c77a5d17af1f7751dd3affc6cb7e6a0e01f9177fe06cbdbc905c82a54a",
+        "10-11": "b306c15c44bb34f26d315e1dec21f7ff6ed5fb3e03f86655d851f456e6a907d7",
+        "11-12": "3ece2b38fb4c9cb15a6eb6f200c6267dd97b7b6e54178ecdc8e25ea343bc0e33",
+        "12-13": "b009b4f6b2c2df3334ee80b555281756fa9b95e5fa1da1ce02a12efddcca0843",
+    },
+    "read_change_feed": {
+        "0-1": "a34eda2839843eee92c93af130545e5e8a4aaac1726119b365e6731c2601d3f5",
+        "1-2": "3bf4c0bcc40dbea8891e8efe212d8b9589056cae278f76072a14241d0167cf0c",
+        "2-3": "3b263b85342936eecb0c8994aa3ac27f1396b2e24b2bb97dcb50107e7f0a8b29",
+        "3-4": "33679991ea80a0a0d46a9d8f99e54fdcdd66c80763696f797371bdb50da595e3",
+        "4-5": "291167f5643d99d9f3fa9bcdb6218799191bd038acba1505403bd8474f2f4ddc",
+        "5-6": "10d9bebc9c065cd90be4d3f7647dcb29f029e51b411f7a5ca4944cb96065be5c",
+        "6-7": "5f11251ea81ba5e05b901878ce0444da06cd62468cd0f3ea681dfef57e4b7726",
+        "7-8": "73219eb5a3ffc68421626c342b5c394665d2df2e92c3e7ccd3a1f62f0adabd4b",
+        "8-9": "e76eaf0593d2703d775ed2dba930a5bf481e5277b6b99e458da0e143690c8f4f",
+        "9-10": "0ee2b75bc02f96da3af8d1bbf5ad166c9c873480f3012e02d11e3afaa580d167",
+        "9-13": "0f6a3a4bb9629f7b16c134e09decf2f296d2e864f27720c0a176ec12adce493a",
+        "10-11": "c684e13def42cf2ebff860b42e20f2518debdf58f792c576503bceb8cd4c6a4d",
+        "11-12": "635737e322a66641e3d93c7cc0d95afb0bf1e1d0a71d08de1fbaf4b42349322e",
+        "12-13": "99d7ac201de183a9eb8b1e63ac44baedc99a2d6d1356f1ec5dc9f985aab7c56b",
+    },
+}
+_CDF_SCHEMA = "k bigint, v double, s string, w int"
+_NAN = float("nan")
+_CDF_A = [
+    (1, 1.0, "a", 1), (1, 1.0, "a", 1), (2, None, "b", 2),
+    (3, _NAN, None, 3), (4, -0.0, "d", 4), (5, 0.0, "e", 5),
+]
+_CDF_B = [
+    (6, 6.5, "f", 6), (6, 6.5, "f", 6), (7, _NAN, "g", 7),
+    (8, -0.0, None, None), (1, 1.0, "a", 1),
+]
+
+
+def _cdf_history(spark, root: str, tracked: bool = False) -> SnapshotTable:
+    # a fixed commit clock keeps ``_commit_timestamp`` reproducible
+    clock = itertools.count(1_700_000_000, 60).__next__
+    t = SnapshotTable(spark, root, clock=clock)
+    if tracked:
+        t.enable_row_tracking()
+    t.commit_append(spark.createDataFrame(_CDF_A, _CDF_SCHEMA).coalesce(1))
+    first = t._load_manifest(t.current_version())
+    t.commit_append(spark.createDataFrame(_CDF_B, _CDF_SCHEMA).coalesce(1))
+    t.update_where(F.col("k") == 6, {"v": F.col("v") + 1})
+    t.delete_where(F.col("k").isin(2, 7))
+    t.restore(t.current_version() - 1)
+    t.commit_replace(
+        first,
+        spark.createDataFrame(
+            [(1, 1.0, "a", 1), (3, _NAN, None, 3), (4, 0.0, "d", 4),
+             (9, -0.0, "i", 9), (9, -0.0, "i", 9)],
+            _CDF_SCHEMA,
+        ).coalesce(1),
+    )
+    t.commit_rewrite(t.read().coalesce(1))
+    t.add_column("x", "string")
+    t.commit_append(
+        spark.createDataFrame(
+            [(10, _NAN, "j", 10, "x1"), (10, _NAN, "j", 10, "x1"),
+             (1, 1.0, "a", 1, None)],
+            _CDF_SCHEMA + ", x string",
+        ).coalesce(1)
+    )
+    t.rename_column("s", "name")
+    t.widen_column("w", "bigint")
+    t.commit_append(
+        spark.createDataFrame(
+            [(11, -0.0, "k", 1 << 40, None), (4, 0.0, "d", 4, None)],
+            "k bigint, v double, name string, w bigint, x string",
+        ).coalesce(1)
+    )
+    return t
+
+
+def _cdf_digest(df) -> str:
+    """Digest of a change frame: its column names and types, then its
+    rows as canonical cells, as a multiset."""
+    rows = [tuple(canon_cell(v) for v in r) for r in df.collect()]
+    return digest(rows + [(("types", df.dtypes),)])
+
+
+@pytest.fixture(scope="module")
+def cdf_plain(spark, tmp_path_factory):
+    return _cdf_history(spark, str(tmp_path_factory.mktemp("cdf_plain")))
+
+
+@pytest.fixture(scope="module")
+def cdf_tracked(spark, tmp_path_factory):
+    return _cdf_history(
+        spark, str(tmp_path_factory.mktemp("cdf_tracked")), tracked=True
+    )
+
+
+def _pairs(call: str) -> list[tuple[int, int]]:
+    return [tuple(map(int, p.split("-"))) for p in CDF_DIGESTS[call]]
+
+
+@pytest.mark.parametrize("a,b", _pairs("read_changes"))
+def test_read_changes_matches_frozen_digest(cdf_plain, a, b):
+    got = _cdf_digest(cdf_plain.read_changes(a, b))
+    assert got == CDF_DIGESTS["read_changes"][f"{a}-{b}"]
+
+
+@pytest.mark.parametrize(
+    "call,a,b",
+    [
+        (call, a, b)
+        for call in CDF_DIGESTS if call != "read_changes"
+        for a, b in _pairs(call)
+    ],
+)
+def test_tracked_change_feeds_match_frozen_digest(cdf_tracked, call, a, b):
+    df = getattr(cdf_tracked, call.removeprefix("tracked_"))(a, b)
+    assert _cdf_digest(df) == CDF_DIGESTS[call][f"{a}-{b}"]
+
+
+def _job_count(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _batch(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7919 % 1_000_003).alias("uid"),
+        (F.col("id") % 50).cast("int").alias("grp"),
+        (F.col("id") * 0.25).alias("val"),
+    )
+
+
+def test_change_feed_call_job_count(spark, tmp_path):
+    """The perfbench ``analytics_read`` history (append, bloom index, DV
+    update, DV delete, append): ``read_changes(1, head)`` runs one footer
+    union, the DV sidecar reads and the signed aggregate's stages, 5 jobs
+    where three footer unions and two EXCEPT ALLs ran 8. Building the
+    frame runs the footer union alone, and nothing once the table banks
+    its reader schema."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit_append(_batch(spark, 0, 600).repartition(2))
+    t.add_bloom_index("uid")
+    t.update_where(F.col("grp") == 7, {"val": F.col("val") + 1})
+    t.delete_where(F.col("grp") == 13)
+    head = t.commit_append(_batch(spark, 600, 900).coalesce(1))
+    group = f"cdf-jobs-{tmp_path.name}"
+    n = _job_count(spark, group, lambda: t.read_changes(1, head).collect())
+    assert n <= 5, n
+    plan = _job_count(spark, f"{group}-plan", lambda: t.read_changes(1, head))
+    assert plan == 1, plan
+    v = t.widen_column("grp", "bigint")
+    plan = _job_count(spark, f"{group}-banked", lambda: t.read_changes(1, v))
+    assert plan == 0, plan
+
+
+def test_change_images_call_job_count(spark, tmp_path):
+    """Both sides of ``read_changes_images`` read under the call's one
+    footer union, and one aggregate on the row id pairs the images: 7
+    jobs, where a footer union per side and a full outer join ran 12."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.enable_row_tracking()
+    t.commit_append(_batch(spark, 0, 600).repartition(2))
+    t.update_where(F.col("grp") == 7, {"val": F.col("val") + 1})
+    t.delete_where(F.col("grp") == 13)
+    head = t.commit_append(_batch(spark, 600, 900).coalesce(1))
+    n = _job_count(
+        spark, f"cdf-img-jobs-{tmp_path.name}",
+        lambda: t.read_changes_images(2, head).collect(),
+    )
+    assert n <= 7, n
+
+
+def test_change_feed_nets_file_legs_in_one_aggregate(spark, tmp_path):
+    """Added and removed files are netted by ONE signed-count aggregate,
+    not by one EXCEPT ALL per direction."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit_append(_batch(spark, 0, 300).coalesce(1))
+    files = t._load_manifest(1)
+    head = t.commit_replace(
+        files, t.read().filter(F.col("grp") != 3).coalesce(1)
+    )
+    plan = t.read_changes(1, head)._jdf.queryExecution().optimizedPlan()
+    aggs = [
+        ln for ln in plan.toString().splitlines()
+        if ln.lstrip(" :+-").startswith("Aggregate")
+    ]
+    assert len(aggs) == 1, plan.toString()
